@@ -17,7 +17,7 @@ Layout
 - ``parsers``     vectorized parse kernels (SQL-expression fast path + pandas-UDF path)
 - ``frontier``    frontier ops: depth filter, dedup, scalable seq assignment
 - ``politeness``  per-host round budgets, robots.txt filtering, two-phase skew rank
-- ``seen``        bloom pre-filter (cuckoo fallback) + exact seen-set ops
+- ``seen``        bloom pre-filter + exact seen-set ops
 - ``engine``      the round driver: run_round / run_crawl / resume
 - ``fetch``       production HTTP fetch seam (fetch_mode='http'): mapInPandas
                   GETs, injectable transport, UA/proxy/Cookie per reference

@@ -79,16 +79,14 @@ class CrawlConfig:
     # or "registered_domain" (one budget per PSL registrable domain —
     # subdomain fan-out can't multiply a site's crawl rate)
     politeness_key: str = "host"
+    # F4 pre-filter: one long-lived IncrementalBloom in front of the
+    # exact anti-join (False = the plain anti-join every round)
     use_bloom: bool = True
     bloom_fpp: float = 0.01
-    # below this seen-set size the bloom build costs more than the exact
-    # anti-join it saves; production target is ~10^8+ per host-bucket
+    # a round probes the bloom only once the seen set has this many rows:
+    # below it the bloom build costs more than the exact anti-join it
+    # saves; production target is ~10^8+ per host-bucket
     bloom_min_seen: int = 1024
-    # seen-set pre-filter backend: None -> 'bloom' if use_bloom else
-    # 'none'.  'cuckoo' = one long-lived incremental filter maintained
-    # across rounds (supports delete-on-failure, crawler.go:180-185)
-    # instead of a per-round bloom rebuild.
-    seen_filter: str | None = None
     # P11: sniff charset (BOM + meta prescan, first 1 KiB) per page and
     # transcode, instead of assuming the corpus is UTF-8
     charset_sniff: bool = False
@@ -133,11 +131,6 @@ class CrawlConfig:
     fetch_timeout_s: float = 10.0
     fetch_proxies: tuple = ()
     fetch_transport: object | None = None
-
-    def filter_kind(self) -> str:
-        if self.seen_filter is not None:
-            return self.seen_filter
-        return "bloom" if self.use_bloom else "none"
 
 
 # ------------------------------------------------------------------ state
@@ -194,185 +187,6 @@ def _reload_col(tasks: dict[str, Task]) -> F.Column:
     for name, t in tasks.items():
         kv += [F.lit(name), F.lit(bool(t.reload))]
     return F.element_at(F.create_map(*kv), F.col("task_name"))
-
-
-class CuckooSeen:
-    """Long-lived incremental seen pre-filter (seen_filter='cuckoo'),
-    sharded by ``pmod(url_hash, n_shards)``.
-
-    Mirrors the reference's mark-before-fetch / un-mark-on-failure
-    protocol (crawler.go:92,180-185): every *scheduled* key is inserted
-    after the round, failed non-reload keys are deleted — so filter
-    membership after each round equals ``SELECT DISTINCT url_hash FROM
-    seen`` exactly, which is also what rebuilds and the resume load read.
-
-    Maintenance is DISTRIBUTED: the round's (key, op) delta is grouped
-    by shard and each shard's filter is updated partition-locally
-    (applyInPandas, mirroring the bloom build at seen.build_bloom); the
-    driver only ever collects the ``n_shards`` fixed-size shard tables,
-    never key lists.  At 10^10 URLs the shard key becomes the Iceberg
-    host-bucket and each executor loads only its buckets' shards — the
-    update job shape here is already that shape.
-
-    Inserts are deduplicated against the filter first: a cuckoo filter
-    holds at most 8 copies of one fingerprint (2 buckets x 4 slots), so
-    re-inserting a reload-task URL every round would overflow after ~9
-    rounds and an unconditional rebuild could then never converge.  A
-    shard that still overflows is rebuilt at doubled capacity from the
-    seen table (distinct keys), with a bounded doubling that fails
-    loudly rather than looping forever.
-
-    Exactness never depends on the filter for false *positives* (the
-    exact anti-join confirms every 'maybe').  Skipping the insert of a
-    key whose fingerprint is already resident can — after a later delete
-    of the colliding key — yield a false negative costing one redundant
-    re-fetch; with 16-bit fingerprints this needs a same-bucket
-    fingerprint collision (~2^-16 per pair per bucket) and is the
-    standard deletable-cuckoo trade.
-    """
-
-    _RESULT_SCHEMA = "shard int, n_buckets long, tbl binary, ok boolean"
-    MAX_REBUILD_DOUBLINGS = 40
-
-    def __init__(self, capacity: int = 1 << 16, n_shards: int = 8):
-        from .seen import Cuckoo
-
-        self.S = n_shards
-        per_shard = max(capacity // n_shards, 1024)
-        self.shards = [Cuckoo.sized(per_shard) for _ in range(n_shards)]
-
-    # ---- probe (runs inside split_by_filter's broadcast pandas UDF)
-    def contains_many(self, keys):
-        import numpy as np
-
-        ks = np.asarray(keys, dtype=np.int64)
-        out = np.zeros(len(ks), dtype=bool)
-        sh = np.mod(ks, np.int64(self.S))  # == F.pmod for a positive divisor
-        for s, filt in enumerate(self.shards):
-            m = sh == s
-            if m.any():
-                out[m] = filt.contains_many(ks[m])
-        return out
-
-    # ---- maintenance
-    def apply_round(self, spark, cat, add_df: DataFrame, del_df: DataFrame,
-                    seen_table: str = "seen") -> None:
-        """One distributed job: adds (scheduled keys) and deletes (failed
-        non-reload keys) partitioned by shard, filters updated
-        executor-side, fixed-size shard tables collected back."""
-        import numpy as np
-
-        from .seen import Cuckoo
-
-        ops = (
-            add_df.select("url_hash").withColumn("op", F.lit(1))
-            .unionByName(del_df.select("url_hash").withColumn("op", F.lit(-1)))
-        )
-        payload = {s: (c.n, c.table.tobytes()) for s, c in enumerate(self.shards)}
-        bc = spark.sparkContext.broadcast(payload)
-
-        def upd(pdf):
-            import numpy as np
-            import pandas as pd
-
-            from crawler_spark.seen import Cuckoo
-
-            s = int(pdf["shard"].iloc[0])
-            n, raw = bc.value[s]
-            filt = Cuckoo.wrap(
-                np.frombuffer(raw, dtype=np.uint16).reshape(n, 4).copy()
-            )
-            adds = np.unique(pdf.loc[pdf["op"] == 1, "url_hash"].to_numpy(np.int64))
-            dels = np.unique(pdf.loc[pdf["op"] == -1, "url_hash"].to_numpy(np.int64))
-            if len(adds):
-                adds = adds[~filt.contains_many(adds)]
-            ok = filt.add_many(adds) == len(adds)
-            if ok and len(dels):
-                # overflow shards skip deletes: they are rebuilt from the
-                # seen table, which never contains the failed keys
-                filt.delete_many(dels)
-            return pd.DataFrame(
-                {"shard": [s], "n_buckets": [filt.n],
-                 "tbl": [filt.table.tobytes()], "ok": [ok]}
-            )
-
-        rows = (
-            ops.withColumn("shard", F.pmod(F.col("url_hash"), F.lit(self.S)).cast("int"))
-            .groupBy("shard")
-            .applyInPandas(upd, self._RESULT_SCHEMA)
-            .collect()
-        )
-        bc.destroy()
-        overflowed = []
-        for r in rows:
-            if r.ok:
-                self.shards[r.shard] = Cuckoo.wrap(
-                    np.frombuffer(r.tbl, dtype=np.uint16)
-                    .reshape(r.n_buckets, 4).copy()
-                )
-            else:
-                overflowed.append(r.shard)
-        if overflowed:
-            self.rebuild_shards(spark, cat, overflowed, seen_table)
-
-    def rebuild_shards(self, spark, cat, shard_ids: list[int],
-                       seen_table: str = "seen") -> None:
-        """Rebuild the named shards at >=2x capacity from the seen
-        table's distinct keys, distributed (one applyInPandas group per
-        shard); bounded doubling, loud failure."""
-        import numpy as np
-
-        from .seen import Cuckoo
-
-        caps = {s: max(self.shards[s].n * 4 * 2, 2048) for s in shard_ids}
-        max_doublings = self.MAX_REBUILD_DOUBLINGS
-        bc = spark.sparkContext.broadcast(caps)
-
-        def build(pdf):
-            import numpy as np
-            import pandas as pd
-
-            from crawler_spark.seen import Cuckoo
-
-            s = int(pdf["shard"].iloc[0])
-            keys = np.unique(pdf["url_hash"].to_numpy(np.int64))
-            cap = bc.value[s]
-            for _ in range(max_doublings):
-                filt = Cuckoo.sized(cap)
-                if filt.add_many(keys) == len(keys):
-                    return pd.DataFrame(
-                        {"shard": [s], "n_buckets": [filt.n],
-                         "tbl": [filt.table.tobytes()], "ok": [True]}
-                    )
-                cap *= 2
-            raise RuntimeError(
-                f"cuckoo shard {s} rebuild failed to place {len(keys)} keys "
-                f"even at capacity {cap} — filter state is corrupt"
-            )
-
-        seen_keys = (
-            cat.read_or_empty(spark, seen_table, SEEN_SCHEMA)
-            .select("url_hash").distinct()
-            .withColumn("shard", F.pmod(F.col("url_hash"), F.lit(self.S)).cast("int"))
-            .where(F.col("shard").isin([int(s) for s in shard_ids]))
-        )
-        rows = seen_keys.groupBy("shard").applyInPandas(
-            build, self._RESULT_SCHEMA
-        ).collect()
-        bc.destroy()
-        rebuilt = set()
-        for r in rows:
-            self.shards[r.shard] = Cuckoo.wrap(
-                np.frombuffer(r.tbl, dtype=np.uint16).reshape(r.n_buckets, 4).copy()
-            )
-            rebuilt.add(r.shard)
-        for s in set(shard_ids) - rebuilt:  # shard empty in seen: fresh filter
-            self.shards[s] = Cuckoo.sized(caps[s])
-
-    def load_from_seen(self, spark, cat, seen_table: str = "seen") -> None:
-        """Resume-time initial load: build every shard from the seen
-        table, distributed — no driver-side key collect."""
-        self.rebuild_shards(spark, cat, list(range(self.S)), seen_table)
 
 
 def bootstrap(spark: SparkSession, cat: Catalog, cfg: CrawlConfig) -> dict:
@@ -443,7 +257,6 @@ def run_round(
     state: dict,
     pages_prepared: DataFrame,
     robots_df: DataFrame | None,
-    cuckoo: CuckooSeen | None = None,
     bloom: IncrementalBloom | None = None,
     robots_small: bool = True,
 ) -> dict:
@@ -462,22 +275,24 @@ def run_round(
     if any_reload:
         rel_rows = cand.where(_reload_col(cfg.tasks))
         cand = cand.where(~_reload_col(cfg.tasks))
-    _t = time.time()
-    spark.sparkContext.setJobDescription(f"crawl r{round_no}: dedup prefilter")
+    # the round probes the bloom only once the seen set is large enough
+    # for the probe to pay; a probing round first catches the bloom up
+    # with the committed seen table when it lags (first probing round of
+    # a crawl, or of a resumed one) — the only eager pre-filter work
+    probe = bloom is not None and state["seen_count"] >= cfg.bloom_min_seen
+    bloom_wall = 0.0
+    if probe and bloom.n != state["seen_count"]:
+        _t = time.time()
+        spark.sparkContext.setJobDescription(f"crawl r{round_no}: dedup prefilter")
+        bloom.rebuild_from(seen_df.select("url_hash"), state["seen_count"])
+        spark.sparkContext.setJobDescription(None)
+        bloom_wall = time.time() - _t
     round_bcs: list = []  # probe broadcasts, destroyed after the round's actions
-    # prefilter precedence: the long-lived cuckoo (delete-capable), else
-    # the long-lived incremental bloom run_crawl maintains, else — for
-    # direct run_round callers without one — the legacy per-round bloom
-    # rebuild inside dedup_candidates
-    prefilter = cuckoo if cuckoo is not None else bloom
+    # lazy: the probe UDF runs inside the `commit schedule_log` jobs
     cand = dedup_candidates(
         cand, seen_df, state["seen_count"],
-        use_bloom=(cfg.filter_kind() == "bloom" and prefilter is None),
-        fpp=cfg.bloom_fpp, min_seen=cfg.bloom_min_seen,
-        cuckoo=prefilter, bc_sink=round_bcs,
+        prefilter=bloom if probe else None, bc_sink=round_bcs,
     )
-    spark.sparkContext.setJobDescription(None)
-    bloom_wall = time.time() - _t  # eager: the bloom build collects here
     # in-round duplicate URLs: keep the schedulable-first copy, drop the
     # rest (reference: duplicate skipped at pull once first copy marked
     # visited, crawler.go:85-90).  Reload rows are exempt: the reference
@@ -616,11 +431,11 @@ def run_round(
     commit(seen_delta, "seen")  # first action: populates the parsed cache
     n_seen_delta = rows["seen"]
 
-    # incremental bloom maintenance: OR the delta in at fixed geometry;
+    # incremental bloom maintenance, only on a bloom this round probed
+    # (so it held every seen key): OR the delta in at fixed geometry;
     # rebuild from the committed seen table only on capacity saturation
-    # (doubling -> amortized O(1) full scans over the whole crawl, vs the
-    # old full rebuild EVERY round)
-    if bloom is not None and n_seen_delta:
+    # (doubling -> amortized O(1) full scans over the whole crawl)
+    if probe and n_seen_delta:
         spark.sparkContext.setJobDescription(f"crawl r{round_no}: bloom delta")
         if bloom.saturated_by(n_seen_delta):
             bloom.rebuild_from(
@@ -771,22 +586,6 @@ def run_round(
     n_parked = rows["failures"]
     n_pending = n_deferred + n_new
 
-    # ---- incremental cuckoo maintenance (seen_filter='cuckoo'):
-    # insert scheduled keys, delete failed non-reload keys — the
-    # reference's StoreVisited / SetFailure protocol (crawler.go:92,
-    # 180-185) on the long-lived sharded filter.  Distributed: keys are
-    # grouped by shard and applied executor-side; the driver collects
-    # only the fixed-size shard tables, never key lists.
-    if cuckoo is not None:
-        fail_nonrel = failed if not any_reload else failed.where(
-            ~_reload_col(cfg.tasks)
-        )
-        cuckoo.apply_round(
-            spark, cat,
-            scheduled.select("url_hash"),
-            fail_nonrel.select("url_hash"),
-        )
-
     wall = time.time() - t0
     if cfg.collect_metrics:
         mrows = [
@@ -872,21 +671,11 @@ def run_crawl(
         state = resume(cat)
     else:
         state = bootstrap(spark, cat, cfg)
-    cuckoo: CuckooSeen | None = None
-    bloom: IncrementalBloom | None = None
-    if cfg.filter_kind() == "cuckoo":
-        cuckoo = CuckooSeen(capacity=max(state["seen_count"] * 2, 1 << 14))
-        if state["seen_count"] and cat.exists("seen"):
-            cuckoo.load_from_seen(spark, cat)
-    elif cfg.filter_kind() == "bloom":
-        bloom = IncrementalBloom(
-            capacity=max(state["seen_count"] * 2, 1 << 14), fpp=cfg.bloom_fpp
-        )
-        if state["seen_count"] and cat.exists("seen"):
-            # resume load: one distributed build from the seen table
-            bloom.rebuild_from(
-                cat.read(spark, "seen").select("url_hash"), state["seen_count"]
-            )
+    # built empty: the first round that probes loads it from `seen`
+    bloom = (
+        IncrementalBloom(capacity=1 << 14, fpp=cfg.bloom_fpp)
+        if cfg.use_bloom else None
+    )
     # http fetch mode needs no pages table (and may have no pages_path)
     pages_prepared = (
         prepare_pages(spark.read.parquet(cfg.pages_path))
@@ -920,7 +709,7 @@ def run_crawl(
         if round_hook is not None:
             round_hook(spark, cat, state)
         state = run_round(
-            spark, cat, cfg, state, pages_prepared, robots_df, cuckoo, bloom,
+            spark, cat, cfg, state, pages_prepared, robots_df, bloom,
             robots_small=robots_small,
         )
     return state

@@ -8,9 +8,10 @@ assigned at discovery time (SURVEY.md §7 hard part 1): total order =
 
 ``assign_seq`` gives *contiguous, deterministic* ids without a
 single-partition window: range-repartition by the (unique) order key,
-collect the tiny per-partition count vector, then add per-partition
-offsets to an intra-partition row_number.  Cost: one extra count job over
-the (small) discovery delta — never over the whole frontier.
+materialise that partitioning once, collect the tiny per-partition count
+vector, then add per-partition offsets to an intra-partition row_number.
+Cost: one checkpoint job plus one count job over the (small) discovery
+delta — never over the whole frontier.
 """
 
 from __future__ import annotations
@@ -68,12 +69,18 @@ def assign_seq(
 
     order_cols must be a unique key.  Deterministic regardless of input
     partitioning: the global rank depends only on the total order of the
-    key, not on range-sampler boundaries.
+    key, not on range-sampler boundaries.  That holds only if the counts
+    and the offsets see the SAME partitioning: ``repartitionByRange``
+    samples its bounds anew on every execution, so the ``_pid``-tagged
+    frame is checkpointed (eagerly, lineage cut) and both passes read it.
     """
     sc_cols = [F.col(c) for c in order_cols]
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    parted = df.repartitionByRange(n, *sc_cols).sortWithinPartitions(*sc_cols)
-    parted = parted.withColumn("_pid", F.spark_partition_id())
+    parted = (
+        df.repartitionByRange(n, *sc_cols)
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
+    )
     counts = {r._pid: r.cnt for r in parted.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
     offsets = {}
     acc = 0

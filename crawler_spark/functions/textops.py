@@ -1155,7 +1155,7 @@ def train_quality_perceptron(
     ``n_buckets`` ints resident on the driver between epochs — the
     distributed-gradient-descent shape: the driver aggregates a
     bucket-sized delta (bounded collect, n_buckets rows/epoch,
-    documented like the bloom/cuckoo state), never doc-sized data."""
+    documented like the bloom state), never doc-sized data."""
     w, _feat, _lab, out_rows = _perceptron_fit(
         df, text_col, id_col, n_buckets, epochs, label_mult
     )

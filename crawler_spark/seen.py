@@ -9,19 +9,17 @@ pre-filter** splits candidates into "definitely new" (skip the join) and
 cost a join probe, never a dropped URL (SURVEY.md §7 hard part 2).
 
 Scale notes:
-- the bloom is built *distributed* (per-partition numpy bitmaps OR-merged
-  on the driver) and broadcast.  The engine's default backend is
-  :class:`IncrementalBloom`: the round's seen delta is OR-merged in and
-  the filter is rebuilt from the seen table only on capacity saturation
-  — never a full-table rebuild per round.  At 10^10 keys a single
-  filter would be ~10 GB, so production additionally shards by Iceberg
-  host-bucket and each executor loads only its buckets' shards; the
-  build/probe API is shard-ready (``build_bloom(df, ...)`` takes any
-  pre-filtered slice), and the cuckoo backend (engine.CuckooSeen) runs
-  exactly that sharded update job today.
-- the cuckoo fallback supports *deletion*, matching the reference's
-  un-visit on fetch failure (crawler.go:180-185) for deployments whose
-  long-lived filter must also forget.
+- the engine's one pre-filter is :class:`IncrementalBloom`, built
+  *distributed* (per-partition numpy bitmaps OR-merged on the driver)
+  and broadcast into the probe.  A round probes only once the seen set
+  reaches ``CrawlConfig.bloom_min_seen``; the first such round (or the
+  first after a resume) loads the filter from the seen table, later
+  rounds OR their seen delta in, and the filter is rebuilt only on
+  capacity saturation — never a full-table rebuild per round.  At
+  10^10 keys a single filter would be ~10 GB, so production would
+  additionally shard by Iceberg host-bucket and each executor load only
+  its buckets' shards; the build takes any pre-filtered slice
+  (``build_bloom(df, ...)``).
 """
 
 from __future__ import annotations
@@ -110,11 +108,11 @@ def build_bloom(df: DataFrame, key_col: str, n_items: int, fpp: float = 0.01) ->
 
 class IncrementalBloom:
     """Long-lived bloom seen pre-filter maintained ACROSS rounds (the
-    default ``seen_filter='bloom'`` backend in the engine).
+    engine's pre-filter when ``CrawlConfig.use_bloom``).
 
-    The previous shape rebuilt the filter from the FULL seen table every
-    round — a whole-table scan plus full-bitmap build per round, which
-    at a 10^10-row seen set is the round's dominant fixed cost.  Here the
+    Rebuilding the filter from the FULL seen table every round would be
+    a whole-table scan plus full-bitmap build per round, which at a
+    10^10-row seen set is the round's dominant fixed cost.  So the
     round's seen delta is OR-merged in (partial bitmaps per partition,
     identical distributed build), and the filter is rebuilt from the
     seen table only when inserts saturate the sized capacity — capacity
@@ -130,7 +128,7 @@ class IncrementalBloom:
         self.bloom = Bloom.sized(self.capacity, fpp)
         self.n = 0
 
-    # duck-typed probe for dedup_candidates / split_by_filter
+    # vectorized probe for dedup_candidates / split_by_filter
     def contains_many(self, keys: np.ndarray) -> np.ndarray:
         return self.bloom.contains(np.asarray(keys, dtype=np.int64))
 
@@ -149,7 +147,7 @@ class IncrementalBloom:
 
     def rebuild_from(self, seen_df: DataFrame, n_total: int) -> None:
         """Re-size to 2x the current membership and rebuild from the
-        authoritative seen table (resume load / saturation)."""
+        authoritative seen table (first load / resume / saturation)."""
         self.capacity = max(2 * int(n_total), 1024)
         self.bloom = build_bloom(
             seen_df, "url_hash", n_items=self.capacity, fpp=self.fpp
@@ -157,82 +155,19 @@ class IncrementalBloom:
         self.n = int(n_total)
 
 
-def split_by_bloom(
-    candidates: DataFrame, bloom: Bloom, key_col: str = "url_hash",
-    bc_sink: list | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """-> (definitely_new, maybe_seen).  Probe is an Arrow-batched pandas
-    UDF over the broadcast bitmap; exactness restored downstream by the
-    anti-join on maybe_seen only.  ``bc_sink``: the broadcast handle is
-    appended so the caller can destroy it once the round's actions are
-    done — without it a 64-round crawl accrues one bitmap broadcast per
-    round on driver and executors."""
-    spark = candidates.sparkSession
-    bc = spark.sparkContext.broadcast((bloom.m_bits, bloom.k, bloom.bits))
-    if bc_sink is not None:
-        bc_sink.append(bc)
-
-    @F.pandas_udf("boolean")
-    def might_contain(keys: pd.Series) -> pd.Series:
-        m, k, bits = bc.value
-        b = Bloom(m, k, bits)
-        return pd.Series(b.contains(keys.to_numpy(dtype=np.int64)))
-
-    flagged = candidates.withColumn("_maybe", might_contain(F.col(key_col)))
-    return (
-        flagged.where(~F.col("_maybe")).drop("_maybe"),
-        flagged.where(F.col("_maybe")).drop("_maybe"),
-    )
-
-
-def dedup_candidates(
-    candidates: DataFrame,
-    seen_df: DataFrame,
-    seen_count: int,
-    use_bloom: bool = True,
-    fpp: float = 0.01,
-    min_seen: int = 1024,
-    cuckoo=None,
-    bc_sink: list | None = None,
-) -> DataFrame:
-    """Exact F4 semantics: candidates minus seen (left anti on url_hash),
-    with an approximate pre-filter fast path once the seen set outgrows
-    ``min_seen`` (below that the filter build/probe costs more than the
-    join it saves).  The pre-filter is either the per-round distributed
-    bloom, or — when ``cuckoo`` is passed — the engine's long-lived
-    incremental cuckoo filter (supports deletion on un-visit, the
-    reference's crawler.go:180-185 semantics).  Either way false
-    positives only cost an exact-join probe, never a dropped URL.
-
-    ``cuckoo``: any object exposing a vectorized
-    ``contains_many(np.int64[:]) -> bool[:]`` (a raw :class:`Cuckoo` or
-    the engine's sharded ``CuckooSeen``).  ``bc_sink`` collects the
-    round's broadcast handles for end-of-round destruction."""
-    if seen_count == 0:
-        return candidates
-    if cuckoo is not None and seen_count >= min_seen:
-        fresh, maybe = split_by_filter(candidates, cuckoo.contains_many,
-                                       bc_sink=bc_sink)
-    elif use_bloom and seen_count >= min_seen:
-        bloom = build_bloom(seen_df, "url_hash", n_items=seen_count, fpp=fpp)
-        fresh, maybe = split_by_bloom(candidates, bloom, bc_sink=bc_sink)
-    else:
-        return candidates.join(
-            seen_df.select("url_hash"), on="url_hash", how="left_anti"
-        )
-    confirmed = maybe.join(seen_df.select("url_hash"), on="url_hash", how="left_anti")
-    return fresh.unionByName(confirmed)
-
-
 def split_by_filter(
     candidates: DataFrame, approx_contains, key_col: str = "url_hash",
     bc_sink: list | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Generic (definitely_new, maybe_seen) split for any vectorized
-    approximate-membership probe ``approx_contains(np.int64[:]) -> bool[:]``
-    (bloom or cuckoo).  Probe runs as an Arrow-batched pandas UDF over
-    broadcast filter state; exactness restored downstream by the
-    anti-join on maybe_seen only.  ``bc_sink``: see split_by_bloom."""
+    """-> (definitely_new, maybe_seen) for a vectorized approximate-
+    membership probe ``approx_contains(np.int64[:]) -> bool[:]`` (the
+    engine passes ``IncrementalBloom.contains_many``).  The probe runs as
+    an Arrow-batched pandas UDF over the broadcast filter state;
+    exactness is restored downstream by the anti-join on maybe_seen only.
+    ``bc_sink``: the broadcast handle is appended so the caller can
+    destroy it once the round's actions are done — without it a 64-round
+    crawl accrues one filter broadcast per round on driver and
+    executors."""
     spark = candidates.sparkSession
     bc = spark.sparkContext.broadcast(approx_contains)
     if bc_sink is not None:
@@ -249,112 +184,34 @@ def split_by_filter(
     )
 
 
-# ---------------------------------------------------------------- cuckoo
-class Cuckoo:
-    """Partition-local cuckoo filter (4-slot buckets, 16-bit fingerprints)
-    with deletion — the incremental-seen-set fallback (north_rule).  Used
-    when one long-lived filter must also *forget* failed fetches the way
-    the reference un-visits them (crawler.go:180-185)."""
+def dedup_candidates(
+    candidates: DataFrame,
+    seen_df: DataFrame,
+    seen_count: int,
+    prefilter: IncrementalBloom | None = None,
+    bc_sink: list | None = None,
+) -> DataFrame:
+    """Exact F4 semantics: candidates minus seen (left anti on url_hash).
+    With a ``prefilter`` (a bloom already holding every seen key), only
+    its "maybe seen" split meets the exact anti-join; "definitely new"
+    rows skip it.  False positives therefore cost an exact-join probe,
+    never a dropped URL.  The caller decides whether a round probes
+    (``CrawlConfig.bloom_min_seen``); this function only builds the
+    plan — the probe runs when the result is first executed."""
+    if seen_count == 0:
+        return candidates
+    seen_keys = seen_df.select("url_hash")
+    if prefilter is None:
+        return candidates.join(seen_keys, on="url_hash", how="left_anti")
+    fresh, maybe = split_by_filter(
+        candidates, prefilter.contains_many, bc_sink=bc_sink
+    )
+    confirmed = maybe.join(seen_keys, on="url_hash", how="left_anti")
+    return fresh.unionByName(confirmed)
 
-    MAX_KICKS = 500
 
-    def __init__(self, n_buckets: int):
-        self.n = 1 << max(4, (n_buckets - 1).bit_length())  # power of two
-        self.table = np.zeros((self.n, 4), dtype=np.uint16)
-        self._rng_state = 0x2545F4914F6CDD1D
-
-    @staticmethod
-    def sized(n_items: int) -> "Cuckoo":
-        return Cuckoo(max(16, int(n_items / 4 / 0.84) + 1))
-
-    @staticmethod
-    def wrap(table: np.ndarray) -> "Cuckoo":
-        """Adopt an existing (n, 4) uint16 table without reallocating —
-        the deserialization path for shard tables shipped back from
-        executors (engine.CuckooSeen)."""
-        c = object.__new__(Cuckoo)
-        c.n = table.shape[0]
-        c.table = table
-        c._rng_state = 0x2545F4914F6CDD1D
-        return c
-
-    def _fp(self, key: int) -> int:
-        fp = (key ^ (key >> 17)) & 0xFFFF
-        return fp if fp != 0 else 1
-
-    def _i1(self, key: int) -> int:
-        return (key >> 16) & (self.n - 1)
-
-    def _i2(self, i1: int, fp: int) -> int:
-        return (i1 ^ (fp * 0x5BD1E995)) & (self.n - 1)
-
-    def _next_rand(self) -> int:
-        self._rng_state = (self._rng_state * 6364136223846793005 + 1442695040888963407) % (1 << 64)
-        return self._rng_state >> 33
-
-    def add(self, key: int) -> bool:
-        fp = self._fp(key)
-        i1 = self._i1(key)
-        i2 = self._i2(i1, fp)
-        for i in (i1, i2):
-            row = self.table[i]
-            empty = np.flatnonzero(row == 0)
-            if len(empty):
-                row[empty[0]] = fp
-                return True
-        i = i1 if self._next_rand() & 1 else i2
-        for _ in range(self.MAX_KICKS):
-            slot = self._next_rand() & 3
-            fp, self.table[i][slot] = int(self.table[i][slot]), fp
-            i = self._i2(i, fp)
-            row = self.table[i]
-            empty = np.flatnonzero(row == 0)
-            if len(empty):
-                row[empty[0]] = fp
-                return True
-        return False  # table full; caller should resize
-
-    def contains(self, key: int) -> bool:
-        fp = self._fp(key)
-        i1 = self._i1(key)
-        i2 = self._i2(i1, fp)
-        return bool((self.table[i1] == fp).any() or (self.table[i2] == fp).any())
-
-    def delete(self, key: int) -> bool:
-        fp = self._fp(key)
-        i1 = self._i1(key)
-        for i in (i1, self._i2(i1, fp)):
-            hit = np.flatnonzero(self.table[i] == fp)
-            if len(hit):
-                self.table[i][hit[0]] = 0
-                return True
-        return False
-
-    # vectorized conveniences for the engine's incremental-seen path
-    def add_many(self, keys) -> int:
-        ok = 0
-        for k in keys:
-            ok += bool(self.add(int(k)))
-        return ok
-
-    def delete_many(self, keys) -> int:
-        ok = 0
-        for k in keys:
-            ok += bool(self.delete(int(k)))
-        return ok
-
-    def contains_many(self, keys: np.ndarray) -> np.ndarray:
-        """Vectorized ``contains`` (int64 arithmetic shifts match the
-        scalar path's Python semantics for negative hashes)."""
-        ks = np.asarray(keys, dtype=np.int64)
-        fp = (ks ^ (ks >> 17)) & np.int64(0xFFFF)
-        fp = np.where(fp == 0, np.int64(1), fp).astype(np.uint16)
-        mask = np.int64(self.n - 1)
-        i1 = (ks >> 16) & mask
-        i2 = (i1 ^ (fp.astype(np.int64) * np.int64(0x5BD1E995))) & mask
-        hit1 = (self.table[i1] == fp[:, None]).any(axis=1)
-        hit2 = (self.table[i2] == fp[:, None]).any(axis=1)
-        return hit1 | hit2
+_MD5_SLICE_POSITIONS = 16 ** 3  # one 3-hex-digit slice: positions 0..4095
+_MD5_SLICES = 32 // 3  # whole 3-hex slices in a 32-hex md5 digest
 
 
 def bloom_fpr_stats(
@@ -388,7 +245,22 @@ def bloom_fpr_stats(
     m_bits-bounded bit table (broadcast).  The production engine keeps
     the numpy bitmap + mapInPandas probe (seen.Bloom) for constant
     factors; this twin exists for the correctness contract.
+
+    Geometry limits: a 3-hex slice addresses 4096 positions and the
+    32-hex md5 holds 10 whole slices, so ``1 <= m_bits <= 4096`` and
+    ``1 <= k <= 10`` (ValueError otherwise).  An empty probe frame
+    reports ``n_false_pos = fpr_milli = 0``.  ``expected_fpr_milli`` is
+    ``floor(1000 * r^k)`` with ``r = bits_set / m_bits`` multiplied out
+    in doubles, left to right — no long product to overflow.
     """
+    if not 1 <= m_bits <= _MD5_SLICE_POSITIONS:
+        raise ValueError(
+            f"m_bits={m_bits}: 3-hex md5 slices address only "
+            f"1..{_MD5_SLICE_POSITIONS} bits"
+        )
+    if not 1 <= k <= _MD5_SLICES:
+        raise ValueError(f"k={k}: a 32-hex md5 holds only {_MD5_SLICES} 3-hex slices")
+
     def pos(i: int) -> F.Column:
         return (
             F.conv(
@@ -423,7 +295,11 @@ def bloom_fpr_stats(
         .cast("long")
         .alias("n_false_pos"),
     )
-    m4 = m_bits ** k
+    ratio = F.col("bits_set").cast("double") / F.lit(float(m_bits))
+    power = ratio
+    for _ in range(k - 1):
+        power = power * ratio
+    n_false_pos = F.coalesce(F.col("n_false_pos"), F.lit(0).cast("long"))
     return (
         nm.crossJoin(F.broadcast(bs))
         .crossJoin(F.broadcast(agg))
@@ -431,21 +307,14 @@ def bloom_fpr_stats(
             "n_members",
             "bits_set",
             "n_probes",
-            "n_false_pos",
-            F.floor(F.col("n_false_pos") * F.lit(1000) / F.col("n_probes"))
+            n_false_pos.alias("n_false_pos"),
+            F.when(
+                F.col("n_probes") > 0,
+                F.floor(n_false_pos * F.lit(1000) / F.col("n_probes")),
+            )
+            .otherwise(F.lit(0))
             .cast("long")
             .alias("fpr_milli"),
-            F.floor(
-                (
-                    F.col("bits_set")
-                    * F.col("bits_set")
-                    * F.col("bits_set")
-                    * F.col("bits_set")
-                    * F.lit(1000)
-                ).cast("long")
-                / F.lit(m4)
-            )
-            .cast("long")
-            .alias("expected_fpr_milli"),
+            F.floor(power * F.lit(1000.0)).cast("long").alias("expected_fpr_milli"),
         )
     )

@@ -153,7 +153,7 @@ def dedup_stream(
 
     Production notes: presence state grows with the distinct-fp count;
     a perpetual deployment bounds it the same way the batch engine
-    does — the bloom/cuckoo seen-filter stage in front (crawler_spark/
+    does — the bloom seen-filter stage in front (crawler_spark/
     seen.py) keeps the exact state to the maybe-new minority — or
     evicts via event-time timeout where re-emission after N days is
     acceptable.  Input must already carry ``fp_col`` (scan-local

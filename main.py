@@ -62,10 +62,9 @@ def main() -> int:
              "one budget)",
     )
     ap.add_argument("--max-rounds", type=int, default=64)
-    ap.add_argument("--no-bloom", action="store_true")
     ap.add_argument(
-        "--seen-filter", choices=["bloom", "cuckoo", "none"], default=None,
-        help="seen-set pre-filter backend (default: bloom unless --no-bloom)",
+        "--no-bloom", action="store_true",
+        help="dedup with the exact anti-join alone, no bloom pre-filter",
     )
     ap.add_argument(
         "--charset-sniff", action="store_true",
@@ -128,7 +127,6 @@ def main() -> int:
         salt_buckets=args.salt_buckets,
         politeness_key=args.politeness_key,
         use_bloom=not args.no_bloom,
-        seen_filter=args.seen_filter,
         charset_sniff=args.charset_sniff,
         broadcast_max_rows=args.broadcast_max_rows,
         frontier_buckets=args.frontier_buckets,

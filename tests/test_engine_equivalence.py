@@ -127,13 +127,13 @@ def test_engine_matches_oracle_shuffle_fetch_join(spark, tmp_path):
     _assert_match(spark, cat, state, orc)
 
 
-def test_engine_matches_oracle_cuckoo(spark, tmp_path):
-    """seen_filter='cuckoo': the long-lived incremental filter (insert at
-    schedule, delete on failure) as the F4 pre-filter; exactness must be
-    preserved by the confirming anti-join."""
+def test_engine_matches_oracle_bloom_probe(spark, tmp_path):
+    """bloom_min_seen=1: every round after the first probes the long-lived
+    bloom (loaded from `seen` in round 2, OR-merged after) as the F4
+    pre-filter; exactness must be preserved by the confirming
+    anti-join."""
     cat, state, orc = _run_both(
-        spark, tmp_path, salt_buckets=1, use_bloom=True,
-        seen_filter="cuckoo", bloom_min_seen=1,
+        spark, tmp_path, salt_buckets=1, use_bloom=True, bloom_min_seen=1,
     )
     _assert_match(spark, cat, state, orc)
 
@@ -324,8 +324,8 @@ def test_frontier_compaction_and_expiry_equivalence(spark, tmp_path):
 
 
 def test_all_round2_features_stacked(spark, tmp_path):
-    """Feature-interaction gate: GBK corpus + charset sniff + cuckoo
-    seen-filter + salted rank + shuffle-gated fetch join + robots parsed
+    """Feature-interaction gate: GBK corpus + charset sniff + bloom probe
+    from round 2 + salted rank + shuffle-gated fetch join + robots parsed
     from the corpus, all at once over a tight budget (20 rounds) — the
     combination no single-feature test exercises."""
     pages_path = str(tmp_path / "pages")
@@ -335,7 +335,7 @@ def test_all_round2_features_stacked(spark, tmp_path):
     tasks = rules.synthetic_tasks(max_depth=5, n_book_hosts=10, n_sun_hosts=5)
     cfg = engine.CrawlConfig(
         tasks=tasks, pages_path=pages_path, round_seconds=12.0,
-        salt_buckets=4, seen_filter="cuckoo", bloom_min_seen=1,
+        salt_buckets=4, use_bloom=True, bloom_min_seen=1,
         charset_sniff=True, robots_from_corpus=True, broadcast_max_rows=0,
     )
     cat = Catalog(str(tmp_path / "wh"))

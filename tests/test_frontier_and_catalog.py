@@ -32,6 +32,29 @@ def test_assign_seq_deterministic_across_parallelism(spark):
     assert am == bm
 
 
+def test_assign_seq_counts_and_offsets_share_one_partitioning(spark):
+    """A shuffled 20k-row input: the range partitioner samples its
+    bounds on every execution, so counts taken from one execution and
+    offsets applied in another repeat and skip seqs.  The ids must be
+    exactly start..start+n-1 in key order."""
+    df = (
+        spark.range(20_000)
+        .select(
+            (F.col("id") * 7919 % 20_000).alias("parent_seq"),
+            (F.col("id") % 3).cast("int").alias("link_pos"),
+        )
+        .repartition(8, "parent_seq")
+        .groupBy("parent_seq", "link_pos")
+        .count()
+    )
+    out, n = assign_seq(df, ["parent_seq", "link_pos"], start_seq=0)
+    assert n == 20_000
+    got = [(r.seq, r.parent_seq, r.link_pos) for r in out.orderBy("seq").collect()]
+    assert [s for s, _, _ in got] == list(range(n))
+    keys = [(p, lp) for _, p, lp in got]
+    assert keys == sorted(keys)
+
+
 def test_catalog_snapshots_and_rollback(spark, tmp_path):
     cat = Catalog(str(tmp_path / "wh"))
     df1 = spark.range(5).withColumnRenamed("id", "x")

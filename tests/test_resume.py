@@ -61,10 +61,10 @@ def test_stop_and_resume_identical(spark, tmp_path):
     assert _snapshot_tables(spark, cat_b) == want
 
 
-def test_stop_and_resume_identical_cuckoo(spark, tmp_path):
-    """Resume with the long-lived cuckoo seen-filter: run_crawl rebuilds
-    the filter from the seen table on resume; final tables must equal
-    the uninterrupted run's."""
+def test_stop_and_resume_identical_bloom_probe(spark, tmp_path):
+    """Resume with the bloom probe active (bloom_min_seen=1): the first
+    resumed round loads the bloom from the seen table; final tables must
+    equal the uninterrupted run's."""
     pages_path = str(tmp_path / "pages")
     corpus.write_corpus(spark, pages_path, n_hosts=3, n_filler=10)
     tasks = rules.synthetic_tasks(n_book_hosts=3, n_sun_hosts=2)
@@ -72,8 +72,8 @@ def test_stop_and_resume_identical_cuckoo(spark, tmp_path):
     def cfg(max_rounds=64):
         return engine.CrawlConfig(
             tasks=tasks, pages_path=pages_path, round_seconds=12.0,
-            use_bloom=True, salt_buckets=2, seen_filter="cuckoo",
-            bloom_min_seen=1, max_rounds=max_rounds,
+            use_bloom=True, salt_buckets=2, bloom_min_seen=1,
+            max_rounds=max_rounds,
         )
 
     cat_a = Catalog(str(tmp_path / "wh_a"))
@@ -86,3 +86,46 @@ def test_stop_and_resume_identical_cuckoo(spark, tmp_path):
     state2 = engine.run_crawl(spark, cat_b, cfg(), do_resume=True)
     assert state2["finished"]
     assert _snapshot_tables(spark, cat_b) == want
+
+
+def test_bloom_jobs_only_in_probing_rounds(spark, tmp_path, monkeypatch):
+    """No bloom job runs in a round below bloom_min_seen: a crawl that
+    stays below it never builds or merges the bloom.  A crawl resumed
+    past it loads the bloom from `seen` exactly once, in its first
+    round, and OR-merges every later round's delta."""
+    from crawler_spark.seen import IncrementalBloom
+
+    calls = {"rebuild_from": 0, "or_delta": 0}
+    for name in calls:
+        orig = getattr(IncrementalBloom, name)
+
+        def counted(self, *a, _orig=orig, _name=name, **kw):
+            calls[_name] += 1
+            return _orig(self, *a, **kw)
+
+        monkeypatch.setattr(IncrementalBloom, name, counted)
+
+    pages_path = str(tmp_path / "pages")
+    corpus.write_corpus(spark, pages_path, n_hosts=3, n_filler=10)
+    tasks = rules.synthetic_tasks(n_book_hosts=3, n_sun_hosts=2)
+
+    def cfg(min_seen, max_rounds=64):
+        return engine.CrawlConfig(
+            tasks=tasks, pages_path=pages_path, round_seconds=12.0,
+            use_bloom=True, salt_buckets=2, bloom_min_seen=min_seen,
+            max_rounds=max_rounds,
+        )
+
+    cat = Catalog(str(tmp_path / "wh"))
+    state = engine.run_crawl(spark, cat, cfg(1 << 30, max_rounds=2))
+    assert not state["finished"] and state["seen_count"] > 0
+    assert calls == {"rebuild_from": 0, "or_delta": 0}
+
+    state2 = engine.run_crawl(
+        spark, cat, cfg(state["seen_count"]), do_resume=True
+    )
+    assert state2["finished"] and state2["round"] > state["round"] + 1
+    # the catch-up load, sized 2x the seen set, never saturates here
+    assert state2["seen_count"] <= 1024
+    assert calls["rebuild_from"] == 1
+    assert calls["or_delta"] >= 1

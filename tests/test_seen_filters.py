@@ -1,13 +1,17 @@
-"""Bloom/cuckoo membership structures + dedup exactness (F4)."""
+"""Bloom membership structures + dedup exactness (F4)."""
 
 from __future__ import annotations
 
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
-from crawler_spark.seen import Bloom, Cuckoo, build_bloom, dedup_candidates, split_by_bloom
+from crawler_spark.seen import (
+    Bloom,
+    IncrementalBloom,
+    dedup_candidates,
+    split_by_filter,
+)
 
 I64 = st.integers(min_value=-(1 << 63), max_value=(1 << 63) - 1)
 
@@ -37,8 +41,9 @@ def test_distributed_bloom_build_and_split(spark):
     cand_keys = list(range(0, 3000, 3))
     seen_df = spark.createDataFrame([(k,) for k in seen_keys], "url_hash long")
     cand_df = spark.createDataFrame([(k,) for k in cand_keys], "url_hash long")
-    bloom = build_bloom(seen_df, "url_hash", n_items=len(seen_keys))
-    fresh, maybe = split_by_bloom(cand_df, bloom)
+    bloom = IncrementalBloom(capacity=1024)
+    bloom.rebuild_from(seen_df, len(seen_keys))
+    fresh, maybe = split_by_filter(cand_df, bloom.contains_many)
     fresh_keys = {r.url_hash for r in fresh.collect()}
     # nothing actually seen may land in "definitely new"
     assert not (fresh_keys & set(seen_keys))
@@ -51,66 +56,18 @@ def test_distributed_bloom_build_and_split(spark):
 def test_dedup_candidates_exact(spark):
     seen_df = spark.createDataFrame([(k,) for k in range(0, 100, 2)], "url_hash long")
     cand = spark.createDataFrame([(k, f"u{k}") for k in range(100)], "url_hash long, url string")
-    for use_bloom in (False, True):
-        out = dedup_candidates(
-            cand, seen_df, seen_count=50, use_bloom=use_bloom, min_seen=1
-        )
+    bloom = IncrementalBloom(capacity=1024)
+    bloom.rebuild_from(seen_df, 50)
+    for prefilter in (None, bloom):
+        out = dedup_candidates(cand, seen_df, seen_count=50, prefilter=prefilter)
         keys = sorted(r.url_hash for r in out.collect())
-        assert keys == list(range(1, 100, 2)), use_bloom
-
-
-@settings(max_examples=30, deadline=None)
-@given(st.sets(I64, min_size=1, max_size=300))
-def test_cuckoo_membership_and_delete(keys):
-    keys = list(keys)
-    c = Cuckoo.sized(len(keys) * 2)
-    ok = [c.add(k) for k in keys]
-    assert all(ok)
-    assert all(c.contains(k) for k in keys)
-    # delete half, they must disappear (no false negatives on the rest)
-    for k in keys[::2]:
-        assert c.delete(k)
-    assert all(c.contains(k) for k in keys[1::2])
-
-
-@settings(max_examples=30, deadline=None)
-@given(st.lists(I64, min_size=1, max_size=200), st.lists(I64, min_size=0, max_size=100))
-def test_cuckoo_contains_many_matches_scalar(members, probes):
-    """The engine's vectorized probe must agree with the scalar path on
-    every key, including negative hashes (arithmetic-shift semantics)."""
-    c = Cuckoo.sized(len(members) * 2)
-    for k in members:
-        c.add(k)
-    allk = members + probes
-    vec = c.contains_many(np.array(allk, dtype=np.int64))
-    assert list(vec) == [c.contains(k) for k in allk]
-
-
-def test_dedup_candidates_cuckoo_exact(spark):
-    """Cuckoo pre-filter path keeps F4 exact (anti-join confirms)."""
-    seen_keys = list(range(0, 100, 2))
-    seen_df = spark.createDataFrame([(k,) for k in seen_keys], "url_hash long")
-    cand = spark.createDataFrame(
-        [(k, f"u{k}") for k in range(100)], "url_hash long, url string"
-    )
-    c = Cuckoo.sized(256)
-    for k in seen_keys:
-        c.add(k)
-    out = dedup_candidates(
-        cand, seen_df, seen_count=50, use_bloom=False, min_seen=1, cuckoo=c
-    )
-    keys = sorted(r.url_hash for r in out.collect())
-    assert keys == list(range(1, 100, 2))
+        assert keys == list(range(1, 100, 2)), prefilter
 
 
 def test_incremental_bloom_no_false_negatives_across_deltas(spark):
     """IncrementalBloom: OR-merged per-round deltas can never develop a
     false negative, and the saturation rebuild keeps every key while
     doubling capacity."""
-    import numpy as np
-
-    from crawler_spark.seen import IncrementalBloom
-
     ib = IncrementalBloom(capacity=2048, fpp=0.01)
     all_keys: list[int] = []
     for r in range(5):
@@ -132,82 +89,3 @@ def test_incremental_bloom_no_false_negatives_across_deltas(spark):
 
 def _keys_df(spark, keys):
     return spark.createDataFrame([(int(k),) for k in keys], "url_hash long")
-
-
-def _empty_keys(spark):
-    return spark.createDataFrame([], "url_hash long")
-
-
-def test_cuckooseen_overflow_rebuild_keeps_all_keys(spark, tmp_path):
-    """Deliberately undersized CuckooSeen: after shard overflow the
-    distributed rebuild must retain EVERY inserted key (a cuckoo false
-    negative would skip the exact anti-join and re-crawl a seen URL)."""
-    import numpy as np
-
-    from crawler_spark.catalog import Catalog
-    from crawler_spark.engine import CuckooSeen
-
-    cat = Catalog(str(tmp_path / "wh"))
-    # 2 shards x ~2048 slots; 5000 keys must overflow and trigger rebuild
-    cs = CuckooSeen(capacity=16, n_shards=2)
-    rng = np.random.default_rng(7)
-    keys = rng.integers(-(1 << 62), 1 << 62, size=5000, dtype=np.int64).tolist()
-    for i in range(0, len(keys), 1000):
-        batch = keys[i : i + 1000]
-        # engine contract: the seen delta is committed BEFORE maintenance,
-        # so the rebuild's seen read already includes this batch
-        cat.write_counted(_keys_df(spark, batch), "seen")
-        cs.apply_round(spark, cat, _keys_df(spark, batch), _empty_keys(spark))
-    got = cs.contains_many(np.array(keys, dtype=np.int64))
-    assert got.all(), f"{(~got).sum()} keys lost after overflow rebuild"
-
-
-def test_cuckooseen_reload_reinsert_terminates(spark, tmp_path):
-    """ADVICE r2 (high): a reload-task URL is re-scheduled every round, so
-    the same key hits the filter >8 times — more copies than a cuckoo
-    filter can hold of one fingerprint.  Inserts must dedupe against the
-    filter (and rebuilds against the distinct seen set) or maintenance
-    loops forever.  12 rounds of the same 200 keys must terminate with no
-    capacity growth."""
-    import numpy as np
-
-    from crawler_spark.catalog import Catalog
-    from crawler_spark.engine import CuckooSeen
-
-    cat = Catalog(str(tmp_path / "wh"))
-    cs = CuckooSeen(capacity=1 << 12, n_shards=2)
-    keys = list(range(-100, 100))
-    cat.write_counted(_keys_df(spark, keys), "seen")
-    size_before = sum(c.n for c in cs.shards)
-    for _ in range(12):
-        # reference reload semantics: seen gets one row per round too
-        cat.write_counted(_keys_df(spark, keys), "seen")
-        cs.apply_round(spark, cat, _keys_df(spark, keys), _empty_keys(spark))
-    assert cs.contains_many(np.array(keys, dtype=np.int64)).all()
-    assert sum(c.n for c in cs.shards) == size_before, "capacity blew up"
-
-
-def test_cuckooseen_delete_and_resume_load(spark, tmp_path):
-    """Delete-on-failure removes keys; load_from_seen rebuilds every
-    shard from the seen table without any driver-side key collect."""
-    import numpy as np
-
-    from crawler_spark.catalog import Catalog
-    from crawler_spark.engine import CuckooSeen
-
-    cat = Catalog(str(tmp_path / "wh"))
-    cs = CuckooSeen(capacity=1 << 12, n_shards=4)
-    ok_keys = list(range(0, 400, 2))
-    fail_keys = list(range(1, 400, 2))
-    cat.write_counted(_keys_df(spark, ok_keys), "seen")  # failures never land in seen
-    cs.apply_round(
-        spark, cat, _keys_df(spark, ok_keys + fail_keys), _keys_df(spark, fail_keys)
-    )
-    assert cs.contains_many(np.array(ok_keys, dtype=np.int64)).all()
-    # deleted keys are gone (up to fp-collision false positives: none here)
-    frac_present = cs.contains_many(np.array(fail_keys, dtype=np.int64)).mean()
-    assert frac_present < 0.05, frac_present
-
-    fresh = CuckooSeen(capacity=1 << 12, n_shards=4)
-    fresh.load_from_seen(spark, cat)
-    assert fresh.contains_many(np.array(ok_keys, dtype=np.int64)).all()
