@@ -259,6 +259,10 @@ def run_round(
     robots_df: DataFrame | None,
     bloom: IncrementalBloom | None = None,
     robots_small: bool = True,
+    # dispatch_cols(cfg.tasks) built once by the caller: the CASE
+    # projection costs ~2k py4j calls, so run_crawl pays it per crawl,
+    # not per round
+    rule_cols: dict[str, F.Column] | None = None,
 ) -> dict:
     round_no = state["round"] + 1
     t0 = time.time()
@@ -400,7 +404,9 @@ def run_round(
         (F.col("body_bytes") < cfg.min_body_bytes).alias("short"),  # F9
         *[
             c.alias(name)
-            for name, c in dispatch_cols(cfg.tasks, body_col="body").items()
+            for name, c in (
+                rule_cols or dispatch_cols(cfg.tasks, body_col="body")
+            ).items()
         ],
     ).persist()
 
@@ -705,12 +711,13 @@ def run_crawl(
             robots_df = None
         else:
             robots_small = n_robots <= cfg.broadcast_max_rows
+    rule_cols = dispatch_cols(cfg.tasks, body_col="body")
     while not state["finished"] and state["round"] < cfg.max_rounds:
         if round_hook is not None:
             round_hook(spark, cat, state)
         state = run_round(
             spark, cat, cfg, state, pages_prepared, robots_df, bloom,
-            robots_small=robots_small,
+            robots_small=robots_small, rule_cols=rule_cols,
         )
     return state
 

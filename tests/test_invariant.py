@@ -75,7 +75,8 @@ def test_extraction_matches_golden_text_gbk_sniff(spark):
     pages = corpus.with_gbk_reencoding(
         corpus.generate_pages(spark, n_hosts=4, n_filler=0)
     )
-    pages = pages.withColumn("body", sniff_decode_col(F.col("html")))
+    # persisted: the sniff UDF runs once, not once per kind below
+    pages = pages.withColumn("body", sniff_decode_col(F.col("html"))).persist()
     # the re-encoding really hit a subset
     n_gbk = pages.where(F.substring(F.col("html"), 1, 5) == F.lit(b"<meta")).count()
     assert n_gbk > 0
@@ -95,6 +96,7 @@ def test_extraction_matches_golden_text_gbk_sniff(spark):
         bad = parsed.withColumn("_ext", ext).where(F.col("_ext") != F.col("text"))
         rows = bad.select("url", "text", "_ext").limit(3).collect()
         assert not rows, f"{kind}: extraction != golden under GBK, e.g. {rows}"
+    pages.unpersist()
 
 
 def test_corpus_is_deterministic(spark):

@@ -4,25 +4,29 @@ watermarked window agg must produce the batch-equivalent counts."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from crawler_spark import corpus, engine, rules, streaming
 from crawler_spark.catalog import Catalog
 
 
-def _small_crawl(spark, tmp_path):
-    pages_path = str(tmp_path / "pages")
+@pytest.fixture(scope="module")
+def small_crawl(spark, tmp_path_factory):
+    """One finished crawl whose tables the stream tests only read."""
+    base = tmp_path_factory.mktemp("small_crawl")
+    pages_path = str(base / "pages")
     corpus.write_corpus(spark, pages_path, n_hosts=2, n_filler=10)
     tasks = rules.synthetic_tasks(max_depth=5, n_book_hosts=2, n_sun_hosts=1)
     cfg = engine.CrawlConfig(tasks=tasks, pages_path=pages_path, use_bloom=False)
-    cat = Catalog(str(tmp_path / "wh"))
+    cat = Catalog(str(base / "wh"))
     state = engine.run_crawl(spark, cat, cfg)
     assert state["finished"]
     return cat
 
 
-def test_stream_tail_equals_batch(spark, tmp_path):
-    cat = _small_crawl(spark, tmp_path)
+def test_stream_tail_equals_batch(spark, small_crawl):
+    cat = small_crawl
     batch = {
         (r.task, r.rule, r.url)
         for r in cat.read(spark, "results").collect()
@@ -35,8 +39,8 @@ def test_stream_tail_equals_batch(spark, tmp_path):
     assert len(tail.collect()) == cat.read(spark, "results").count()
 
 
-def test_windowed_items_equal_batch_agg(spark, tmp_path):
-    cat = _small_crawl(spark, tmp_path)
+def test_windowed_items_equal_batch_agg(spark, small_crawl):
+    cat = small_crawl
     stream = streaming.stream_table(spark, cat, "results")
     win = streaming.run_to_memory(
         streaming.items_per_window(stream, window="1 minute"), "t_results_win"
