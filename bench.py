@@ -257,7 +257,7 @@ def main() -> None:
         "knn_join", "knn_join_lsh", "ann_brute_topk", "semantic_dedup",
         "bm25_topk", "text_quality", "lang_id_lm", "html_extract",
         "token_budget", "winnow_counts_prod", "mirror_hosts", "site_template",
-        "cluster_keep_best", "dedup_exact_stream", "cosine_neardup",
+        "cluster_keep_best", "cosine_neardup",
     ]
     crawl_keys = [
         "rounds", "urls_scheduled", "wall_sec", "cores", "urls_per_sec",

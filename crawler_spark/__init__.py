@@ -14,7 +14,7 @@ Layout
 - ``schemas``     fixed StructTypes for frontier/pages/results/seen/robots/metrics
 - ``urlnorm``     URL canonicalization + murmur3/xxhash64 keys
 - ``rules``       declarative rule registry (the reference's RuleTree as data)
-- ``parsers``     vectorized parse kernels (SQL-expression fast path + pandas-UDF path)
+- ``parsers``     vectorized parse kernels (SQL-expression fast path + pure-Python oracle twin)
 - ``frontier``    frontier ops: depth filter, dedup, scalable seq assignment
 - ``politeness``  per-host round budgets, robots.txt filtering, two-phase skew rank
 - ``seen``        bloom pre-filter + exact seen-set ops
@@ -27,7 +27,8 @@ Layout
 - ``sinks``       JDBC results sink matching the reference's per-task table
 - ``corpus``      deterministic synthetic Common-Crawl-style page corpus (seed 42)
 - ``oracle``      pure-Python single-worker reference oracle for equivalence tests
-- ``functions``   training-data pipeline ops (dedup suite, similarity, text analysis)
+- ``functions``   training-data pipeline ops (dedup suite, text analysis, link graph,
+                  host stats, sketches, similarity)
 """
 
 __version__ = "0.1.0"

@@ -16,10 +16,8 @@ Mapping to SURVEY.md §2 operator inventory:
   regex_field_extract P5/P6 first-submatch ExtraString semantics
   per_source_agg     per-host metrics aggregation (K1 routing shape)
 plus training-data ops: text_quality, lang_id, fingerprint,
-repetition_scores, stratified_sample, sessionize (batch kernel of the
-stateful-streaming twin), dedup_exact, dedup_ngram_jaccard,
-dedup_minhash_lsh, simhash_pairs, winnow_fingerprints,
-multimodal_decode, frame_sample, audio_resample, ann_brute_topk,
+repetition_scores, stratified_sample, dedup_exact, dedup_ngram_jaccard,
+dedup_minhash_lsh, simhash_pairs, winnow_fingerprints, ann_brute_topk,
 ann_lsh_topk, ann_ivf_topk, cosine_neardup, cosine_neardup_lsh,
 pii_redact, line_dedup, sequence_pack, bigram_lm, warc_roundtrip,
 host_rank (fixed-point PageRank, unrolled-CTE oracle), dedup_clusters
@@ -39,7 +37,6 @@ entries since r4).
 from __future__ import annotations
 
 import hashlib
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -166,144 +163,7 @@ def q_per_source_agg(spark, sf_dir):
     )
 
 
-# -------------------------------------------- general relational surface
-# The reference has no relational queries, but the engine is a Spark
-# analytics surface — these exercise the classic OLAP shapes (multi-way
-# broadcast join, wide aggregation, JSON extraction) over the driver's
-# TPC-H-ish tables.  Determinism contract: money as per-row cents
-# (floor(x*100) — identical IEEE ops per row in both engines) summed as
-# int64, never a float aggregate.
-
-
-def _li(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-
-
-def q_pricing_summary(spark, sf_dir):
-    """TPC-H Q1 shape: scan-heavy wide aggregation with pushed-down
-    date filter and map-side partial aggregation."""
-    cents = lambda c: F.floor(c * 100).cast("long")  # noqa: E731
-    li = _li(spark, sf_dir).where(F.col("l_shipdate") <= F.lit("2001-06-01"))
-    return li.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"),
-        F.sum(cents(F.col("l_extendedprice"))).alias("sum_base_cents"),
-        F.sum(cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
-            "sum_disc_cents"
-        ),
-        F.sum(
-            cents(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax"))
-            )
-        ).alias("sum_charge_cents"),
-        F.count("*").alias("count_order"),
-    )
-
-
-def q_shipping_priority(spark, sf_dir):
-    """TPC-H Q3 shape: selective dimension filter -> broadcast join chain
-    -> revenue aggregation -> global top-10 (TakeOrderedAndProject)."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").where(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").where(
-        F.col("o_orderdate") < F.lit("2000-01-01")
-    )
-    li = _li(spark, sf_dir).where(F.col("l_shipdate") > F.lit("2000-01-01"))
-    rev = F.floor(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast("long")
-    return (
-        li.join(F.broadcast(orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.sum(rev).alias("revenue_cents"))
-        .orderBy(F.desc("revenue_cents"), F.asc("o_orderkey"))
-        .limit(10)
-        .select(
-            "o_orderkey",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
-            "o_orderpriority",
-            "revenue_cents",
-        )
-    )
-
-
-def q_forecast_revenue(spark, sf_dir):
-    """TPC-H Q6 shape: pure scan-filter-aggregate — every predicate
-    (date range, discount band, quantity cap) pushes to the parquet
-    scan, the aggregate is a single map-side-combined global sum with
-    no grouping shuffle at all.  Revenue in per-row floor cents (int64)
-    so the sum is bit-exact across engines."""
-    li = _li(spark, sf_dir).where(
-        (F.col("l_shipdate") >= F.lit("2000-01-01"))
-        & (F.col("l_shipdate") < F.lit("2001-01-01"))
-        & (F.col("l_discount") >= 0.02)
-        & (F.col("l_discount") <= 0.06)
-        & (F.col("l_quantity") < 24)
-    )
-    return li.agg(
-        F.sum(
-            F.floor(F.col("l_extendedprice") * F.col("l_discount") * 100).cast("long")
-        ).alias("revenue_cents"),
-        F.count("*").alias("n_items"),
-    )
-
-
-def q_priority_check(spark, sf_dir):
-    """TPC-H Q4 shape: EXISTS as a LEFT SEMI join with a cross-table
-    predicate (a lineitem of the order shipped AFTER the order date),
-    then a tiny grouped count by priority.  The semi join never
-    duplicates order rows (no post-join distinct needed) and the fact
-    side carries the pushed date filter."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").where(
-        (F.col("o_orderdate") >= F.lit("2000-01-01"))
-        & (F.col("o_orderdate") < F.lit("2000-10-01"))
-    )
-    li = _li(spark, sf_dir).select("l_orderkey", "l_shipdate")
-    return (
-        orders.join(
-            li,
-            (orders.o_orderkey == li.l_orderkey)
-            & (li.l_shipdate > orders.o_orderdate),
-            "semi",
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("order_count"))
-    )
-
-
-def q_regional_revenue(spark, sf_dir):
-    """TPC-H Q5 shape: five-way join — two big facts (lineitem,
-    orders) plus four dimensions — with the region filter pushed
-    through nation to prune most of the join tree.  Declared as plain
-    joins: Catalyst broadcast-plans every dimension (region/nation/
-    supplier/customer fit the build side) and AQE picks the
-    orders⋈lineitem strategy from runtime sizes.  Money is summed as
-    per-row cents (int64) so no float aggregate crosses the oracle
-    boundary."""
-    rd = lambda t: spark.read.parquet(f"{sf_dir}/{t}.parquet")  # noqa: E731
-    region = rd("region").where(F.col("r_name") == "ASIA")
-    orders = rd("orders").where(
-        (F.col("o_orderdate") >= F.lit("1996-01-01"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01"))
-    )
-    cents = F.floor(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast(
-        "long"
-    )
-    return (
-        _li(spark, sf_dir)
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(rd("customer"), F.col("o_custkey") == F.col("c_custkey"))
-        .join(
-            rd("supplier"),
-            (F.col("l_suppkey") == F.col("s_suppkey"))
-            & (F.col("c_nationkey") == F.col("s_nationkey")),
-        )
-        .join(rd("nation"), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(region, F.col("n_regionkey") == F.col("r_regionkey"))
-        .groupBy("n_name")
-        .agg(F.sum(cents).alias("revenue_cents"))
-    )
-
-
+# ------------------------------------------------------------ SQL surface
 def q_source_rollup(spark, sf_dir):
     """Grouping sets via ROLLUP, issued through the spark.sql STRING API
     over a temp view (the SQL surface parity check — everything else in
@@ -736,55 +596,6 @@ def q_redirect_resolve(spark, sf_dir):
     )
 
 
-def q_sitemap_parse(spark, sf_dir):
-    """Sitemap seed ingestion (sitemaps.parse_sitemap): each doc
-    synthesizes a 2-entry sitemap — entry 1 carries lastmod + priority,
-    entry 2 omits both (spec-optional), so per-block field pairing is
-    exercised (positional zipping would smear entry 1's fields onto
-    entry 2).  Oracle rebuilds the rows closed-form, never parsing."""
-    from .functions import sitemaps
-
-    pages = _docs(spark, sf_dir).select(
-        F.format_string(
-            '<?xml version="1.0"?><urlset>'
-            "<url><loc> /s/%d </loc><lastmod>2026-01-%02d</lastmod>"
-            "<priority>0.%d</priority></url>"
-            "<url><loc>/s/%d</loc></url>"
-            "</urlset>",
-            F.col("doc_id").cast("int"),
-            (F.col("doc_id") % 28 + 1).cast("int"),
-            (F.col("doc_id") % 10).cast("int"),
-            (F.col("doc_id") + 5000000).cast("int"),
-        ).alias("xml")
-    )
-    return sitemaps.parse_sitemap(pages)
-
-
-def q_trap_detect(spark, sf_dir):
-    """Crawl-trap stats (traps.trap_scores): a third of each host's
-    urls are calendar-shaped (collapse to one '/cal/#/#' template),
-    the rest unique '/about#' shapes plus a query-string suffix the
-    templater must strip.  Oracle applies the same digit-collapse in
-    SQL and recomputes the rollup."""
-    from .functions import traps
-
-    urls = _docs(spark, sf_dir).select(
-        F.col("source").alias("host"),
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.format_string(
-                "/CAL/%d/%d?sid=%d",
-                (F.col("doc_id") % 12).cast("int"),
-                (F.col("doc_id") % 31).cast("int"),
-                F.col("doc_id").cast("int"),
-            ),
-        ).otherwise(
-            F.format_string("/about%d", F.col("doc_id").cast("int"))
-        ).alias("url"),
-    )
-    return traps.trap_scores(urls)
-
-
 def q_decontaminate(spark, sf_dir):
     """Train-test decontamination (dedup.contaminated_docs): docs with
     doc_id % 97 == 0 play the benchmark/eval set; every other doc
@@ -858,66 +669,6 @@ def q_revisit_records(spark, sf_dir):
         F.md5(F.concat(F.col("text"), F.lit("#"), v.cast("string"))).alias("digest"),
     )
     return snapshots.revisit_records(fetches).select(
-        "url_id", "epoch", "digest", "record_type",
-        F.col("refers_to_epoch").cast("long").alias("refers_to_epoch"),
-    )
-
-
-def q_revisit_stream(spark, sf_dir):
-    """Streaming CORRECTNESS row for revisit classification: the SAME
-    3-epoch fetch log as q_revisit_records, written as one parquet file
-    per epoch and ingested one micro-batch per file (exactly how a
-    recrawl pipeline tails crawl snapshots) through the
-    applyInPandasWithState twin (streaming.revisit_stream).  Shares
-    q_revisit_records' DuckDB oracle verbatim — cross-batch state must
-    reproduce the batch window kernel row-for-row to hash-match."""
-    import shutil
-
-    from .streaming import revisit_stream, run_to_memory
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    f0 = docs.select(
-        F.col("doc_id").alias("url_id"),
-        "text",
-        F.explode(F.array(F.lit(0), F.lit(1), F.lit(2))).alias("epoch"),
-    )
-    v = (
-        F.when((F.col("url_id") % 5 == 2) & (F.col("epoch") == 2), F.lit(0))
-        .otherwise(
-            ((F.col("epoch") >= 1) & (F.col("url_id") % 3 == 0)).cast("int")
-            + ((F.col("epoch") == 2) & (F.col("url_id") % 4 == 1)).cast("int")
-        )
-    )
-    fetches = f0.select(
-        "url_id",
-        F.col("epoch").cast("long").alias("epoch"),
-        F.md5(F.concat(F.col("text"), F.lit("#"), v.cast("string"))).alias("digest"),
-    )
-    src = _tmp_dir("revisit", sf_dir)
-    shutil.rmtree(src, ignore_errors=True)
-    for e in range(3):  # one crawl snapshot per file, epoch-ordered names
-        fetches.where(F.col("epoch") == e).coalesce(1).write.parquet(
-            f"{src}/epoch{e}"
-        )
-    # the file source orders micro-batches by mtime: written back-to-back,
-    # a coarse-granularity mtime tie could reorder epochs and flip
-    # response/revisit labels (ADVICE r3) — pin strictly increasing mtimes
-    base_ts = 1_600_000_000
-    for e in range(3):
-        d = f"{src}/epoch{e}"
-        for fn in os.listdir(d):
-            if fn.endswith(".parquet"):
-                os.utime(os.path.join(d, fn), (base_ts + e, base_ts + e))
-    stream = (
-        spark.readStream.schema("url_id long, epoch long, digest string")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    name = "revisit_stream_sink"
-    spark.catalog.dropTempView(name)  # stale sink from a previous run
-    return run_to_memory(revisit_stream(stream), name, mode="update").select(
         "url_id", "epoch", "digest", "record_type",
         F.col("refers_to_epoch").cast("long").alias("refers_to_epoch"),
     )
@@ -1049,30 +800,6 @@ def q_mixture_sample(spark, sf_dir):
     ).select("doc_id", "source")
 
 
-def q_dedup_exact_stream(spark, sf_dir):
-    """Stateful-streaming CORRECTNESS row: exact dedup BY THE STREAMING
-    PATH — file-source readStream over the documents snapshot (one
-    micro-batch per file via maxFilesPerTrigger) -> scan-local
-    fingerprint -> applyInPandasWithState presence state ->
-    Trigger.AvailableNow memory sink.  Survivor set == the batch
-    keep-min-id kernel (file order is id order), so the DuckDB oracle
-    is a plain min(doc_id)-per-fingerprint."""
-    from .streaming import dedup_stream, run_to_memory
-
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(sf_dir)
-        .select("doc_id", textops.fingerprint_md5(F.col("text")).alias("fp"))
-    )
-    name = "dedup_exact_stream_sink"
-    spark.catalog.dropTempView(name)  # stale sink from a previous run
-    out = run_to_memory(dedup_stream(stream), name, mode="update")
-    return out.select("fp", F.col("doc_id").cast("long").alias("doc_id"))
-
-
 def q_recrawl_priority(spark, sf_dir):
     """Change-rate recrawl scheduling (snapshots.recrawl_priority): an
     8-epoch observation history is synthesized deterministically (url's
@@ -1145,58 +872,6 @@ def q_blocklist_filter(spark, sf_dir):
         "domain string",
     )
     return hoststats.tag_blocked(d, bl)
-
-
-def q_events_window_stream(spark, sf_dir):
-    """Streaming-surface CORRECTNESS row (VERDICT r2 #8): tumbling
-    5-minute windowed counts + cent-sums per event_type computed BY THE
-    STRUCTURED STREAMING PATH — file-source readStream over the events
-    snapshot -> watermark -> window agg -> Trigger.AvailableNow memory
-    sink — then returned as the materialized result.  AvailableNow
-    drains exactly the committed files, so the stream over a static
-    snapshot is deterministic and the DuckDB oracle is the same agg via
-    epoch bucketing.  Window bounds cross the comparison boundary as
-    epoch-second longs (never raw timestamps), sums as cents-longs."""
-    from .streaming import run_to_memory
-
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        # the file source needs a directory; glob-filter to the events
-        # file within the sf dir
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        # events.ts is TIMESTAMP_NTZ in parquet; watermarks require an
-        # instant.  Session tz is UTC (the sessionize row's epoch
-        # equality vs DuckDB asserts this), so the cast is lossless.
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    agg = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "5 minutes").alias("win"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.floor(F.col("value") * 100).cast("long")).alias("sum_value_cents"),
-        )
-    )
-    name = "events_window_stream_sink"
-    spark.catalog.dropTempView(name)  # stale sink from a previous run
-    out = run_to_memory(agg, name)
-    return out.select(
-        F.unix_timestamp(F.col("win.start")).alias("win_start_s"),
-        "event_type",
-        "n_events",
-        "sum_value_cents",
-    )
-
-
-def q_sessionize(spark, sf_dir):
-    """Gap-based sessionization over events (6 h gap): the batch window
-    kernel; its applyInPandasWithState streaming twin is asserted equal
-    in tests/test_sessions.py."""
-    from .functions import sessions
-
-    return sessions.sessionize(_events(spark, sf_dir), gap_seconds=21600)
 
 
 def q_repetition_scores(spark, sf_dir):
@@ -1352,120 +1027,6 @@ def q_winnow_prod(spark, sf_dir):
     hash-match; pick-count equality with the pure-Python reference
     kernel is additionally asserted in tests/test_winnow.py."""
     return textops.winnow_counts(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
-# ------------------------------------------------------------ multimodal
-def _fake_media(spark, sf_dir):
-    """Deterministic binary payloads keyed by doc_id (width/height are
-    closed-form in doc_id, so DuckDB can oracle the decoded metadata)."""
-    import pyspark.sql.types as T
-
-    from .functions import multimodal
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = [
-                multimodal.fake_image(32 + int(i) % 64, 32 + int(i) % 48)
-                for i in pdf["doc_id"]
-            ]
-            yield pdf
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return docs.mapInPandas(gen, schema=schema)
-
-
-def q_multimodal_decode(spark, sf_dir):
-    """Binary payload -> mapInPandas header decode -> typed metadata.
-    The oracle recomputes the metadata closed-form from doc_id, so this
-    checks the full Arrow round-trip (gen -> binary -> parse)."""
-    from .functions import multimodal
-
-    decoded = multimodal.decode_image_meta(_fake_media(spark, sf_dir))
-    return decoded.select(
-        "doc_id",
-        F.col("meta.width").alias("width"),
-        F.col("meta.height").alias("height"),
-        F.col("meta.n_bytes").alias("n_bytes"),
-    )
-
-
-def _fake_audio_media(spark, sf_dir):
-    """Deterministic audio payloads keyed by doc_id (sample_rate and
-    n_samples closed-form in doc_id, so DuckDB can oracle the full
-    resample -> decode chain)."""
-    import pyspark.sql.types as T
-
-    from .functions import multimodal
-
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = [
-                multimodal.fake_audio(
-                    8000 + (int(i) % 5) * 2000, 1000 + int(i) % 500
-                )
-                for i in pdf["doc_id"]
-            ]
-            yield pdf
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return docs.mapInPandas(gen, schema=schema)
-
-
-def q_audio_resample(spark, sf_dir):
-    """binary audio -> resample_stub(16 kHz) -> header decode: the
-    audio-modality plumbing chain (gen -> rewrite -> parse, two Arrow
-    round-trips), metadata closed-form in doc_id for the oracle."""
-    from .functions import multimodal
-
-    out = multimodal.decode_audio_meta(
-        multimodal.resample_stub(_fake_audio_media(spark, sf_dir), target_rate=16000)
-    )
-    return out.select(
-        "doc_id",
-        F.col("ameta.sample_rate").alias("sample_rate"),
-        F.col("ameta.n_samples").alias("n_samples"),
-        F.col("ameta.duration_ms").alias("duration_ms"),
-    )
-
-
-def q_image_dedup(spark, sf_dir):
-    """Perceptual image dedup (multimodal.dhash64): binary payload ->
-    mapInPandas dHash -> keep-min-doc_id per hash group.  The oracle
-    recomputes the 63 gradient bits closed-form from doc_id (the FIMG
-    pixel generator is a pure function of width/height), so it checks
-    the whole decode -> hash -> group chain bit-for-bit."""
-    from .functions import multimodal
-
-    hashed = multimodal.dhash64(_fake_media(spark, sf_dir))
-    w = Window.partitionBy("dhash")
-    return hashed.select(
-        "doc_id",
-        "dhash",
-        (F.col("doc_id") == F.min("doc_id").over(w)).alias("keep"),
-    )
-
-
-def q_frame_sample(spark, sf_dir):  # queries-only (1->N binary expansion)
-    from .functions import multimodal
-
-    media = _fake_media(spark, sf_dir).withColumnRenamed("doc_id", "media_id")
-    frames = multimodal.frame_sample_stub(media, every_n=2)
-    return (
-        frames.groupBy("media_id")
-        .agg(F.count("*").alias("n_frames"), F.sum(F.length("frame")).alias("frame_bytes"))
-    )
 
 
 # ------------------------------------------------------------ similarity
@@ -1711,52 +1272,6 @@ def q_chunk_documents(spark, sf_dir):
     return textops.chunk_documents(d, max_tokens=32, stride=24)
 
 
-def q_feed_parse(spark, sf_dir):
-    """RSS/Atom feed ingestion (feeds.parse_feeds): one synthetic feed
-    per host (97, derived from doc_id like every host-keyed row) —
-    even hids serve RSS 2.0 <item> blocks (link as element text), odd
-    hids Atom <entry> blocks (link as href attribute), 1-3 entries
-    each.  Body strings are pure functions of the host id built
-    identically in the DuckDB oracle, which parses them with its own
-    regexes — the freshness-discovery twin of sitemap_parse."""
-    from .functions.feeds import parse_feeds
-
-    hid = F.col("hid")
-    hosts = (
-        _docs(spark, sf_dir)
-        .select((F.col("doc_id") % 97).alias("hid"))
-        .distinct()
-    )
-    link = lambda j: F.concat(
-        F.lit("http://h"), hid, F.lit(".example/post/"), j.cast("string")
-    )
-    title = lambda j: F.concat(
-        F.lit("Post "), j.cast("string"), F.lit(" on h"), hid
-    )
-    rss_item = lambda j: F.concat(
-        F.lit("<item><title>"), title(j), F.lit("</title><link>"), link(j),
-        F.lit("</link><pubDate>0"), (j + 1).cast("string"),
-        F.lit(" Jan 2026 00:00:00 GMT</pubDate></item>"),
-    )
-    atom_entry = lambda j: F.concat(
-        F.lit("<entry><title>"), title(j), F.lit('</title><link href="'),
-        link(j), F.lit('"/><updated>2026-01-0'), (j + 1).cast("string"),
-        F.lit("T00:00:00Z</updated></entry>"),
-    )
-    js = F.sequence(F.lit(0), (hid % 3).cast("int"))
-    body = F.when(
-        hid % 2 == 0,
-        F.concat(F.lit("<rss><channel>"),
-                 F.concat_ws("", F.transform(js, rss_item)),
-                 F.lit("</channel></rss>")),
-    ).otherwise(
-        F.concat(F.lit('<feed xmlns="http://www.w3.org/2005/Atom">'),
-                 F.concat_ws("", F.transform(js, atom_entry)),
-                 F.lit("</feed>")),
-    )
-    return parse_feeds(hosts.select(body.alias("xml")))
-
-
 def q_registered_domain(spark, sf_dir):
     """Public-suffix registered-domain extraction (hoststats.
     registered_domain): the politeness/quota key at web scale is the
@@ -1905,14 +1420,6 @@ def q_robots_rules(spark, sf_dir):
 # Contract order IS the driver's verification window: the driver
 # oracle-checks the FIRST 50 entries of this dict per round (observed
 # r1-r3), so rows are rotated each round to retire verification debt.
-# r4 rotation (VERDICT r3 "Next round #1"): the 10 rows that had never
-# received a driver check, then the two kernels rewritten in r3 after
-# their last green row (dedup_minhash_lsh, simhash_pairs), then every
-# row whose newest green row is r2, then the rows MODIFIED this round
-# (revisit_stream, jsonl_roundtrip, dedup_containment — ADVICE fixes;
-# knn_join_lsh — newly oracle'd), then r3-green engine-core rows to
-# fill the window.  Everything past 50 is r3 hash-green and unchanged
-# since (CORRECTNESS_r03.json).
 
 # ------------------------------------------ tokenizer prep + encoding QA
 MOJI_TAINT_SUFFIX = (
@@ -1981,7 +1488,6 @@ def q_mojibake_detect(spark, sf_dir):
     return textops.mojibake_stats(d.select("doc_id", taint.alias("text")))
 
 
-
 BADWORD_TAINT_SUFFIX = " casino jackpot viagra"
 BADWORD_TAINT_PREFIX = "xxx "
 
@@ -2048,44 +1554,6 @@ def q_script_detect(spark, sf_dir):
 
 
 # --------------------------------------------- late-r4 curation stats
-def q_url_features(spark, sf_dir):
-    """URL-shape admission gate (urlfeat.url_features): deterministic
-    URL synthesis exercises every feature — doc_id%5==0 builds a
-    parameter-farm tracking URL (4 query params -> spam), %5==1 a
-    9-deep calendar path (-> spam), %5==2 a percent-encoded path with
-    one param, the rest clean article URLs; %4==0 adds a www subdomain.
-    The oracle replays the CASE and every length/replace feature."""
-    from .functions import urlfeat
-
-    d = _docs(spark, sf_dir).select("doc_id", "source")
-    sfx = (
-        F.when(
-            F.col("doc_id") % 5 == 0,
-            F.format_string(
-                "/track/%d/x?sid=%d&ref=aff&a=1&b=2",
-                F.col("doc_id") * 7919, F.col("doc_id"),
-            ),
-        )
-        .when(
-            F.col("doc_id") % 5 == 1,
-            F.format_string("/a/b/c/d/e/f/g/h/i/item%d", F.col("doc_id")),
-        )
-        .when(
-            F.col("doc_id") % 5 == 2,
-            F.format_string(
-                "/p%%20q/doc%d?x=%d", F.col("doc_id"), F.col("doc_id") % 7
-            ),
-        )
-        .otherwise(F.format_string("/articles/item%d", F.col("doc_id")))
-    )
-    url = F.concat(
-        F.lit("https://"),
-        F.when(F.col("doc_id") % 4 == 0, F.lit("www.")).otherwise(F.lit("")),
-        F.col("source"),
-        F.lit(".example.com"),
-        sfx,
-    )
-    return urlfeat.url_features(d.select("doc_id", url.alias("url")))
 
 
 def q_link_spam(spark, sf_dir):
@@ -2144,39 +1612,6 @@ def q_readability(spark, sf_dir):
         F.repeat(F.lit(" Stop here now."), (F.col("doc_id") % 4).cast("int")),
     )
     return textops.readability_scores(d.select("doc_id", taint.alias("text")))
-
-
-def q_url_param_dedup(spark, sf_dir):
-    """Tracking-param URL collapse (urlfeat.url_param_dedup): three URL
-    families per page — utm-wrapped, gclid-wrapped with the content
-    param in a different ORDER, and bare — so docs with equal
-    (source, page, id-parity) collapse across families after the strip
-    + sort.  Oracle replays the synthesis and the list_filter/list_sort
-    canonicalization."""
-    from .functions import urlfeat
-
-    d = _docs(spark, sf_dir).select("doc_id", "source")
-    q = (
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.format_string(
-                "?utm_source=feed&id=%d&utm_campaign=c%d",
-                F.col("doc_id") % 2, F.col("doc_id") % 5,
-            ),
-        )
-        .when(
-            F.col("doc_id") % 3 == 1,
-            F.format_string(
-                "?id=%d&gclid=g%d", F.col("doc_id") % 2, F.col("doc_id")
-            ),
-        )
-        .otherwise(F.lit(""))
-    )
-    url = F.concat(
-        F.lit("https://"), F.col("source"), F.lit(".example.com/p/"),
-        (F.col("doc_id") % 25).cast("string"), q,
-    )
-    return urlfeat.url_param_dedup(d.select("doc_id", url.alias("url")))
 
 
 def q_html_meta(spark, sf_dir):
@@ -2324,37 +1759,6 @@ def q_intradoc_dedup(spark, sf_dir):
         F.col("n_lines").cast("long").alias("n_lines"),
         F.col("n_kept").cast("long").alias("n_kept"),
         F.md5("kept_text").alias("kept_md5"),
-    )
-
-
-def q_mime_sniff(spark, sf_dir):
-    """Magic-byte MIME sniffing (multimodal.sniff_mime): doc_id%9
-    cycles PNG/JPEG/GIF89a/PDF/gzip/RIFF-WAVE/'<!DOCTYPE'/RIFF-WEBP/
-    no-magic payloads, each with a doc-dependent suffix byte, built as
-    hex and unhex'd into a real binary column.  The kernel slices the
-    first 12 bytes, hexes, and routes on the prefix table (RIFF
-    disambiguated on the byte-9..12 tag); the oracle replays the same
-    hex synthesis and prefix table on the string — so the row checks
-    the Spark-side unhex->slice->hex round trip end-to-end."""
-    from .functions import multimodal
-
-    d = _docs(spark, sf_dir).select("doc_id")
-    magic = (
-        F.when(F.col("doc_id") % 9 == 0, F.lit("89504E47"))
-        .when(F.col("doc_id") % 9 == 1, F.lit("FFD8FFE0"))
-        .when(F.col("doc_id") % 9 == 2, F.lit("474946383961"))
-        .when(F.col("doc_id") % 9 == 3, F.lit("25504446"))
-        .when(F.col("doc_id") % 9 == 4, F.lit("1F8B"))
-        .when(F.col("doc_id") % 9 == 5,
-              F.lit("524946460100000057415645"))
-        .when(F.col("doc_id") % 9 == 6, F.lit("3C21444F4354595045"))
-        .when(F.col("doc_id") % 9 == 7,
-              F.lit("524946460100000057454250"))
-        .otherwise(F.lit("00FFEE"))
-    )
-    hx = F.concat(magic, F.lpad(F.hex(F.col("doc_id") % 251), 2, "0"))
-    return multimodal.sniff_mime(
-        d.select("doc_id", F.unhex(hx).alias("content"))
     )
 
 
@@ -2777,8 +2181,6 @@ def q_focused_priority(spark, sf_dir):
     )
 
 
-
-
 # ------------------------------------------------ mixed-script slice (r5)
 # VERDICT r4 "What's missing" #1: every r4 hash-green ran on ASCII-only
 # input.  These rows run the unicode-sensitive kernels over a
@@ -2951,7 +2353,6 @@ def q_scrub_apply_mixed(spark, sf_dir):
             (F.length("text") - F.length("scrubbed")).cast("long").alias("n_cut"),
         )
     )
-
 
 
 def q_hits_scores(spark, sf_dir):
@@ -3375,23 +2776,18 @@ def q_pmi_collocations(spark, sf_dir):
 
 
 QUERIES = {
+    # Contract order IS the driver's verification window: the driver
+    # oracle-checks the FIRST 50 entries of this dict per round, so rows
+    # are ordered by verification debt.
     # ================= r5 driver window (first 50) ===================
-    # Rotation executed per SURVEY.md "Round-5 rotation plan" and
-    # VERDICT r4 item #1: (a) the 22 late-r4 rows that have never
-    # received a driver row, (b) the 2 rows whose newest driver green
-    # is r2, (c) the three bench-watch rows (VERDICT r4 "What's wrong"
-    # #5) ahead of the fill, (d) r3-green fill in prior dict order.
     # -- (a) never driver-checked (late-r4 additions) -----------------
-    "url_features": q_url_features,
     "link_spam": q_link_spam,
     "vocab_growth": q_vocab_growth,
     "readability": q_readability,
-    "url_param_dedup": q_url_param_dedup,
     "html_meta": q_html_meta,
     "img_alt_pairs": q_img_alt_pairs,
     "robots_meta": q_robots_meta,
     "intradoc_dedup": q_intradoc_dedup,
-    "mime_sniff": q_mime_sniff,
     "mirror_hosts": q_mirror_hosts,
     "date_extract": q_date_extract,
     "unicode_clean": q_unicode_clean,
@@ -3436,11 +2832,7 @@ QUERIES = {
     "trustrank_scores": q_trustrank_scores,
     # -- NEW late-r5 (window at birth): OPIC, the edit-distance
     # near-dup join, the HLL/Count-Min sketch family, the bloom
-    # seen-set FPR twin and the Zipf profile displace the r3-green
-    # schedule_round / priority_topk / dedup_anti_join /
-    # regex_field_extract fill rows plus the re-benched-stable watch
-    # rows cosine_neardup (r4-green) and dedup_exact_stream (r3-green)
-    # to the r6 queue --------------------------------------------------
+    # seen-set FPR twin and the Zipf profile ------------------------
     "opic_scores": q_opic_scores,
     "edit_dedup": q_edit_dedup,
     "hll_distinct": q_hll_distinct,
@@ -3450,11 +2842,12 @@ QUERIES = {
     "seed_hops": q_seed_hops,
     "cocitation": q_cocitation,
     "hll_merge": q_hll_merge,
-    # ---------------- driver window ends here (50) ------------------
+    # -- r3-green fill: moved up into the window when the rows whose
+    # kernels no crawl or corpus build uses left the contract ---------
     "html_extract": q_html_extract,
     "cluster_keep_best": q_cluster_keep_best,
     "politeness_rank": q_politeness_rank,
-    "dedup_exact_stream": q_dedup_exact_stream,
+    # ---------------- driver window ends here (50) ------------------
     "cosine_neardup": q_cosine_neardup,
     "schedule_round": q_schedule_round,
     "priority_topk": q_priority_topk,
@@ -3465,17 +2858,10 @@ QUERIES = {
     "body_length_filter": q_body_length_filter,
     "rlike_filter": q_rlike_filter,
     "text_quality": q_text_quality,
-    # link_truncate, tfidf_topk, sessionize, events_window_stream ..
-    # shipping_priority displaced below the window by the thirteen new
-    # r5 rows (six mixed-script + bpe_train_merges + quality_train +
-    # quality_infer + kmeans_assign + semantic_dedup_trained; new rows
-    # enter at birth) and the two r5-kernel-modified similarity rows;
-    # all displaced rows are r3 hash-green with untouched kernels and
-    # head the r6 queue.
+    # cosine_neardup .. per_source_agg are r3/r4 hash-green with
+    # untouched kernels and head the r6 queue.
     "link_truncate": q_link_truncate,
     "tfidf_topk": q_tfidf_topk,
-    "sessionize": q_sessionize,
-    "events_window_stream": q_events_window_stream,
     "lang_id_lm": q_lang_id_lm,
     "gopher_rules": q_gopher_rules,
     "host_rank": q_host_rank,
@@ -3483,8 +2869,6 @@ QUERIES = {
     "warc_roundtrip": q_warc_roundtrip,
     "revisit_records": q_revisit_records,
     "per_source_agg": q_per_source_agg,
-    "pricing_summary": q_pricing_summary,
-    "shipping_priority": q_shipping_priority,
     # Everything below holds a driver hash-green row from r4 or r3
     # (CORRECTNESS_r04/r03.json) with its kernel untouched since; the
     # r6 rotation (SURVEY.md ledger) cycles the oldest greens back in.
@@ -3499,7 +2883,6 @@ QUERIES = {
     "dedup_incremental": q_dedup_incremental,
     "dup_substrings": q_dup_substrings,
     "host_cap_sample": q_host_cap_sample,
-    "image_dedup": q_image_dedup,
     "quality_classifier": q_quality_classifier,
     "scrub_apply": q_scrub_apply,
     "substring_scrub": q_substring_scrub,
@@ -3516,7 +2899,6 @@ QUERIES = {
     "boilerplate_ngrams": q_boilerplate_ngrams,
     "chunk_documents": q_chunk_documents,
     "registered_domain": q_registered_domain,
-    "feed_parse": q_feed_parse,
     "domain_split": q_domain_split,
     "token_budget": q_token_budget,
     "shard_shuffle": q_shard_shuffle,
@@ -3529,19 +2911,12 @@ QUERIES = {
     # their kernels changed this round)
     "ann_lsh_topk": q_ann_lsh_topk,
     "ann_ivf_topk": q_ann_ivf_topk,
-    "multimodal_decode": q_multimodal_decode,
-    "frame_sample": q_frame_sample,
-    "audio_resample": q_audio_resample,
     "corpus_clean": q_corpus_clean,
-    "revisit_stream": q_revisit_stream,
     "jsonl_roundtrip": q_jsonl_roundtrip,
     "decontaminate": q_decontaminate,
     "fuzzy_dedup_e2e": q_fuzzy_dedup_e2e,
     "repetition_scores": q_repetition_scores,
     # -- r3-green residual (unmodified kernels; r6 rotation queue) ----
-    "regional_revenue": q_regional_revenue,
-    "forecast_revenue": q_forecast_revenue,
-    "priority_check": q_priority_check,
     "json_extract": q_json_extract,
     "source_rollup": q_source_rollup,
     "pii_redact": q_pii_redact,
@@ -3557,8 +2932,6 @@ QUERIES = {
     "blocklist_filter": q_blocklist_filter,
     "anchor_text": q_anchor_text,
     "redirect_resolve": q_redirect_resolve,
-    "sitemap_parse": q_sitemap_parse,
-    "trap_detect": q_trap_detect,
 }
 
 # =====================================================================
@@ -4075,77 +3448,6 @@ ORACLES = {
                max(n_chars) as max_chars, min(n_chars) as min_chars
         from documents group by source
     """,
-    "pricing_summary": """
-        -- outer casts: DuckDB sum(BIGINT) returns HUGEINT which lands in
-        -- pandas as float64 and fails the driver's dtype-sensitive hash
-        -- (same class as the r1 per_source_agg bug; judge-verified fix).
-        select l_returnflag, l_linestatus,
-               cast(sum(cast(l_quantity as bigint)) as bigint) as sum_qty,
-               cast(sum(cast(floor(l_extendedprice * 100) as bigint)) as bigint)
-                 as sum_base_cents,
-               cast(sum(cast(floor(l_extendedprice * (1 - l_discount) * 100) as bigint))
-                 as bigint) as sum_disc_cents,
-               cast(sum(cast(floor(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 100)
-                        as bigint)) as bigint) as sum_charge_cents,
-               count(*) as count_order
-        from lineitem
-        where l_shipdate <= timestamp '2001-06-01'
-        group by l_returnflag, l_linestatus
-    """,
-    "forecast_revenue": """
-        select cast(sum(cast(floor(l_extendedprice * l_discount * 100) as bigint))
-                 as bigint) as revenue_cents,
-               count(*) as n_items
-        from lineitem
-        where l_shipdate >= timestamp '2000-01-01'
-          and l_shipdate <  timestamp '2001-01-01'
-          and l_discount >= 0.02 and l_discount <= 0.06
-          and l_quantity < 24
-    """,
-    "priority_check": """
-        select o_orderpriority, count(*) as order_count
-        from orders o
-        where o.o_orderdate >= timestamp '2000-01-01'
-          and o.o_orderdate <  timestamp '2000-10-01'
-          and exists (
-            select 1 from lineitem l
-            where l.l_orderkey = o.o_orderkey
-              and l.l_shipdate > o.o_orderdate
-          )
-        group by o_orderpriority
-    """,
-    "shipping_priority": """
-        select o.o_orderkey, strftime(o.o_orderdate, '%Y-%m-%d') as orderdate,
-               o.o_orderpriority,
-               cast(sum(cast(floor(l.l_extendedprice * (1 - l.l_discount) * 100)
-                        as bigint)) as bigint) as revenue_cents
-        from customer c
-        join orders o on o.o_custkey = c.c_custkey
-        join lineitem l on l.l_orderkey = o.o_orderkey
-        where c.c_mktsegment = 'BUILDING'
-          and o.o_orderdate < timestamp '2000-01-01'
-          and l.l_shipdate > timestamp '2000-01-01'
-        group by o.o_orderkey, o.o_orderdate, o.o_orderpriority
-        order by revenue_cents desc, o.o_orderkey asc
-        limit 10
-    """,
-    "regional_revenue": """
-        select n.n_name,
-               cast(sum(cast(floor(l.l_extendedprice * (1 - l.l_discount)
-                                   * 100) as bigint)) as bigint)
-                 as revenue_cents
-        from customer c
-        join orders o on o.o_custkey = c.c_custkey
-        join lineitem l on l.l_orderkey = o.o_orderkey
-        join supplier s on l.l_suppkey = s.s_suppkey
-                       and c.c_nationkey = s.s_nationkey
-        join nation n on s.s_nationkey = n.n_nationkey
-        join region r on n.n_regionkey = r.r_regionkey
-        where r.r_name = 'ASIA'
-          and o.o_orderdate >= timestamp '1996-01-01'
-          and o.o_orderdate < timestamp '1997-01-01'
-        group by n.n_name
-    """,
     "json_extract": """
         select event_id, cast(props->>'k' as bigint) as k_val from events
     """,
@@ -4394,66 +3696,12 @@ ORACLES = {
         where cast(concat('0x', substr(md5('mix|' || cast(d.doc_id as varchar)), 1, 8))
                    as bigint) % 1000000 < r.rate_micro
     """,
-    "trap_detect": """
-        with u as (
-          select source as host,
-                 case when doc_id % 3 = 0
-                      then '/CAL/' || cast(doc_id % 12 as varchar) || '/'
-                           || cast(doc_id % 31 as varchar)
-                           || '?sid=' || cast(doc_id as varchar)
-                      else '/about' || cast(doc_id as varchar) end as url
-          from documents
-        ), t as (
-          select host,
-                 regexp_replace(
-                   regexp_replace(lower(url), '[?#].*$', ''),
-                   '[0-9]+', '#', 'g') as tmpl
-          from u
-        ), g as (
-          select host, tmpl, count(*) as cnt from t group by 1, 2
-        ), win as (
-          select host, tmpl, cnt,
-                 row_number() over (partition by host
-                                    order by cnt desc, tmpl asc) as rn,
-                 sum(cnt) over (partition by host) as n_urls,
-                 count(*) over (partition by host) as n_templates
-          from g
-        )
-        select host,
-               cast(n_urls as bigint) as n_urls,
-               cast(n_templates as bigint) as n_templates,
-               cast(floor(n_urls * 1000000.0 / n_templates) as bigint)
-                 as urls_per_template_micro,
-               tmpl as top_template,
-               cast(floor(cnt * 1000000.0 / n_urls) as bigint)
-                 as top_share_micro
-        from win where rn = 1
-    """,
-    "sitemap_parse": """
-        -- closed-form rebuild of both entries per doc; the parser's
-        -- trim and default-priority behavior is part of the contract.
-        select '/s/' || cast(doc_id as varchar) as url,
-               '2026-01-' || lpad(cast(doc_id % 28 + 1 as varchar), 2, '0')
-                 as lastmod,
-               cast((doc_id % 10) * 100000 as bigint) as priority_micro
-        from documents
-        union all
-        select '/s/' || cast(doc_id + 5000000 as varchar),
-               '', cast(500000 as bigint)
-        from documents
-    """,
     "redirect_resolve": """
         select doc_id as src,
                cast(doc_id - (doc_id % 8) as bigint) as final,
                false as is_cycle
         from documents
         where doc_id % 8 != 0
-    """,
-    "dedup_exact_stream": r"""
-        select md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) as fp,
-               cast(min(doc_id) as bigint) as doc_id
-        from documents
-        group by 1
     """,
     "anchor_text": """
         -- closed-form: rebuild the link pairs from the same doc_id
@@ -4786,38 +4034,6 @@ ORACLES = {
                cast(len(str_split(r, '<PHONE>')) - 1 as bigint) as n_phone
         from red
     """,
-    "events_window_stream": """
-        select cast(floor(epoch(ts) / 300) * 300 as bigint) as win_start_s,
-               event_type,
-               count(*) as n_events,
-               cast(sum(cast(floor(value * 100) as bigint)) as bigint)
-                 as sum_value_cents
-        from events
-        group by 1, 2
-    """,
-    "sessionize": """
-        with e as (
-          -- floor, not cast: DuckDB's double->bigint cast rounds while
-          -- Spark's unix_timestamp truncates sub-second fractions
-          select user_id, event_id as eid, cast(floor(epoch(ts)) as bigint) as s
-          from events
-        ),
-        m as (
-          select user_id, eid, s,
-                 case when lag(s) over w is null or s - lag(s) over w > 21600
-                      then 1 else 0 end as brk
-          from e window w as (partition by user_id order by s, eid)
-        ),
-        g as (
-          select user_id, s,
-                 sum(brk) over (partition by user_id order by s, eid
-                                rows unbounded preceding) as session_no
-          from m
-        )
-        select user_id, cast(session_no as bigint) as session_no,
-               count(*) as n_events, min(s) as start_s, max(s) as end_s
-        from g group by user_id, session_no
-    """,
     "repetition_scores": """
         with toks as (select doc_id, string_split(text, ' ') as t from documents),
         g2 as (
@@ -4919,68 +4135,8 @@ ORACLES = {
     "dup_substrings": _dup_substrings_oracle(k=20, w=4, min_shared=5, max_df=200),
     "substring_scrub": _substring_scrub_oracle(k=20, w=4, min_shared=5, max_df=200),
     "scrub_apply": _scrub_apply_oracle(),
-    "audio_resample": """
-        -- payload closed-form in doc_id: sr = 8000 + (doc_id%5)*2000,
-        -- ns = 1000 + doc_id%500; resample to 16 kHz rescales
-        -- n_samples by integer ratio, duration from the new header
-        with m as (
-          select doc_id,
-                 8000 + (doc_id % 5) * 2000 as sr,
-                 1000 + doc_id % 500 as ns
-          from documents
-        )
-        select doc_id,
-               cast(16000 as int) as sample_rate,
-               cast((ns * 16000) // sr as bigint) as n_samples,
-               cast(((ns * 16000) // sr) * 1000 // 16000 as bigint) as duration_ms
-        from m
-    """,
-    "frame_sample": """
-        -- payload is closed-form in doc_id (fake_image header 16 bytes +
-        -- min(64, w*h) body; w,h >= 32 so the body is always 64 bytes ->
-        -- 80 total, 5 frames of 16 bytes, every_n=2 samples frames 0,2,4)
-        with m as (
-          select doc_id,
-                 16 + least(64, (32 + doc_id % 64) * (32 + doc_id % 48)) as n_bytes
-          from documents
-        )
-        select doc_id as media_id,
-               cast((n_bytes // 16 + 1) // 2 as bigint) as n_frames,
-               cast(((n_bytes // 16 + 1) // 2) * 16 as bigint) as frame_bytes
-        from m
-    """,
-    "multimodal_decode": """
-        select doc_id,
-               cast(32 + doc_id % 64 as int) as width,
-               cast(32 + doc_id % 48 as int) as height,
-               cast(16 + least(64, (32 + doc_id % 64) * (32 + doc_id % 48))
-                    as bigint) as n_bytes
-        from documents
-    """,
-    "image_dedup": """
-        with base as (
-          select doc_id,
-                 32 + doc_id % 64 as w,
-                 32 + doc_id % 48 as h
-          from documents
-        ), hs as (
-          select doc_id,
-                 printf('%016x', cast(list_aggregate(list_transform(
-                   range(0, 63), i ->
-                     case when (w * 31 + h * 17 + i) % 251
-                            < (w * 31 + h * 17 + i + 1) % 251
-                          then 1::bigint << (62 - i)
-                          else 0::bigint end), 'sum') as bigint)) as dhash
-          from base
-        )
-        select doc_id, dhash,
-               doc_id = min(doc_id) over (partition by dhash) as keep
-        from hs
-    """,
 }
 
-# The streaming revisit twin must reproduce the batch kernel
-# row-for-row — it shares the batch row's oracle verbatim.
 from .functions.textops import MOJIBAKE_PATTERN as _MOJI_PAT
 
 ORACLES["bpe_pair_counts"] = r"""
@@ -6029,7 +5185,6 @@ ORACLES["script_detect"] = """
     from c
 """
 
-ORACLES["revisit_stream"] = ORACLES["revisit_records"]
 
 # Full-probe LSH k-NN join == exact batch k-NN join (every bucket
 # probed; one bucket per corpus row), so it shares knn_join's oracle.
@@ -6563,54 +5718,6 @@ ORACLES["registered_domain"] = f"""
 """
 
 
-ORACLES["feed_parse"] = r"""
-    with hosts as (
-      select distinct doc_id % 97 as hid from documents
-    ), bodies as (
-      select hid,
-        case when hid % 2 = 0 then
-          '<rss><channel>' || array_to_string(
-            list_transform(generate_series(0, cast(hid % 3 as int)),
-              j -> '<item><title>Post ' || j || ' on h' || hid
-                   || '</title><link>http://h' || hid || '.example/post/'
-                   || j || '</link><pubDate>0' || (j + 1)
-                   || ' Jan 2026 00:00:00 GMT</pubDate></item>'), '')
-          || '</channel></rss>'
-        else
-          '<feed xmlns="http://www.w3.org/2005/Atom">' || array_to_string(
-            list_transform(generate_series(0, cast(hid % 3 as int)),
-              j -> '<entry><title>Post ' || j || ' on h' || hid
-                   || '</title><link href="http://h' || hid
-                   || '.example/post/' || j || '"/><updated>2026-01-0'
-                   || (j + 1) || 'T00:00:00Z</updated></entry>'), '')
-          || '</feed>'
-        end as xml
-      from hosts
-    ), rss as (
-      select unnest(regexp_extract_all(xml, '(?s)<item>(.*?)</item>', 1)) as b,
-             'rss' as kind
-      from bodies where hid % 2 = 0
-    ), atom as (
-      select unnest(regexp_extract_all(xml, '(?s)<entry>(.*?)</entry>', 1)) as b,
-             'atom' as kind
-      from bodies where hid % 2 = 1
-    ), blocks as (
-      select b, kind,
-             case when kind = 'rss'
-                  then regexp_extract(b, '<link>\s*([^<\s][^<]*?)\s*</link>', 1)
-                  else regexp_extract(b, '<link[^>]*href="([^"]+)"', 1)
-             end as url,
-             regexp_extract(b, '(?s)<title>\s*(.*?)\s*</title>', 1) as title,
-             case when kind = 'rss'
-                  then regexp_extract(b, '<pubDate>\s*([^<]+?)\s*</pubDate>', 1)
-                  else regexp_extract(b, '<updated>\s*([^<]+?)\s*</updated>', 1)
-             end as published
-      from (select b, kind from rss union all select b, kind from atom)
-    )
-    select url, title, published, kind from blocks where url <> ''
-"""
-
-
 ORACLES["domain_split"] = f"""
     with d as (
       select doc_id, doc_id % 97 as hid from documents
@@ -6716,50 +5823,6 @@ ORACLES["shard_shuffle"] = r"""
     from b
 """
 
-ORACLES["url_features"] = r"""
-    with u as (
-      select doc_id,
-             'https://' || case when doc_id % 4 = 0 then 'www.' else '' end
-             || source || '.example.com' ||
-             case
-               when doc_id % 5 = 0 then '/track/' || cast(doc_id * 7919 as varchar)
-                    || '/x?sid=' || cast(doc_id as varchar) || '&ref=aff&a=1&b=2'
-               when doc_id % 5 = 1 then '/a/b/c/d/e/f/g/h/i/item'
-                    || cast(doc_id as varchar)
-               when doc_id % 5 = 2 then '/p%20q/doc' || cast(doc_id as varchar)
-                    || '?x=' || cast(doc_id % 7 as varchar)
-               else '/articles/item' || cast(doc_id as varchar)
-             end as url
-      from documents
-    ), f as (
-      select doc_id, url,
-             length(url) as url_len,
-             regexp_extract(url, '^[a-z]+://([^/?#]+)', 1) as host,
-             regexp_extract(url, '^[a-z]+://[^/?#]+([^?#]*)', 1) as path,
-             regexp_extract(url, '\?([^#]*)', 1) as query
-      from u
-    ), g as (
-      select doc_id, url,
-             cast(url_len as bigint) as url_len,
-             cast(length(path) - length(replace(path, '/', '')) as bigint)
-               as path_depth,
-             cast(case when query = '' then 0
-                  else length(query) - length(replace(query, '&', '')) + 1
-                  end as bigint) as n_query_params,
-             cast(floor((url_len - length(regexp_replace(url, '[0-9]', '', 'g')))
-                        * 1000000.0 / url_len) as bigint) as digit_ppm,
-             cast(length(url) - length(replace(url, '%', '')) as bigint)
-               as pct_encoded,
-             cast(greatest(length(host) - length(replace(host, '.', '')) - 1, 0)
-                  as bigint) as n_subdomains
-      from f
-    )
-    select doc_id, url, url_len, path_depth, n_query_params, digit_ppm,
-           pct_encoded, n_subdomains,
-           (url_len > 120 or digit_ppm > 300000 or n_query_params > 3
-            or path_depth > 8) as url_spam
-    from g
-"""
 
 ORACLES["link_spam"] = r"""
     with e0 as (
@@ -6836,42 +5899,6 @@ ORACLES["readability"] = r"""
     from f
 """
 
-ORACLES["url_param_dedup"] = r"""
-    with u as (
-      select doc_id,
-             'https://' || source || '.example.com/p/'
-             || cast(doc_id % 25 as varchar) ||
-             case
-               when doc_id % 3 = 0 then '?utm_source=feed&id='
-                    || cast(doc_id % 2 as varchar)
-                    || '&utm_campaign=c' || cast(doc_id % 5 as varchar)
-               when doc_id % 3 = 1 then '?id=' || cast(doc_id % 2 as varchar)
-                    || '&gclid=g' || cast(doc_id as varchar)
-               else '' end as url
-      from documents
-    ), c as (
-      select doc_id, url,
-             regexp_replace(url, '\?.*$', '') as base,
-             list_sort(list_filter(
-               string_split(regexp_extract(url, '\?(.*)', 1), '&'),
-               p -> p <> '' and not starts_with(p, 'utm_')
-                    and not starts_with(p, 'gclid=')
-                    and not starts_with(p, 'fbclid=')
-                    and not starts_with(p, 'msclkid='))) as kept
-      from u
-    ), k as (
-      select doc_id, url,
-             base || case when len(kept) > 0
-                          then '?' || array_to_string(kept, '&')
-                          else '' end as url_canon
-      from c
-    )
-    select url_canon,
-           cast(count(*) as bigint) as n_urls,
-           cast(count(distinct url) as bigint) as n_distinct_raw,
-           cast(min(doc_id) as bigint) as keep_id
-    from k group by url_canon
-"""
 
 ORACLES["html_meta"] = r"""
     with u as (
@@ -7024,44 +6051,6 @@ ORACLES["intradoc_dedup"] = r"""
     from firsts group by doc_id
 """
 
-ORACLES["mime_sniff"] = r"""
-    with u as (
-      select doc_id,
-             (case doc_id % 9
-                when 0 then '89504E47'
-                when 1 then 'FFD8FFE0'
-                when 2 then '474946383961'
-                when 3 then '25504446'
-                when 4 then '1F8B'
-                when 5 then '524946460100000057415645'
-                when 6 then '3C21444F4354595045'
-                when 7 then '524946460100000057454250'
-                else '00FFEE' end)
-             || lpad(hex(doc_id % 251), 2, '0') as hx
-      from documents
-    )
-    select doc_id,
-           case
-             when starts_with(hx, '89504E47') then 'image/png'
-             when starts_with(hx, 'FFD8FF') then 'image/jpeg'
-             when starts_with(hx, '47494638') then 'image/gif'
-             when starts_with(hx, '25504446') then 'application/pdf'
-             when starts_with(hx, '1F8B') then 'application/gzip'
-             when starts_with(hx, '504B0304') then 'application/zip'
-             when starts_with(hx, '3C21444F43545950') then 'text/html'
-             when starts_with(hx, '3C68746D6C') then 'text/html'
-             when starts_with(hx, '3C48544D4C') then 'text/html'
-             when starts_with(hx, '52494646')
-                  and substring(hx, 17, 8) = '57415645' then 'audio/wav'
-             when starts_with(hx, '52494646')
-                  and substring(hx, 17, 8) = '57454250' then 'image/webp'
-             when starts_with(hx, '52494646')
-                  and substring(hx, 17, 8) = '41564920'
-                  then 'video/x-msvideo'
-             else 'application/octet-stream'
-           end as mime
-    from u
-"""
 
 ORACLES["mirror_hosts"] = r"""
     with syn as (

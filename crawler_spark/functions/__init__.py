@@ -1,10 +1,17 @@
 """Training-data pipeline operators (web-scale corpus processing).
 
 Beyond the reference's crawl operators, a 100 TB training-data pipeline
-needs dedup / similarity / text-analysis / multimodal stages.  All hot
-paths are built-in Spark SQL expressions (JVM, codegen); Python appears
-only as Arrow-batched pandas UDFs where Spark lacks the primitive
-(simhash bit-banging, winnowing, embedding batch math).
+needs dedup / text-analysis / link-graph stages.  The modules an entry
+point (``main.py`` or ``examples/``) uses: ``dedup``, ``textops``,
+``graph`` and ``hoststats`` by the corpus build, ``graph`` and
+``anchors`` by the trust and focused crawls, ``sketches`` by the crawl
+monitor.  ``similarity``, ``snapshots``, ``hreflang`` and ``dates`` are
+reached only from the contract rows and tests; ``tests/test_package.py``
+walks the imports and names exactly these four, so one that gains a
+caller or is deleted must leave that list.  All hot paths are built-in
+Spark SQL expressions (JVM, codegen); Python appears only as
+Arrow-batched pandas UDFs where Spark lacks the primitive (simhash
+bit-banging, winnowing, embedding batch math).
 """
 
 from pyspark.sql import DataFrame

@@ -167,11 +167,13 @@ def count_min_estimate(sketch: DataFrame, probes: DataFrame,
                        term_col: str = "term") -> DataFrame:
     """Point-estimate each probe term from a built sketch: est =
     min over the d rows of the term's bucket counter.  Adds
-    ``cm_est``; missing counters (bucket never hit) count 0.  The
+    ``cm_est`` to every probe row; missing counters (bucket never hit)
+    and null terms count 0.  Only the term column enters the probe
+    explode, so the probe frame may carry any other columns.  The
     sketch side is 256 rows — broadcast by size automatically."""
     t = F.col(term_col).cast("string")
     keyed = probes.select(
-        "*",
+        term_col,
         F.explode(
             F.array(
                 *[
@@ -182,10 +184,13 @@ def count_min_estimate(sketch: DataFrame, probes: DataFrame,
                 ]
             )
         ).alias("rb"),
-    ).select("*", F.col("rb.r").alias("r"), F.col("rb.b").alias("b"))
+    ).select(term_col, F.col("rb.r").alias("r"), F.col("rb.b").alias("b"))
     est = (
         keyed.join(F.broadcast(sketch), ["r", "b"], "left")
         .groupBy(term_col)
         .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).alias("cm_est"))
     )
-    return probes.join(est, term_col)
+    # left join: a null term matches no estimate row and gets 0
+    return probes.join(est, term_col, "left").withColumn(
+        "cm_est", F.coalesce(F.col("cm_est"), F.lit(0))
+    )

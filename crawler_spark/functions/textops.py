@@ -2299,7 +2299,7 @@ def main_content(
 # --------------------------------------------- Unicode script detection
 #: (name, Java-regex char class) — Spark side.  The DuckDB oracle uses
 #: RE2's \x{...} syntax for the same ranges (its own regex dialect,
-#: same semantics — the feed_parse precedent).
+#: same semantics).
 SCRIPT_CLASSES = (
     ("latin", "[A-Za-z\u00c0-\u024f]"),
     ("cyrillic", "[\u0400-\u04ff]"),
@@ -2457,9 +2457,8 @@ def html_meta(
     The generic twin of the reference's per-rule field extraction
     (rule.go parseBookDetail pulls 7 named fields with one regex each;
     reference/testhtml golden pages): title for display/title-dedup,
-    meta description for snippets, rel=canonical for the URL-collapse
-    stage (feeds urlfeat.url_param_dedup's canonical pick), and the
-    html lang attribute as a language-ID prior.  Single-grammar
+    meta description for snippets, rel=canonical for URL collapse, and
+    the html lang attribute as a language-ID prior.  Single-grammar
     attribute regexes (name-before-content, double quotes) — the
     DOM-accurate extractor is a mapInPandas swap-in at the same call
     site, the same seam main_content documents.
@@ -2497,8 +2496,8 @@ def img_alt_pairs(
     least ``min_alt_chars`` visible characters.
 
     The LAION-style pairing step: alt text is the caption supervision
-    for image-text training, and this op feeds the multimodal column
-    plumbing (multimodal.decode_image consumes the fetched src bytes).
+    for image-text training; a downstream image fetch consumes the src
+    urls.
     Tag-level extraction with per-tag attribute regexes, so attribute
     ORDER within the tag doesn't matter; pairs with empty src or
     too-short alt are dropped (the classic LAION length filter).

@@ -1,6 +1,6 @@
 """Vectorized parse kernels P1-P8 (SURVEY.md §2.3).
 
-Three implementations of the same semantics, cross-validated in tests:
+Two implementations of the same semantics, cross-validated in tests:
 
 1. **SQL-expression kernels** (`apply_rule_sql` for one rule;
    `dispatch_cols` compiles the whole registry into one CASE projection
@@ -9,12 +9,9 @@ Three implementations of the same semantics, cross-validated in tests:
    codegen; no Python in the loop at all.  Java regex and Go RE2 agree
    on every pattern the rule registry uses (leftmost-first, lazy
    quantifiers, [\\s\\S] classes) — asserted by the golden tests.
-2. **pandas-UDF kernels** (`apply_rule_pandas`) — Arrow-batched Python
-   `re`, for patterns that ever exceed Java regex and as the
-   differential-testing twin.
-3. **pure-Python kernels** (`parse_*_py`) — shared by the pandas UDFs and
-   the single-worker oracle (oracle.py), so the oracle and the cluster
-   path literally run the same code per row.
+2. **pure-Python kernels** (`parse_*_py`) — the single-worker oracle
+   (oracle.py) runs these per row; the golden and equivalence tests
+   hold the SQL kernels to them.
 
 Reference parity notes:
 - link extraction = Go FindAllSubmatch loop (douban_group.go:47-57,
@@ -29,12 +26,9 @@ Reference parity notes:
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .rules import FieldsRule, LinkRule, MatchRule, Rule
 
@@ -271,7 +265,7 @@ def dispatch_cols(tasks, body_col: str = "body") -> dict[str, Column]:
 
 
 # =====================================================================
-# 3. pure-Python kernels (shared by pandas UDFs + the oracle)
+# 2. pure-Python kernels (the oracle's per-row parse)
 # =====================================================================
 
 def parse_links_py(
@@ -310,44 +304,3 @@ def parse_fields_py(
         v = m.group(f.group) if m else ""
         data[f.name] = _atoi_str(v) if f.as_int else v
     return data
-
-
-# =====================================================================
-# 2. pandas-UDF kernels (Arrow batches; differential twin / fallback)
-# =====================================================================
-
-def apply_rule_pandas(df: DataFrame, rule: Rule, body_col: str = "body") -> DataFrame:
-    """Same contract as apply_rule_sql, computed via mapInPandas."""
-    out_schema = T.StructType.fromDDL(
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
-        + ", links array<struct<link_url:string,link_title:string>>"
-        + ", data map<string,string>, emit boolean"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            links: list | None = [None] * n
-            data: list | None = [None] * n
-            emit = [False] * n
-            if isinstance(rule, LinkRule):
-                links = [
-                    [
-                        {"link_url": u, "link_title": t}
-                        for u, t in parse_links_py(b or "", rule, pu)
-                    ]
-                    for b, pu in zip(pdf[body_col], pdf["url"])
-                ]
-            elif isinstance(rule, MatchRule):
-                emit = [parse_match_py(b or "", rule) for b in pdf[body_col]]
-            elif isinstance(rule, FieldsRule):
-                data = [
-                    parse_fields_py(b or "", rule, t)
-                    for b, t in zip(pdf[body_col], pdf["tmp"])
-                ]
-                emit = [True] * n
-            pdf = pdf.copy()
-            pdf["links"], pdf["data"], pdf["emit"] = links, data, emit
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)

@@ -36,6 +36,17 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 
+def _stage(df, counts: dict, name: str):
+    """Compute one gate's survivors once and count them.  The eager
+    local checkpoint cuts the lineage, so the next gate, its count and
+    the final write read these rows instead of re-running every gate
+    before them.  Spark's context cleaner frees the blocks once the frame
+    is garbage-collected."""
+    df = df.localCheckpoint(eager=True)
+    counts[name] = df.count()
+    return df
+
+
 def build(spark, docs, budget_tokens: int, n_shards: int,
           host_col: str = "source"):
     """Run the funnel; returns (final DataFrame, per-stage counts)."""
@@ -45,7 +56,7 @@ def build(spark, docs, budget_tokens: int, n_shards: int,
 
     moji = textops.mojibake_stats(docs).where(~F.col("is_mojibake"))
     docs = docs.join(moji.select("doc_id"), "doc_id", "left_semi")
-    counts["encoding_gate"] = docs.count()
+    docs = _stage(docs, counts, "encoding_gate")
 
     # normalize AFTER the encoding gate (mojibake wants raw text) and
     # BEFORE anything fingerprint-based: typographic variants must not
@@ -58,24 +69,24 @@ def build(spark, docs, budget_tokens: int, n_shards: int,
         docs.withColumn("__title", F.lit("")), title_col="__title"
     ).where(~F.col("is_soft404"))
     docs = docs.join(s404.select("doc_id"), "doc_id", "left_semi")
-    counts["soft404_gate"] = docs.count()
+    docs = _stage(docs, counts, "soft404_gate")
 
     bad = textops.badwords_stats(docs).where(~F.col("is_flagged"))
     docs = docs.join(bad.select("doc_id"), "doc_id", "left_semi")
-    counts["badwords_gate"] = docs.count()
+    docs = _stage(docs, counts, "badwords_gate")
 
     quality = textops.quality_features(docs).where(F.col("keep"))
     docs = docs.join(quality.select("doc_id"), "doc_id", "left_semi")
-    counts["quality_gate"] = docs.count()
+    docs = _stage(docs, counts, "quality_gate")
 
     gopher = textops.gopher_quality(docs).where(F.col("keep"))
     docs = docs.join(gopher.select("doc_id"), "doc_id", "left_semi")
-    counts["gopher_gate"] = docs.count()
+    docs = _stage(docs, counts, "gopher_gate")
 
     docs = dedup.dedup_exact(docs, "doc_id").where(~F.col("is_dup")).drop(
         "fp", "is_dup"
     )
-    counts["exact_dedup"] = docs.count()
+    docs = _stage(docs, counts, "exact_dedup")
 
     pairs = dedup.minhash_lsh_dedup(docs, "doc_id").select(
         F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
@@ -85,7 +96,7 @@ def build(spark, docs, budget_tokens: int, n_shards: int,
         F.col("node").alias("doc_id")
     )
     docs = docs.join(losers, "doc_id", "left_anti")
-    counts["near_dedup"] = docs.count()
+    docs = _stage(docs, counts, "near_dedup")
 
     scored = quality.select(
         "doc_id",
@@ -96,12 +107,11 @@ def build(spark, docs, budget_tokens: int, n_shards: int,
         F.col("kept")
     )
     docs = docs.join(kept.select("doc_id"), "doc_id", "left_semi")
-    counts["token_budget"] = docs.count()
+    docs = _stage(docs, counts, "token_budget")
 
     docs = hoststats.domain_split(docs, host_col=host_col)
     sharded = textops.assign_shards(docs.select("doc_id"), n_shards)
-    out = docs.join(sharded, "doc_id")
-    counts["output"] = out.count()
+    out = _stage(docs.join(sharded, "doc_id"), counts, "output")
     return out, counts
 
 

@@ -148,17 +148,7 @@ def main() -> None:
         explain_str(QUERIES["winnow_fingerprints"](spark, "/root/testdata/sf0.001")),
     ))
 
-    # 8. relational surface: broadcast join chain + top-k
-    sections.append((
-        "shipping_priority (TPC-H Q3 shape)",
-        "MUST: BroadcastHashJoin chain (no SortMergeJoin at these dim "
-        "sizes), PushedFilters on all three parquet scans (date/date/"
-        "segment), global top-10 via TakeOrderedAndProject (no full "
-        "sort), money aggregated as per-row cents in int64.",
-        explain_str(QUERIES["shipping_priority"](spark, "/root/testdata/sf0.001")),
-    ))
-
-    # 9. decontamination: broadcast probe, corpus never shuffled pre-join
+    # 8. decontamination: broadcast probe, corpus never shuffled pre-join
     sections.append((
         "decontaminate (broadcast benchmark-shingle probe)",
         "Witness: the corpus branch reaches the join with no KEY shuffle —\n"
@@ -177,7 +167,7 @@ def main() -> None:
         explain_str(QUERIES["decontaminate"](spark, "/root/testdata/sf0.001")),
     ))
 
-    # 10. connected components (pointer jumping, checkpointed sweeps)
+    # 9. connected components (pointer jumping, checkpointed sweeps)
     sections.append((
         "dedup_clusters (connected components, pointer jumping)",
         "Per sweep, three joins materialized by one eager localCheckpoint job:\n"
@@ -191,7 +181,7 @@ def main() -> None:
         explain_str(QUERIES["dedup_clusters"](spark, "/root/testdata/sf0.001")),
     ))
 
-    # 11. blocklist: corpus-side shuffle-freedom
+    # 10. blocklist: corpus-side shuffle-freedom
     sections.append((
         "blocklist_filter (domain suffix match, corpus never shuffled)",
         "The 100 TB contract in hoststats.tag_blocked's docstring, witnessed:\n"
@@ -205,18 +195,7 @@ def main() -> None:
         explain_str(QUERIES["blocklist_filter"](spark, "/root/testdata/sf0.001")),
     ))
 
-    # 12. TPC-H Q5 shape
-    sections.append((
-        "regional_revenue (TPC-H Q5 shape)",
-        "Five-way join declared as plain `.join(...)`s: Catalyst puts region,\n"
-        "nation, supplier, and customer on broadcast build sides (the region\n"
-        "filter prunes the tree before any fact row moves) and AQE picks the\n"
-        "orders⋈lineitem strategy from runtime sizes.  Both fact scans carry\n"
-        "PushedFilters and pruned ReadSchema.",
-        explain_str(QUERIES["regional_revenue"](spark, "/root/testdata/sf0.001")),
-    ))
-
-    # 13. incremental minhash probe (O(batch) signature work)
+    # 11. incremental minhash probe (O(batch) signature work)
     sections.append((
         "dedup_incremental (LSH index probe, O(batch) signatures)",
         "MUST: probe and index band rows meet in ONE hash join keyed on\n"
@@ -230,7 +209,7 @@ def main() -> None:
         explain_str(QUERIES["dedup_incremental"](spark, "/root/testdata/sf0.001")),
     ))
 
-    # 14. substring scrub (positions kernel + interval merge)
+    # 12. substring scrub (positions kernel + interval merge)
     sections.append((
         "substring_scrub (winnow positions + gaps-and-islands merge)",
         "MUST: the linear mod-2^64 Arrow fingerprint pass (MapInPandas —\n"
@@ -246,7 +225,7 @@ def main() -> None:
         explain_str(QUERIES["substring_scrub"](spark, "/root/testdata/sf0.001")),
     ))
 
-    # 15. competitive LM language ID (train + score + argmax window)
+    # 13. competitive LM language ID (train + score + argmax window)
     sections.append((
         "lang_id_lm (per-language bigram LM, train/score/argmax)",
         "MUST: fully JVM-side (no Python stage anywhere — the bigram\n"

@@ -29,25 +29,3 @@ def test_anchor_summary_tie_breaks_lexicographic(spark):
     )
     row = anchors.anchor_summary(pairs).collect()[0]
     assert row.n_refs == 2 and row.top_anchor == "alpha"
-
-
-def test_trap_scores_flags_template_explosion(spark):
-    from crawler_spark.functions import traps
-
-    rows = (
-        # trap host: 90 calendar urls, one template
-        [("trap", f"/cal/2026/{m}/{d}") for m in range(1, 10) for d in range(1, 11)]
-        # healthy host: 10 distinct letter paths
-        + [("ok", f"/about/{c}" ) for c in "abcdefghij"]
-    )
-    out = {
-        r.host: r
-        for r in traps.trap_scores(
-            spark.createDataFrame(rows, "host string, url string")
-        ).collect()
-    }
-    t = out["trap"]
-    assert t.n_urls == 90 and t.n_templates == 1
-    assert t.top_template == "/cal/#/#/#" and t.top_share_micro == 1_000_000
-    ok = out["ok"]
-    assert ok.n_templates == 10 and ok.urls_per_template_micro == 1_000_000

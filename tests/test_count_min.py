@@ -62,3 +62,22 @@ def test_randomized_parity(spark):
         assert _spark_cm(spark, vals, probes) == _py_cm(
             vals, probes
         ), f"t={trial}"
+
+
+def test_estimate_keeps_extra_columns_and_null_terms(spark):
+    """A probe frame may carry columns named like the kernel's internal
+    ones (r, b, rb), and a null term is kept with cm_est 0."""
+    sk = sketches.count_min_sketch(
+        spark.createDataFrame([("a",), ("a",), ("b",)], "term string"), "term"
+    )
+    pr = spark.createDataFrame(
+        [("a", 1, 2, 3), ("b", 4, 5, 6), (None, 7, 8, 9)],
+        "term string, r int, b int, rb int",
+    )
+    got = sorted(
+        (x["term"] or "", x["r"], x["b"], x["rb"], x["cm_est"])
+        for x in sketches.count_min_estimate(sk, pr).collect()
+    )
+    want = _py_cm(["a", "a", "b"], ["a", "b"])
+    assert got == [("", 7, 8, 9, 0), ("a", 1, 2, 3, want["a"]),
+                   ("b", 4, 5, 6, want["b"])]

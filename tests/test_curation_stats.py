@@ -1,59 +1,16 @@
-"""Unit tests for the late-r4 curation-stat kernels: URL-shape
-features (urlfeat.url_features), link-farm detection
-(graph.link_spam_stats), and vocabulary stats (textops.vocab_stats).
+"""Unit tests for the late-r4 curation-stat kernels: link-farm
+detection (graph.link_spam_stats) and vocabulary stats
+(textops.vocab_stats).
 Contract-level oracle equivalence is covered by test_entry_contract;
 these pin the hand-checkable edge cases."""
 
 from __future__ import annotations
 
-from crawler_spark.functions import graph, textops, urlfeat
+from crawler_spark.functions import graph, textops
 
 
 def _rows(df, key):
     return {r[key]: r.asDict() for r in df.collect()}
-
-
-def test_url_features_clean_url(spark):
-    df = spark.createDataFrame(
-        [("https://www.news.example.com/articles/item7",)], ["url"]
-    )
-    r = urlfeat.url_features(df).collect()[0]
-    assert r.url_len == len("https://www.news.example.com/articles/item7")
-    assert r.path_depth == 2
-    assert r.n_query_params == 0  # no '?': empty query, not 1 param
-    assert r.pct_encoded == 0
-    assert r.n_subdomains == 2  # www.news + example + com -> 3 dots - 1
-    assert not r.url_spam
-
-
-def test_url_features_spam_axes(spark):
-    df = spark.createDataFrame(
-        [
-            # parameter farm: 4 params > 3
-            ("params", "https://a.com/x?sid=1&ref=2&a=3&b=4"),
-            # calendar depth: 9 segments > 8
-            ("depth", "https://a.com/a/b/c/d/e/f/g/h/i"),
-            # digit soup: > 30% digits
-            ("digits", "https://a.com/1234567890123456789"),
-            # long: > 120 chars
-            ("long", "https://a.com/" + "x" * 120),
-            # percent-encoding counted but not spam by itself
-            ("enc", "https://a.com/p%20q%3Dr"),
-        ],
-        ["name", "url"],
-    )
-    got = _rows(urlfeat.url_features(df), "name")
-    assert got["params"]["n_query_params"] == 4 and got["params"]["url_spam"]
-    assert got["depth"]["path_depth"] == 9 and got["depth"]["url_spam"]
-    assert got["digits"]["url_spam"]
-    assert got["long"]["url_spam"]
-    assert got["enc"]["pct_encoded"] == 2 and not got["enc"]["url_spam"]
-
-
-def test_url_features_dotless_host_floor(spark):
-    df = spark.createDataFrame([("https://localhost/x",)], ["url"])
-    r = urlfeat.url_features(df).collect()[0]
-    assert r.n_subdomains == 0  # greatest(-1, 0)
 
 
 def test_link_spam_stats_hand_graph(spark):
@@ -113,57 +70,6 @@ def test_readability_hand_computed(spark):
     assert r["reading_ease_milli"] == 102777
     assert got[2]["n_sentences"] == 1 and got[2]["n_syllables"] == 1
     assert got[3]["n_words"] == 0 and got[3]["fk_grade_milli"] == -15200
-
-
-def test_url_param_dedup_collapse(spark):
-    from crawler_spark.functions import urlfeat
-
-    urls = spark.createDataFrame(
-        [
-            (1, "https://a.com/p?utm_source=x&id=1"),
-            (2, "https://a.com/p?id=1&gclid=g9"),
-            (3, "https://a.com/p?id=1"),
-            (4, "https://a.com/q?b=2&a=1"),
-            (5, "https://a.com/q?a=1&b=2"),   # order-only variant
-            (6, "https://a.com/r?utm_only=x"),  # all params stripped
-        ],
-        ["doc_id", "url"],
-    )
-    got = _rows(urlfeat.url_param_dedup(urls), "url_canon")
-    g = got["https://a.com/p?id=1"]
-    assert g["n_urls"] == 3 and g["n_distinct_raw"] == 3 and g["keep_id"] == 1
-    q = got["https://a.com/q?a=1&b=2"]
-    assert q["n_urls"] == 2 and q["n_distinct_raw"] == 2 and q["keep_id"] == 4
-    assert got["https://a.com/r"]["n_urls"] == 1  # bare base: no '?'
-
-
-def test_canonical_url_python_parity(spark):
-    """Kernel vs an independent pure-Python canonicalizer over a
-    generated matrix of param orderings, tracking mixes, empty queries,
-    and no-query URLs."""
-    from itertools import permutations
-
-    from crawler_spark.functions import urlfeat
-
-    def py_canon(url: str) -> str:
-        base, _, query = url.partition("?")
-        keep = sorted(
-            p for p in query.split("&")
-            if p and not p.startswith(("utm_", "gclid=", "fbclid=", "msclkid="))
-        )
-        return base + ("?" + "&".join(keep) if keep else "")
-
-    params = ["a=1", "b=2", "utm_source=x", "gclid=g1", "c=", "msclkid=m"]
-    urls = ["https://h.com/p", "https://h.com/p?", "https://h.com/p?utm_only=1"]
-    for r in (2, 3):
-        for combo in permutations(params, r):
-            urls.append("https://h.com/p?" + "&".join(combo))
-    df = spark.createDataFrame([(u,) for u in urls], ["url"])
-    got = df.select(
-        "url", urlfeat.canonical_url(df.url).alias("canon")
-    ).collect()
-    for row in got:
-        assert row.canon == py_canon(row.url), row.url
 
 
 def test_html_meta_extraction(spark):

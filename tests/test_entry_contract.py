@@ -17,10 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["events", "documents", "embeddings"]
 
 
 @pytest.fixture(scope="module")
@@ -38,7 +35,7 @@ def _dtype_kind(dtype) -> str:
     float 'f', datetime 'M', bool 'b', everything else 'O'.  The driver's
     hash is dtype-sensitive, so an oracle returning HUGEINT (-> float64
     in pandas) must FAIL locally even though the Python values are equal
-    (the r1/r2 per_source_agg / pricing_summary bug class)."""
+    (the r1/r2 per_source_agg bug class)."""
     k = getattr(dtype, "kind", "O")
     if k == "u":
         k = "i"

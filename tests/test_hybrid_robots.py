@@ -156,38 +156,6 @@ def test_registered_domain_scan_local(spark):
         assert bad not in plan
 
 
-def test_parse_feeds_both_grammars(spark):
-    from crawler_spark.functions.feeds import parse_feeds
-
-    rss = ("<rss><channel>"
-           "<item><title>A</title><link>http://h/a</link>"
-           "<pubDate>01 Jan 2026 00:00:00 GMT</pubDate></item>"
-           "<item><title>No link so dropped</title></item>"
-           "<item><link>http://h/c</link></item>"  # no title/date -> ''
-           "</channel></rss>")
-    atom = ('<feed><entry><title>Multi\nline</title>'
-            '<link rel="alternate" href="http://h/x"/>'
-            '<updated>2026-01-02T00:00:00Z</updated></entry></feed>')
-    df = spark.createDataFrame([(rss,), (atom,)], "xml string")
-    rows = sorted(parse_feeds(df).collect(), key=lambda r: r.url)
-    assert [(r.url, r.kind) for r in rows] == [
-        ("http://h/a", "rss"), ("http://h/c", "rss"), ("http://h/x", "atom")
-    ]
-    assert rows[0].title == "A" and rows[0].published == "01 Jan 2026 00:00:00 GMT"
-    # per-block pairing: the missing title/date land on THIS row, not a shift
-    assert rows[1].title == "" and rows[1].published == ""
-    assert rows[2].title == "Multi\nline"
-
-
-def test_parse_feeds_scan_local(spark):
-    from crawler_spark.functions.feeds import parse_feeds
-
-    df = spark.createDataFrame([("<rss/>",)], "xml string")
-    plan = parse_feeds(df)._jdf.queryExecution().executedPlan().toString()
-    for bad in ("Exchange", "BatchEvalPython", "ArrowEvalPython"):
-        assert bad not in plan
-
-
 def test_rank_by_budget_registered_domain_key(spark):
     from pyspark.sql import functions as F
 

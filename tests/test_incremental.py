@@ -128,52 +128,6 @@ def test_revisit_records_classification(spark):
     assert out[(2, 2)] == ("revisit", 0)
 
 
-def test_revisit_stream_equals_batch_kernel(spark, tmp_path):
-    """3 epoch-ordered micro-batches through the stateful streaming twin
-    == the batch window kernel row-for-row (revisits point at captures
-    from EARLIER batches, so cross-batch state is genuinely exercised;
-    url 2 reverts at epoch 2 to its epoch-0 digest)."""
-    from pyspark.sql import functions as F
-
-    from crawler_spark import streaming
-
-    fetches = spark.createDataFrame(
-        [
-            (1, 0, "d0"), (1, 1, "d0"), (1, 2, "d0"),
-            (2, 0, "a"), (2, 1, "b"), (2, 2, "a"),
-            (3, 0, "x"), (3, 1, "y"), (3, 2, "z"),
-        ],
-        "url_id long, epoch long, digest string",
-    )
-    src = str(tmp_path / "fetch_stream")
-    for e in range(3):  # one crawl snapshot per file, epoch-ordered names
-        fetches.where(F.col("epoch") == e).coalesce(1).write.parquet(
-            f"{src}/epoch{e}"
-        )
-    stream = (
-        spark.readStream.schema("url_id long, epoch long, digest string")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    got = {
-        tuple(r)
-        for r in streaming.run_to_memory(
-            streaming.revisit_stream(stream), "t_revisit_stream", mode="update"
-        ).collect()
-    }
-    want = {
-        tuple(r)
-        for r in snapshots.revisit_records(fetches)
-        .select("url_id", "epoch", "digest", "record_type", "refers_to_epoch")
-        .collect()
-    }
-    assert got == want
-    assert ("2", ) not in got  # shape sanity
-    assert (2, 2, "a", "revisit", 0) in got  # cross-batch revert case
-
-
 def test_revisit_saved_bytes_rollup(spark):
     """The archival win: payload bytes are only stored for responses."""
     fetches = spark.createDataFrame(

@@ -1,6 +1,6 @@
 """Parser kernels P1-P8: golden tests on the reference's own fixture
 pages (read live from /root/reference/testhtml — public test data, not
-copied into this repo) + SQL-vs-pandas-vs-pure-Python differential tests.
+copied into this repo) + SQL-vs-pure-Python differential tests.
 
 The pure-Python kernels use the exact reference regexes transcribed from
 parse/doubangroup/dobuan_book.go:63,93,124-129 and douban_group.go:39-40,
@@ -100,31 +100,6 @@ def test_sun_room_kernels(spark):
     assert parsers.parse_match_py(hit, m) and not parsers.parse_match_py(miss, m)
     assert _sql_one(spark, m, hit).emit
     assert not _sql_one(spark, m, miss).emit
-
-
-def test_pandas_kernel_matches_sql(spark, fixtures):
-    """Differential: mapInPandas kernels == SQL kernels on real fixtures."""
-    task = rules.douban_tasks()["douban_book_list"]
-    df = spark.createDataFrame(
-        [
-            ("https://book.douban.com", fixtures["index"], None),
-            ("https://book.douban.com/x", fixtures["index"] + "<!--v2-->", None),
-        ],
-        "url string, body string, tmp map<string,string>",
-    )
-    rule = task.rules["tag"]
-    a = parsers.apply_rule_sql(df, rule).select("url", "links").collect()
-    b = parsers.apply_rule_pandas(df, rule).select("url", "links").collect()
-    assert sorted(map(str, a)) == sorted(map(str, b))
-
-    rule = task.rules["book_detail"]
-    df2 = spark.createDataFrame(
-        [("u1", fixtures["detail"], {"book_name": "n"})],
-        "url string, body string, tmp map<string,string>",
-    )
-    a = parsers.apply_rule_sql(df2, rule).select("data").collect()[0].data
-    b = parsers.apply_rule_pandas(df2, rule).select("data").collect()[0].data
-    assert dict(a) == dict(b)
 
 
 def test_atoi_semantics():

@@ -1,9 +1,8 @@
-"""Third-engine randomized parity, part 2 — mime_sniff over random
-binary payloads, table_extract vs a Python regex mini-parser,
-hreflang_clusters vs a Python cluster/election reference, and
-soft404_detect vs a Python vote.  Same discipline as part 1: one
-seeded batch per kernel, plain-Python references independent of both
-Spark and the DuckDB oracles.
+"""Third-engine randomized parity, part 2 — table_extract vs a Python
+regex mini-parser, hreflang_clusters vs a Python cluster/election
+reference, and soft404_detect vs a Python vote.  Same discipline as
+part 1: one seeded batch per kernel, plain-Python references
+independent of both Spark and the DuckDB oracles.
 """
 
 from __future__ import annotations
@@ -15,44 +14,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from crawler_spark.functions import hreflang, multimodal, textops  # noqa: E402
-
-MAGICS = [
-    b"\x89PNG\r\n", b"\xff\xd8\xff\xe0", b"GIF89a", b"GIF87a",
-    b"%PDF-", b"\x1f\x8b\x08", b"PK\x03\x04", b"<!DOCTYPE html",
-    b"<html>", b"<HTML>", b"RIFF\x00\x00\x00\x00WAVE",
-    b"RIFF\x00\x00\x00\x00WEBP", b"RIFF\x00\x00\x00\x00AVI ",
-    b"RIFF\x00\x00\x00\x00JUNK", b"",
-]
-
-
-def _py_sniff(p: bytes) -> str:
-    head = p[:12].hex().upper()
-    table = multimodal.MAGIC_PREFIXES
-    for prefix, mime in table:
-        if head.startswith(prefix):
-            return mime
-    if head.startswith("52494646"):
-        for tag, mime in multimodal.RIFF_TAGS:
-            if head[16:24] == tag:
-                return mime
-    return "application/octet-stream"
-
-
-def test_mime_sniff_vs_python(spark):
-    rng = random.Random(7)
-    payloads = []
-    for _ in range(200):
-        body = bytes(rng.getrandbits(8) for _ in range(rng.randint(0, 30)))
-        payloads.append(rng.choice(MAGICS) + body)
-    df = spark.createDataFrame(
-        [(i, bytearray(p)) for i, p in enumerate(payloads)],
-        "doc_id long, content binary",
-    )
-    got = {r["doc_id"]: r["mime"]
-           for r in multimodal.sniff_mime(df).collect()}
-    for i, p in enumerate(payloads):
-        assert got[i] == _py_sniff(p), p[:16]
+from crawler_spark.functions import hreflang, textops  # noqa: E402
 
 
 def _py_tables(html):

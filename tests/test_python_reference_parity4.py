@@ -1,7 +1,6 @@
-"""Third-engine randomized parity, part 4 — url_features (pre-fetch
-URL admission gate) and readability_scores (Flesch-Kincaid milli
-fixed-point, where Python floats ARE IEEE doubles so floor() must
-agree bit-for-bit).
+"""Third-engine randomized parity, part 4 — readability_scores
+(Flesch-Kincaid milli fixed-point, where Python floats ARE IEEE
+doubles so floor() must agree bit-for-bit).
 """
 
 from __future__ import annotations
@@ -14,47 +13,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from crawler_spark.functions import textops, urlfeat  # noqa: E402
-
-
-def test_url_features_vs_python(spark):
-    rng = random.Random(15)
-    urls = []
-    for i in range(150):
-        sub = ".".join("s" for _ in range(rng.randint(0, 3)))
-        host = (sub + "." if sub else "") + f"ex{i % 7}.com"
-        depth = rng.randint(0, 10)
-        segs = "/".join(
-            rng.choice(["a", "2024", "item9", "x%20y", "p123456789"])
-            for _ in range(depth)
-        )
-        q = "&".join(
-            f"k{j}={rng.randint(0, 99)}" for j in range(rng.randint(0, 5))
-        )
-        url = f"https://{host}/{segs}" + (f"?{q}" if q else "")
-        urls.append((i, url))
-    df = spark.createDataFrame(urls, "doc_id long, url string")
-    got = {r["doc_id"]: r.asDict()
-           for r in urlfeat.url_features(df).collect()}
-    for i, url in urls:
-        host = re.match(r"^[a-z]+://([^/?#]+)", url).group(1)
-        pm = re.match(r"^[a-z]+://[^/?#]+([^?#]*)", url)
-        path = pm.group(1) if pm else ""
-        qm = re.search(r"\?([^#]*)", url)
-        query = qm.group(1) if qm else ""
-        n_params = 0 if query == "" else query.count("&") + 1
-        n_digits = sum(c.isdigit() and c.isascii() for c in url)
-        digit_ppm = n_digits * 1_000_000 // len(url)
-        g = got[i]
-        assert g["url_len"] == len(url)
-        assert g["path_depth"] == path.count("/"), url
-        assert g["n_query_params"] == n_params
-        assert g["digit_ppm"] == digit_ppm
-        assert g["pct_encoded"] == url.count("%")
-        assert g["n_subdomains"] == max(host.count(".") - 1, 0)
-        spam = (len(url) > 120 or digit_ppm > 300_000
-                or n_params > 3 or path.count("/") > 8)
-        assert g["url_spam"] == spam, url
+from crawler_spark.functions import textops  # noqa: E402
 
 
 def test_readability_vs_python(spark):

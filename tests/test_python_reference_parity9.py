@@ -1,8 +1,8 @@
 """Third-engine randomized parity, part 9 — the late-r4 debtor kernels
 the earlier parity parts did not reach: link-farm stats, Heaps-law
-vocab stats, tracking-param URL collapse, intra-document repeated-line
-removal, unicode normalization, structured-data typing, bitext pair
-mining, adaptive revisit scheduling, and focused-crawl scoring.  Same
+vocab stats, intra-document repeated-line removal, unicode
+normalization, structured-data typing, bitext pair mining, adaptive
+revisit scheduling, and focused-crawl scoring.  Same
 discipline as parts 1-8: one seeded batch per kernel, plain-Python
 references independent of both Spark and the DuckDB oracles.
 """
@@ -24,7 +24,6 @@ from crawler_spark.functions import (  # noqa: E402
     hreflang,
     snapshots,
     textops,
-    urlfeat,
 )
 
 
@@ -88,38 +87,6 @@ def test_vocab_stats_vs_python(spark):
                n_typ * 1_000_000 // n_tok, n_hap * 1_000_000 // n_typ)
         assert got[src] == exp, src
     assert set(got) == {s for s, c in by_src.items() if c}
-
-
-# ------------------------------------------------------ url_param_dedup
-def _py_canon(url: str) -> str:
-    base, _, query = url.partition("?")
-    keep = [p for p in query.split("&")
-            if p and not p.startswith(("utm_", "gclid=", "fbclid=",
-                                       "msclkid="))]
-    return base + ("?" + "&".join(sorted(keep)) if keep else "")
-
-
-def test_url_param_dedup_vs_python(spark):
-    rng = random.Random(13)
-    params = ["a=1", "b=2", "c=3", "utm_source=x", "utm_medium=y",
-              "gclid=zz", "fbclid=q", "msclkid=m"]
-    rows = []
-    for i in range(200):
-        base = f"https://site{i % 7}.io/p{i % 11}"
-        q = rng.sample(params, rng.randint(0, 4))
-        rng.shuffle(q)
-        rows.append((i, base + ("?" + "&".join(q) if q else "")))
-    df = spark.createDataFrame(rows, "doc_id long, url string")
-    got = {r["url_canon"]: (r["n_urls"], r["n_distinct_raw"], r["keep_id"])
-           for r in urlfeat.url_param_dedup(df).collect()}
-    groups: dict[str, list[tuple[int, str]]] = {}
-    for i, u in rows:
-        groups.setdefault(_py_canon(u), []).append((i, u))
-    assert set(got) == set(groups)
-    for canon, members in groups.items():
-        exp = (len(members), len({u for _, u in members}),
-               min(i for i, _ in members))
-        assert got[canon] == exp, canon
 
 
 # ------------------------------------------------------- intradoc dedup
