@@ -2,7 +2,7 @@
 
 ``entry`` runs the flagship scheduling-round query at sf0.001;
 ``queries``/``oracle_sql`` expose every SQL-checkable operator shape
-(crawl scheduling, dedup suite, text analysis, similarity search) —
+(crawl scheduling, dedup suite, text analysis, link graph) —
 see crawler_spark/entry_queries.py for the implementations and the
 mapping to SURVEY.md §2.
 """

@@ -254,10 +254,9 @@ def main() -> None:
         "crawl_full", "schedule_round", "politeness_rank", "dedup_anti_join",
         "dedup_exact", "dedup_minhash_lsh", "simhash_pairs", "dedup_containment",
         "fuzzy_dedup_e2e", "substring_scrub", "scrub_apply", "repetition_scores",
-        "knn_join", "knn_join_lsh", "ann_brute_topk", "semantic_dedup",
         "bm25_topk", "text_quality", "lang_id_lm", "html_extract",
         "token_budget", "winnow_counts_prod", "mirror_hosts", "site_template",
-        "cluster_keep_best", "cosine_neardup",
+        "cluster_keep_best",
     ]
     crawl_keys = [
         "rounds", "urls_scheduled", "wall_sec", "cores", "urls_per_sec",

@@ -344,50 +344,6 @@ def with_hot_shingle(
     )
 
 
-def clustered_embeddings(
-    spark,
-    n_clusters: int = 20,
-    per_cluster: int = 100,
-    dim: int = 32,
-    spread: float = 0.15,
-    seed: int = 1234,
-) -> DataFrame:
-    """Clustered-embedding corpus knob (VERDICT r2 #7): deterministic
-    unit vectors grouped around ``n_clusters`` random centers with
-    within-cluster noise ``spread``.  The driver's synthetic embeddings
-    are near-uniform on the sphere, where any high-recall LSH ball must
-    cover most buckets; real-world embedding corpora are clustered, and
-    this generator is what lets tests DEMONSTRATE the pruning (recall
-    >=0.9 from a probe ball covering <10% of buckets —
-    tests/test_similarity_lsh.py).
-
-    Returns (vec_id long, cluster int, embedding array<double>);
-    vec_id = cluster * per_cluster + member index."""
-    import numpy as np
-    import pandas as pd
-
-    rng = np.random.default_rng(seed)
-    centers = rng.standard_normal((n_clusters, dim))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    members = np.repeat(centers, per_cluster, axis=0)
-    # noise normalized by sqrt(dim) so ``spread`` IS the cluster's
-    # angular radius (radians, roughly), independent of dimensionality
-    members = members + (spread / np.sqrt(dim)) * rng.standard_normal(members.shape)
-    members /= np.linalg.norm(members, axis=1, keepdims=True)
-    pdf = pd.DataFrame(
-        {
-            "vec_id": np.arange(n_clusters * per_cluster, dtype=np.int64),
-            "cluster": np.repeat(
-                np.arange(n_clusters, dtype=np.int32), per_cluster
-            ),
-            "embedding": [row.tolist() for row in members],
-        }
-    )
-    return spark.createDataFrame(
-        pdf, "vec_id long, cluster int, embedding array<double>"
-    )
-
-
 def with_gbk_reencoding(df: DataFrame) -> DataFrame:
     """Re-encode a deterministic subset of topic/detail pages as GBK with
     a ``<meta charset="GBK">`` declaration in the first 1 KiB — the P11

@@ -82,7 +82,6 @@ class CrawlConfig:
     # F4 pre-filter: one long-lived IncrementalBloom in front of the
     # exact anti-join (False = the plain anti-join every round)
     use_bloom: bool = True
-    bloom_fpp: float = 0.01
     # a round probes the bloom only once the seen set has this many rows:
     # below it the bloom build costs more than the exact anti-join it
     # saves; production target is ~10^8+ per host-bucket
@@ -678,10 +677,7 @@ def run_crawl(
     else:
         state = bootstrap(spark, cat, cfg)
     # built empty: the first round that probes loads it from `seen`
-    bloom = (
-        IncrementalBloom(capacity=1 << 14, fpp=cfg.bloom_fpp)
-        if cfg.use_bloom else None
-    )
+    bloom = IncrementalBloom(capacity=1 << 14) if cfg.use_bloom else None
     # http fetch mode needs no pages table (and may have no pages_path)
     pages_prepared = (
         prepare_pages(spark.read.parquet(cfg.pages_path))

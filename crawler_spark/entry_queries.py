@@ -1,7 +1,7 @@
 """Driver-contract queries: each engine operator shape as an SQL-checkable
-query over the driver's parquet tables (documents/events/embeddings),
-plus the training-data pipeline ops.  Every Spark query here has a
-DuckDB twin in ORACLES (same column names, deterministic column types —
+query over the driver's parquet tables (documents/events), plus the
+training-data pipeline ops.  Every Spark query here has a DuckDB twin
+in ORACLES (same column names, deterministic column types —
 ints/strings/fixed-point only, never raw doubles).
 
 Mapping to SURVEY.md §2 operator inventory:
@@ -17,21 +17,15 @@ Mapping to SURVEY.md §2 operator inventory:
   per_source_agg     per-host metrics aggregation (K1 routing shape)
 plus training-data ops: text_quality, lang_id, fingerprint,
 repetition_scores, stratified_sample, dedup_exact, dedup_ngram_jaccard,
-dedup_minhash_lsh, simhash_pairs, winnow_fingerprints, ann_brute_topk,
-ann_lsh_topk, ann_ivf_topk, cosine_neardup, cosine_neardup_lsh,
+dedup_minhash_lsh, simhash_pairs, winnow_counts_prod, dup_substrings,
 pii_redact, line_dedup, sequence_pack, bigram_lm, warc_roundtrip,
 host_rank (fixed-point PageRank, unrolled-CTE oracle), dedup_clusters
 (connected components, recursive-CTE oracle), decontaminate (broadcast
-benchmark-shingle scrub), snapshot_diff (recrawl differencing),
-cdx_index (SURT archive key) — every query has a DuckDB oracle (the
-md5-slice hashing trick makes simhash / winnow reproducible; minhash
-uses the affine family over one md5-derived 32-bit base hash; the
-production winnow and dup_substrings kernels recompute their
-polynomial hashes in SQL; full-probe equivalence and a measured
-recall-1.0 probe ball make the pruned ANN paths brute-force-checkable;
-knn_join_lsh probes the full Hamming ball in its contract shape, so it
-is provably the exact batch join and shares its oracle — ZERO rows-only
-entries since r4).
+benchmark-shingle scrub), cdx_index (SURT archive key) — every query
+has a DuckDB oracle (the md5-slice hashing trick makes simhash
+reproducible; minhash uses the affine family over one md5-derived
+32-bit base hash; the production winnow and dup_substrings kernels
+recompute their polynomial hashes in SQL).
 """
 
 from __future__ import annotations
@@ -41,7 +35,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .functions import dedup, similarity, textops
+from .functions import dedup, textops
 
 
 def _tmp_dir(tag: str, sf_dir: str) -> str:
@@ -59,10 +53,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/events.parquet")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 # ------------------------------------------------------------ crawl shapes
@@ -393,41 +383,6 @@ def q_quality_infer(spark, sf_dir):
     return textops.infer_quality_perceptron(d, n_buckets=64, epochs=4)
 
 
-def q_kmeans_assign(spark, sf_dir):
-    """Fixed-point Lloyd's k-means over the embeddings table
-    (similarity.kmeans_fixed_point): 3 assignment passes / 2 centroid
-    recomputes at k=8 — the iterative-clustering core under SemDeDup /
-    IVF training, made engine-portable by keeping EVERY step integer
-    (grid-quantized points, exact integer centroid sums, floor-division
-    centroid grid, lowest-id tie-break) so distributed partial-sum
-    order cannot flip an assignment.  The oracle unrolls the identical
-    three iterations as CTEs in long (vec_id, dim) form — floor
-    division spelled with the posmod identity because DuckDB's ``//``
-    truncates toward zero while the kernel floors."""
-    return similarity.kmeans_fixed_point(
-        _emb(spark, sf_dir), k=8, iterations=3
-    )
-
-
-def q_semantic_dedup_trained(spark, sf_dir):
-    """SemDeDup END-TO-END with TRAINED clusters: kmeans_fixed_point
-    (the integer-exact Lloyd's, k=8, 3 iterations) supplies the cluster
-    assignment, similarity.semantic_pairs_within scores within-cluster
-    cosine pairs — the full Abbas et al. pipeline (cluster the
-    embedding space, then near-dup only inside a cluster) with no
-    given-centroid shortcut.  The oracle replays the identical three
-    Lloyd iterations as CTEs and then mirrors the double-cast /
-    unit-normalize / single-fold-dot pair pipeline of the
-    semantic_dedup oracle."""
-    from .functions import fan_out
-
-    e = fan_out(_emb(spark, sf_dir))
-    assign = similarity.kmeans_fixed_point(e, k=8, iterations=3)
-    return similarity.semantic_pairs_within(
-        e, assign, thresh_micro=400_000
-    )
-
-
 def q_warc_roundtrip(spark, sf_dir):
     """WARC source round-trip (sources/warc.py): the documents table is
     serialized into WARC/1.0 response records executor-side (one file
@@ -611,69 +566,6 @@ def q_decontaminate(spark, sf_dir):
     )
 
 
-def q_snapshot_diff(spark, sf_dir):
-    """Recrawl differencing (snapshots.snapshot_diff): snapshot B is a
-    deterministic perturbation of A (doc_id % 17 == 3 removed,
-    % 10 == 1 content-changed, % 13 == 5 re-added under a new url id);
-    the full-outer fingerprint join classifies added/removed/changed
-    and drops the unchanged majority."""
-    from .functions import snapshots
-
-    docs = _docs(spark, sf_dir)
-    old = docs.select(
-        F.col("doc_id").alias("url_id"), F.md5("text").alias("fp")
-    )
-    new = docs.where(F.col("doc_id") % 17 != 3).select(
-        F.col("doc_id").alias("url_id"),
-        F.when(
-            F.col("doc_id") % 10 == 1,
-            F.md5(F.concat(F.col("text"), F.lit("!"))),
-        ).otherwise(F.md5("text")).alias("fp"),
-    )
-    added = docs.where(F.col("doc_id") % 13 == 5).select(
-        (F.col("doc_id") + 10000000).alias("url_id"),
-        F.md5("text").alias("fp"),
-    )
-    return snapshots.snapshot_diff(
-        old, new.union(added), key_col="url_id"
-    ).select(F.col("url_id").cast("long").alias("url_id"), "status")
-
-
-def q_revisit_records(spark, sf_dir):
-    """WARC revisit-record classification (snapshots.revisit_records):
-    a 3-epoch fetch log is synthesized deterministically from the
-    documents table (content version flips at epoch 1 for doc_id%3==0,
-    again at epoch 2 for doc_id%4==1, and doc_id%5==2 REVERTS to the
-    original content at epoch 2 — exercising the revisit-to-a-non-
-    adjacent-capture case).  First capture of each (url, digest) is a
-    'response'; every later identical fetch is a 'revisit' pointing at
-    the original capture epoch.  One window over (url_id, digest)."""
-    from .functions import snapshots
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    f0 = docs.select(
-        F.col("doc_id").alias("url_id"),
-        "text",
-        F.explode(F.array(F.lit(0), F.lit(1), F.lit(2))).alias("epoch"),
-    )
-    v = (
-        F.when((F.col("url_id") % 5 == 2) & (F.col("epoch") == 2), F.lit(0))
-        .otherwise(
-            ((F.col("epoch") >= 1) & (F.col("url_id") % 3 == 0)).cast("int")
-            + ((F.col("epoch") == 2) & (F.col("url_id") % 4 == 1)).cast("int")
-        )
-    )
-    fetches = f0.select(
-        "url_id",
-        F.col("epoch").cast("long").alias("epoch"),
-        F.md5(F.concat(F.col("text"), F.lit("#"), v.cast("string"))).alias("digest"),
-    )
-    return snapshots.revisit_records(fetches).select(
-        "url_id", "epoch", "digest", "record_type",
-        F.col("refers_to_epoch").cast("long").alias("refers_to_epoch"),
-    )
-
-
 def q_cdx_index(spark, sf_dir):
     """CDX-style archive index (urlnorm.surt_col): urls are synthesized
     with mixed-case host + fragment so the row exercises the full
@@ -798,38 +690,6 @@ def q_mixture_sample(spark, sf_dir):
     return textops.sample_temperature(
         _docs(spark, sf_dir), target_frac_micro=100_000
     ).select("doc_id", "source")
-
-
-def q_recrawl_priority(spark, sf_dir):
-    """Change-rate recrawl scheduling (snapshots.recrawl_priority): an
-    8-epoch observation history is synthesized deterministically (url's
-    change probability = (doc_id % 10) * 10%, md5-bucket draw per
-    epoch), then the integer Cho&Garcia-Molina-shape estimator turns it
-    into a revisit interval and an overdue score.  All floor-division
-    fixed point — DuckDB replays the identical history and estimator."""
-    from .functions import snapshots
-
-    docs = _docs(spark, sf_dir).select("doc_id", "source")
-    hist = docs.select(
-        F.col("doc_id").alias("url_id"),
-        F.col("source").alias("host"),
-        F.explode(F.sequence(F.lit(1), F.lit(8))).alias("epoch"),
-    )
-    bucket = textops.hash_bucket_micro(
-        F.concat(
-            F.col("url_id").cast("string"),
-            F.lit(":"),
-            F.col("epoch").cast("string"),
-        ),
-        seed="recrawl",
-    )
-    hist = hist.withColumn(
-        "changed",
-        (bucket < (F.col("url_id") % 10) * 100_000).cast("int"),
-    )
-    return snapshots.recrawl_priority(hist, now_epoch=12).withColumnRenamed(
-        "interval", "revisit_interval"
-    )
 
 
 def q_host_reputation(spark, sf_dir):
@@ -1010,14 +870,6 @@ def q_scrub_apply(spark, sf_dir):
     )
 
 
-def q_winnow(spark, sf_dir):
-    """Winnowing counts, ORACLE TWIN: pure DataFrame ops with md5-slice
-    hashes so the DuckDB window-function oracle reproduces every pick.
-    Row-per-character explode — NOT the production path (that is
-    q_winnow_prod / textops.winnow_counts, the linear Arrow kernel)."""
-    return textops.winnow_counts_sql(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
 def q_winnow_prod(spark, sf_dir):
     """Winnowing counts, PRODUCTION default: linear rolling-hash Arrow
     kernel, O(doc length) with no row amplification (textops.
@@ -1027,123 +879,6 @@ def q_winnow_prod(spark, sf_dir):
     hash-match; pick-count equality with the pure-Python reference
     kernel is additionally asserted in tests/test_winnow.py."""
     return textops.winnow_counts(_docs(spark, sf_dir).select("doc_id", "text"))
-
-
-# ------------------------------------------------------------ similarity
-def _query_vec(spark, sf_dir) -> list[float]:
-    row = _emb(spark, sf_dir).where(F.col("vec_id") == 0).select("embedding").first()
-    return list(row.embedding)
-
-
-def q_ann_brute_topk(spark, sf_dir):
-    qv = _query_vec(spark, sf_dir)
-    return similarity.brute_topk(
-        _emb(spark, sf_dir), qv, k=10, exclude_id=0
-    ).select("vec_id")
-
-
-def q_ann_lsh_topk(spark, sf_dir):
-    """Multi-probe LSH top-k (8 planes, Hamming-<=4 probe ball).  On this
-    near-uniform synthetic corpus the ball is deterministically wide
-    enough for recall@10 = 1.0 at sf0.01/sf0.1 (asserted in
-    tests/test_similarity_lsh.py), so the brute-force SQL is an exact
-    oracle; clustered real embeddings prune far harder at the same
-    recall."""
-    qv = _query_vec(spark, sf_dir)
-    return similarity.ann_topk_lsh(
-        _emb(spark, sf_dir), qv, k=10, exclude_id=0, n_planes=8, max_hamming=4
-    ).select("vec_id")
-
-
-def q_ann_ivf_topk(spark, sf_dir):
-    """IVF with n_probe = n_centroids: probing every cell is provably
-    identical to brute force (each row is assigned to exactly one cell),
-    so the brute-force SQL is an exact oracle for the full machinery —
-    trained quantizer, cell assignment, probe join.  The pruned-probe
-    path (n_probe=4 default) is covered by tests/test_similarity_ivf.py."""
-    qv = _query_vec(spark, sf_dir)
-    return similarity.ann_topk_ivf(
-        _emb(spark, sf_dir), qv, k=10, exclude_id=0,
-        n_centroids=16, n_probe=16,
-    ).select("vec_id")
-
-
-def q_knn_join(spark, sf_dir):
-    """Batch k-NN join: top-3 cosine neighbors for every 100th vector —
-    one corpus pass, per-partition top-k then a global prune (no
-    per-query scans)."""
-    emb = _emb(spark, sf_dir)
-    queries = emb.where(F.col("vec_id") % 100 == 0)
-    return similarity.knn_join(emb, queries, k=3).select("q_id", "vec_id", "rank")
-
-
-def q_knn_join_lsh(spark, sf_dir):
-    """Bucket-pruned batch k-NN join — the scale path past knn_join's
-    query-broadcast ceiling: both sides hashed to hyperplane buckets,
-    shuffle join on bucket, exact top-k inside the candidates.
-
-    Contract shape: FULL probe ball (max_hamming = n_planes) — every
-    query probes all 2^n buckets, and since a corpus row lands in exactly
-    one bucket the candidate set is provably the whole corpus, making
-    the result identical to exact knn_join (same pattern as IVF's
-    every-cell row).  So the brute-force SQL is an exact oracle for the
-    full machinery — numpy-seeded planes, per-row Hamming ball,
-    bucket join, in-candidate top-k — retiring the contract's last
-    rows-only row (VERDICT r3 #7).  n_planes=4 (VERDICT r4 #5): the
-    full-ball equivalence proof is independent of plane count, and 2^4
-    probe rows per query instead of r4's 2^8 removes the 16x explode
-    fan-out that made the oracle-able shape 2x slower than the r3
-    pruned shape — the machinery exercised (hashing UDF, ball
-    enumeration, bucket shuffle join, in-candidate window top-k) is
-    identical.  The PRUNED production path (8 planes, small ball,
-    recall >=0.9 on clustered data) is asserted in
-    tests/test_similarity_lsh.py::test_knn_join_lsh_recall_on_clustered_corpus."""
-    emb = _emb(spark, sf_dir)
-    queries = emb.where(F.col("vec_id") % 100 == 0)
-    return similarity.knn_join_lsh(emb, queries, k=3, n_planes=4, max_hamming=4)
-
-
-def q_cosine_neardup(spark, sf_dir):
-    """Exact all-pairs near-dup at a moderate threshold — the ORACLE
-    ANCHOR for the blocked variant below.  Deliberately O(n^2): moderate
-    similarity (cos >= 0.4) cannot be hyperplane-blocked, and the exact
-    kernel is what the LSH path's recall is measured against."""
-    return similarity.cosine_neardup_pairs_exact(
-        _emb(spark, sf_dir), threshold_micro=400_000
-    ).select("id_a", "id_b")
-
-
-def _emb_with_twins(spark, sf_dir):
-    """embeddings (as double) + planted near-dup twins: every 5th vector
-    gets a copy (id + 1_000_000) with +0.001 on coordinate 0 — cos to its
-    source ~0.9999997, while no organic pair exceeds cos 0.5.  The exact
-    same derivation is expressible in DuckDB (list_transform/list_prepend
-    on IEEE doubles), so the LSH-blocked near-dup query has a closed-form
-    exact oracle over data that actually CONTAINS near-dups."""
-    base = _emb(spark, sf_dir).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-    twins = base.where(F.col("vec_id") % 5 == 0).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"),
-        F.concat(
-            F.array(F.element_at("v", 1) + F.lit(0.001)),
-            F.slice(F.col("v"), F.lit(2), F.size("v") - 1),
-        ).alias("v"),
-    )
-    return base.unionByName(twins)
-
-
-def q_cosine_neardup_lsh(spark, sf_dir):
-    """The SCALE near-dup path: LSH-bucket blocked pairs (6 planes x 3
-    seeds), exact-cosine verified on candidates only — shuffle is by
-    bucket, never all-pairs.  Over the twin-planted corpus the output
-    equals the exact kernel's (recall test in test_similarity_lsh.py),
-    and the oracle is the exact SQL."""
-    return similarity.cosine_neardup_pairs_lsh(
-        _emb_with_twins(spark, sf_dir), dim=64, threshold_micro=900_000,
-        vec_col="v", n_planes=6, seeds=(42, 43, 44),
-    ).select("id_a", "id_b")
 
 
 def q_c4_filters(spark, sf_dir):
@@ -1188,26 +923,6 @@ def q_dsir_weights(spark, sf_dir):
     return textops.dsir_importance(d, d.where(F.col("lang") == "en"))
 
 
-def q_semantic_dedup(spark, sf_dir):
-    """SemDeDup within-cluster near-dup pairs (similarity.
-    semantic_dedup_pairs): centroids are the SQL-derivable vec_id < 16
-    subset so DuckDB can replay the argmax assignment; production swaps
-    in ivf_train's Lloyd centroids (kernel is centroid-agnostic).
-    Embeddings are cast to double in BOTH engines first — float32
-    accumulation differs at 1 ulp between engines (measured 149/7781
-    floor flips at sf0.01), double accumulation is bit-identical."""
-    from .functions import fan_out
-
-    # the interpreted zip_with/aggregate dot folds dominate this query;
-    # fan_out spreads the single local split across cores (no-op at scale)
-    e = fan_out(_emb(spark, sf_dir)).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    cents = e.where(F.col("vec_id") < 16)
-    return similarity.semantic_dedup_pairs(e, cents, thresh_micro=400_000)
-
-
 def q_ccnet_buckets(spark, sf_dir):
     """CCNet head/middle/tail perplexity terciles (textops.
     ccnet_perplexity_buckets): per-language bigram LM scores cut into
@@ -1228,29 +943,6 @@ def q_bm25_topk(spark, sf_dir):
     long->double division rounds identically in both engines."""
     d = _docs(spark, sf_dir).select("doc_id", "text")
     return textops.bm25_topk(d, BM25_QUERY_TERMS, k=20)
-
-
-def q_hybrid_rrf(spark, sf_dir):
-    """Hybrid retrieval (similarity.rrf_fuse): reciprocal-rank fusion of
-    the BM25 lexical list (top-25, same 4-term query as bm25_topk) with
-    the dense cosine list (top-25 vs the vec_id-0 query embedding,
-    doc_id = vec_id — the synthetic tables share the id domain).  Nano
-    fixed-point 1/(60+rank) contributions, so the fused scores are
-    integer-exact; the dense ranks ride the same cosine ordering the
-    ann_brute_topk contract row already hash-pins."""
-    from pyspark.sql import Window as W
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    lex = textops.bm25_topk(d, BM25_QUERY_TERMS, k=25).select("doc_id", "rank")
-    dense = (
-        similarity.brute_topk(_emb(spark, sf_dir), _query_vec(spark, sf_dir),
-                              k=25, exclude_id=0)
-        .withColumn(
-            "rank", F.row_number().over(W.orderBy(F.desc("cos"), F.asc("vec_id")))
-        )
-        .select(F.col("vec_id").alias("doc_id"), "rank")
-    )
-    return similarity.rrf_fuse([lex, dense], topk=10)
 
 
 def q_boilerplate_ngrams(spark, sf_dir):
@@ -1793,71 +1485,6 @@ def q_mirror_hosts(spark, sf_dir):
     return hoststats.mirror_hosts(syn, max_hosts_per_fp=None)
 
 
-def q_date_extract(spark, sf_dir):
-    """Publication-date extraction (dates.date_extract): doc_id%7
-    cycles the six sources — OG meta (with a T10:00:00Z timestamp to
-    check truncation AND a decoy bare date in the body to check
-    priority), <time datetime>, JSON-LD (spaces around the colon),
-    /YYYY/MM/DD/ permalink URL, bare body date, US-prose
-    'Month D, YYYY' (checks the month-name map + day lpad) — and a
-    no-date case for the null path.  Dates are calendar-plausible by
-    construction (y 2000-2019, m 1-12, d 1-28); the oracle replays
-    the synthesis and the regex chain (closed form for the US case,
-    whose components equal dt by construction)."""
-    from .functions import dates
-
-    d = _docs(spark, sf_dir).select("doc_id")
-    k = F.col("doc_id") % 7
-    dt = F.format_string(
-        "%d-%02d-%02d",
-        F.lit(2000) + F.col("doc_id") % 20,
-        F.lit(1) + F.col("doc_id") % 12,
-        F.lit(1) + F.col("doc_id") % 28,
-    )
-    month_name = F.element_at(
-        F.array(*[F.lit(m) for m in
-                  ("January", "February", "March", "April", "May",
-                   "June", "July", "August", "September", "October",
-                   "November", "December")]),
-        (F.col("doc_id") % 12 + 1).cast("int"),
-    )
-    html = (
-        F.when(k == 0, F.concat(
-            F.lit('<head><meta property="article:published_time" '
-                  'content="'), dt,
-            F.lit('T10:00:00Z"></head><body>also seen '), dt,
-            F.lit("</body>")))
-        .when(k == 1, F.concat(
-            F.lit('<body><time datetime="'), dt,
-            F.lit('">then</time></body>')))
-        .when(k == 2, F.concat(
-            F.lit('<script type="application/ld+json">'
-                  '{"datePublished" : "'), dt,
-            F.lit('T00:00:00"}</script>')))
-        .when(k == 4, F.concat(
-            F.lit("<body>posted on "), dt, F.lit(" by staff</body>")))
-        .when(k == 5, F.concat(
-            F.lit("<body>Published "), month_name,
-            F.format_string(" %d, %d",
-                            F.lit(1) + F.col("doc_id") % 28,
-                            F.lit(2000) + F.col("doc_id") % 20),
-            F.lit(" by staff</body>")))
-        .otherwise(F.lit("<body>no dates here</body>"))
-    )
-    url = F.when(k == 3, F.concat(
-        F.lit("https://ex.com"),
-        F.format_string(
-            "/%d/%02d/%02d/post",
-            F.lit(2000) + F.col("doc_id") % 20,
-            F.lit(1) + F.col("doc_id") % 12,
-            F.lit(1) + F.col("doc_id") % 28,
-        ),
-    )).otherwise(F.lit("https://ex.com/p/1"))
-    return dates.date_extract(
-        d.select("doc_id", html.alias("html"), url.alias("url"))
-    )
-
-
 def q_unicode_clean(spark, sf_dir):
     """Unicode webtext normalization (textops.unicode_clean): doc_id%5
     cycles NBSP/curly-quote/ellipsis taint, dash family, zero-width +
@@ -1959,84 +1586,6 @@ def q_site_template(spark, sf_dir):
     )
 
 
-def q_cache_policy(spark, sf_dir):
-    """HTTP caching-policy extraction (snapshots.cache_policy):
-    doc_id%7 cycles max-age+ETag, no-store, no-cache+Last-Modified,
-    a variable max-age of (doc_id%40)*100000 (0..3.9M s — exercises
-    BOTH the min clamp at 60 and the 30-day max clamp), ETag-only
-    (default TTL), s-maxage-beats-max-age, and no caching headers.
-    Oracle replays the header synthesis and every regex + clamp."""
-    from .functions import snapshots
-
-    d = _docs(spark, sf_dir).select("doc_id")
-    k = F.col("doc_id") % 7
-    crlf = "\r\n"
-    hdrs = F.concat(
-        F.lit("HTTP/1.1 200 OK" + crlf),
-        F.when(k == 0, F.format_string(
-            "Cache-Control: public, max-age=3600%sETag: \"v%d\"",
-            F.lit(crlf), F.col("doc_id")))
-        .when(k == 1, F.lit("Cache-Control: no-store"))
-        .when(k == 2, F.lit(
-            "Cache-Control: no-cache" + crlf +
-            "Last-Modified: Wed, 21 Oct 2015 07:28:00 GMT"))
-        .when(k == 3, F.format_string(
-            "Cache-Control: private, max-age=%d",
-            (F.col("doc_id") % 40) * 100000))
-        .when(k == 4, F.format_string("ETag: \"only%d\"", F.col("doc_id")))
-        .when(k == 5, F.lit("Cache-Control: s-maxage=7200, max-age=600"))
-        .otherwise(F.lit("Content-Type: text/html")),
-        F.lit(crlf + "Server: x" + crlf),
-    )
-    out = snapshots.cache_policy(
-        d.select("doc_id", hdrs.alias("headers"))
-    )
-    # -1 sentinel for "no declared max-age": the driver hash requires a
-    # non-nullable integer dtype (NULL bigint -> float64 in the oracle
-    # frame); the kernel itself keeps NULL semantics.
-    return out.withColumn(
-        "max_age_s", F.coalesce(F.col("max_age_s"), F.lit(-1)).cast("long")
-    )
-
-
-def q_hreflang_clusters(spark, sf_dir):
-    """hreflang alternate clustering (hreflang.hreflang_clusters):
-    clusters of 3 language variants (c = doc_id div 3; en/de/fr by
-    doc_id%3), every page carrying the full 3-tag alternate set (the
-    de tag with attributes REVERSED to exercise order-freedom) plus
-    an x-default -> en tag on even clusters.  cluster_id = x-default
-    href (even c) else min href (the de url); keeper = the en member.
-    The oracle replays the synthesis in closed form — any kernel
-    extraction/election bug diverges from it."""
-    from .functions import hreflang
-
-    d = _docs(spark, sf_dir).select("doc_id")
-    c = F.floor(F.col("doc_id") / 3).cast("long")
-    v = F.col("doc_id") % 3
-    lang = (
-        F.when(v == 0, F.lit("en")).when(v == 1, F.lit("de"))
-        .otherwise(F.lit("fr"))
-    )
-    u_en = F.format_string("https://ex.com/c%d/en", c)
-    u_de = F.format_string("https://ex.com/c%d/de", c)
-    u_fr = F.format_string("https://ex.com/c%d/fr", c)
-    url = F.format_string("https://ex.com/c%d/", c)
-    url = F.concat(url, lang)
-    html = F.concat(
-        F.lit('<head><link rel="alternate" hreflang="en" href="'),
-        u_en, F.lit('"><link href="'), u_de,
-        F.lit('" hreflang="de" rel="alternate"><link rel="alternate" '
-              'hreflang="fr" href="'), u_fr, F.lit('">'),
-        F.when(c % 2 == 0, F.concat(
-            F.lit('<link rel="alternate" hreflang="x-default" href="'),
-            u_en, F.lit('">'))).otherwise(F.lit("")),
-        F.lit("</head>"),
-    )
-    return hreflang.hreflang_clusters(
-        d.select("doc_id", url.alias("url"), html.alias("html"))
-    )
-
-
 def q_table_extract(spark, sf_dir):
     """HTML table mining (textops.table_extract): doc_id%3 cycles a
     3-row table (th header, a nested-<b> cell, an empty cell), TWO
@@ -2090,61 +1639,6 @@ def q_schema_types(spark, sf_dir):
         F.lit("</script>"), og, F.lit("</head><body>b</body>"),
     )
     return textops.schema_types(d.select("doc_id", html.alias("html")))
-
-
-def q_bitext_pairs(spark, sf_dir):
-    """Page-aligned bitext mining (hreflang.bitext_pairs) over the
-    same synthesis as q_hreflang_clusters: every de/fr page pairs
-    with its cluster's en pivot -> 2 pairs per full cluster, 1 for
-    the trailing partial cluster.  Oracle closed form: docs with
-    doc_id%3 in (1,2) pair with doc_id - doc_id%3."""
-    from .functions import hreflang
-
-    d = _docs(spark, sf_dir).select("doc_id")
-    c = F.floor(F.col("doc_id") / 3).cast("long")
-    v = F.col("doc_id") % 3
-    lang = (
-        F.when(v == 0, F.lit("en")).when(v == 1, F.lit("de"))
-        .otherwise(F.lit("fr"))
-    )
-    u_en = F.format_string("https://ex.com/c%d/en", c)
-    u_de = F.format_string("https://ex.com/c%d/de", c)
-    u_fr = F.format_string("https://ex.com/c%d/fr", c)
-    url = F.concat(F.format_string("https://ex.com/c%d/", c), lang)
-    html = F.concat(
-        F.lit('<head><link rel="alternate" hreflang="en" href="'),
-        u_en, F.lit('"><link href="'), u_de,
-        F.lit('" hreflang="de" rel="alternate"><link rel="alternate" '
-              'hreflang="fr" href="'), u_fr, F.lit('">'),
-        F.when(c % 2 == 0, F.concat(
-            F.lit('<link rel="alternate" hreflang="x-default" href="'),
-            u_en, F.lit('">'))).otherwise(F.lit("")),
-        F.lit("</head>"),
-    )
-    return hreflang.bitext_pairs(
-        d.select("doc_id", url.alias("url"), html.alias("html"))
-    )
-
-
-def q_refetch_schedule(spark, sf_dir):
-    """Adaptive revisit scheduling (snapshots.refetch_schedule):
-    prev interval 3600*(1+doc_id%4), changed on doc_id%3==0, declared
-    max-age 7200*(doc_id%5) on even ids (0 exercises the min clamp of
-    the declared floor), no_store on doc_id%7==0.  Halve-on-change /
-    double-on-static, clamps, and the declared-freshness floor all
-    replayed in the oracle."""
-    from .functions import snapshots
-
-    d = _docs(spark, sf_dir).select("doc_id")
-    inp = d.select(
-        "doc_id",
-        (F.lit(3600) * (1 + F.col("doc_id") % 4)).alias("prev_interval_s"),
-        (F.col("doc_id") % 3 == 0).alias("changed"),
-        F.when(F.col("doc_id") % 2 == 0,
-               F.lit(7200) * (F.col("doc_id") % 5)).alias("max_age_s"),
-        (F.col("doc_id") % 7 == 0).alias("no_store"),
-    )
-    return snapshots.refetch_schedule(inp)
 
 
 def q_focused_priority(spark, sf_dir):
@@ -2789,16 +2283,11 @@ QUERIES = {
     "robots_meta": q_robots_meta,
     "intradoc_dedup": q_intradoc_dedup,
     "mirror_hosts": q_mirror_hosts,
-    "date_extract": q_date_extract,
     "unicode_clean": q_unicode_clean,
     "soft404_detect": q_soft404_detect,
     "site_template": q_site_template,
-    "cache_policy": q_cache_policy,
-    "hreflang_clusters": q_hreflang_clusters,
     "table_extract": q_table_extract,
     "schema_types": q_schema_types,
-    "bitext_pairs": q_bitext_pairs,
-    "refetch_schedule": q_refetch_schedule,
     "focused_priority": q_focused_priority,
     # -- (b) newest driver green is r2 (html_extract displaced at the
     # last birth: its html_to_text kernel gets a fresh driver green
@@ -2815,13 +2304,6 @@ QUERIES = {
     "bpe_encode": q_bpe_encode,
     "quality_train": q_quality_train,
     "quality_infer": q_quality_infer,
-    "kmeans_assign": q_kmeans_assign,
-    "semantic_dedup_trained": q_semantic_dedup_trained,
-    # -- (e) r5 kernel-modified rows jump the queue (policy): the
-    # knn_join_lsh probe-ball/Arrow-scoring rewrite touched the
-    # similarity kernels both these rows ride ------------------------
-    "knn_join_lsh": q_knn_join_lsh,
-    "cosine_neardup_lsh": q_cosine_neardup_lsh,
     # -- NEW mid-r5 (enter the window at birth, per policy): HITS, PMI
     # collocations, BPE encode and label propagation displace
     # rlike_filter, text_quality, body_length_filter, link_explode
@@ -2847,8 +2329,6 @@ QUERIES = {
     "html_extract": q_html_extract,
     "cluster_keep_best": q_cluster_keep_best,
     "politeness_rank": q_politeness_rank,
-    # ---------------- driver window ends here (50) ------------------
-    "cosine_neardup": q_cosine_neardup,
     "schedule_round": q_schedule_round,
     "priority_topk": q_priority_topk,
     "dedup_anti_join": q_dedup_anti_join,
@@ -2858,7 +2338,8 @@ QUERIES = {
     "body_length_filter": q_body_length_filter,
     "rlike_filter": q_rlike_filter,
     "text_quality": q_text_quality,
-    # cosine_neardup .. per_source_agg are r3/r4 hash-green with
+    # ---------------- driver window ends here (50) ------------------
+    # link_truncate .. per_source_agg are r3/r4 hash-green with
     # untouched kernels and head the r6 queue.
     "link_truncate": q_link_truncate,
     "tfidf_topk": q_tfidf_topk,
@@ -2867,7 +2348,6 @@ QUERIES = {
     "host_rank": q_host_rank,
     "dedup_clusters": q_dedup_clusters,
     "warc_roundtrip": q_warc_roundtrip,
-    "revisit_records": q_revisit_records,
     "per_source_agg": q_per_source_agg,
     # Everything below holds a driver hash-green row from r4 or r3
     # (CORRECTNESS_r04/r03.json) with its kernel untouched since; the
@@ -2891,10 +2371,8 @@ QUERIES = {
     "simhash_pairs": q_simhash_pairs,
     "c4_filters": q_c4_filters,
     "dsir_weights": q_dsir_weights,
-    "semantic_dedup": q_semantic_dedup,
     "ccnet_buckets": q_ccnet_buckets,
     "bm25_topk": q_bm25_topk,
-    "hybrid_rrf": q_hybrid_rrf,
     "robots_rules": q_robots_rules,
     "boilerplate_ngrams": q_boilerplate_ngrams,
     "chunk_documents": q_chunk_documents,
@@ -2904,13 +2382,6 @@ QUERIES = {
     "shard_shuffle": q_shard_shuffle,
     "dedup_exact": q_dedup_exact,
     "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-    "winnow_fingerprints": q_winnow,
-    "ann_brute_topk": q_ann_brute_topk,
-    "knn_join": q_knn_join,
-    # (knn_join_lsh / cosine_neardup_lsh moved into the r5 window:
-    # their kernels changed this round)
-    "ann_lsh_topk": q_ann_lsh_topk,
-    "ann_ivf_topk": q_ann_ivf_topk,
     "corpus_clean": q_corpus_clean,
     "jsonl_roundtrip": q_jsonl_roundtrip,
     "decontaminate": q_decontaminate,
@@ -2922,12 +2393,10 @@ QUERIES = {
     "pii_redact": q_pii_redact,
     "line_dedup": q_line_dedup,
     "sequence_pack": q_sequence_pack,
-    "snapshot_diff": q_snapshot_diff,
     "cdx_index": q_cdx_index,
     "corpus_stats": q_corpus_stats,
     "length_quantiles": q_length_quantiles,
     "mixture_sample": q_mixture_sample,
-    "recrawl_priority": q_recrawl_priority,
     "host_reputation": q_host_reputation,
     "blocklist_filter": q_blocklist_filter,
     "anchor_text": q_anchor_text,
@@ -3137,47 +2606,14 @@ where a.doc < b.doc and {ham} <= {max_hamming}
 """
 
 
-def _winnow_oracle(k: int = 5, w: int = 4) -> str:
-    """DuckDB twin of textops.winnow_counts_sql: same md5-slice k-gram
-    hashes, same struct-min (leftmost (h, pos)) window argmin, same
-    lag-based consecutive-pick dedup."""
-    return f"""
-with g as (
-  select doc_id as doc, i,
-         cast(concat('0x', substr(md5(substr(lower(text), i, {k})), 1, 8)) as bigint) as h
-  from (select doc_id, text, unnest(generate_series(1, length(text) - {k} + 1)) as i
-        from documents where length(text) >= {k})
-),
-wins as (
-  select doc, i,
-         min({{'h': h, 'p': i}}) over (
-           partition by doc order by i
-           rows between current row and {w - 1} following) as pick,
-         count(*) over (partition by doc) as nh
-  from g
-),
-sel as (
-  select doc, pick.p as j,
-         lag(pick.p) over (partition by doc order by i) as pj
-  from wins
-  where i <= greatest(nh - {w} + 1, 1)
-),
-cnt as (
-  select doc, count(*) as n_fp from sel
-  where pj is null or j <> pj group by doc
-)
-select d.doc_id, cast(coalesce(c.n_fp, 0) as bigint) as n_fp
-from documents d left join cnt c on c.doc = d.doc_id
-"""
-
-
 def _winnow_prod_oracle(k: int = 5, w: int = 4) -> str:
     """DuckDB twin of the PRODUCTION winnow kernel (textops.
     winnow_counts): the same polynomial k-gram hash
     sum(code * B^(k-1-j)) mod 2^61-1 computed per position via
-    unicode(substr(...)), then the identical struct-min window argmin +
-    lag dedup selection as _winnow_oracle.  This makes the linear
-    rolling-hash default oracle-checkable, not just twin-tested."""
+    unicode(substr(...)), then a struct-min window argmin over w
+    consecutive hashes and a lag dedup of consecutive equal picks.
+    This makes the linear rolling-hash default oracle-checkable, not
+    just twin-tested."""
     B, M = 131, (1 << 61) - 1
     pows = [pow(B, k - 1 - j, M) for j in range(k)]
     hexpr = " + ".join(
@@ -3216,15 +2652,14 @@ from documents d left join cnt c on c.doc = d.doc_id
 def _dup_substrings_oracle(
     k: int = 20, w: int = 4, min_shared: int = 5, max_df: int = 200
 ) -> str:
-    """DuckDB twin of dedup.dup_substring_pairs (kernel='prod'): the
+    """DuckDB twin of dedup.dup_substring_pairs: the
     PRODUCTION mod-2^64 polynomial k-gram hash recomputed per position
     via unicode(substr) in hugeint (the window argmin compares the
     unsigned value; the picked fp is reinterpreted as int64 two's
     complement to match Spark's long), then the shared struct-min
     selection, distinct picked VALUES per doc, stop-fp cap, and the
     inverted-index self-join with a shared-count floor.  This verifies
-    the linear Arrow kernel end-to-end — hash, selection, and join —
-    with no md5 twin in the default path."""
+    the linear Arrow kernel end-to-end — hash, selection, and join."""
     B, M = 131, 1 << 64
     pows = [pow(B, k - 1 - j, M) for j in range(k)]
     hexpr = " + ".join(
@@ -3376,27 +2811,6 @@ select d.doc_id,
 from {src} as d join agg a on a.doc_id = d.doc_id
 """
 
-
-_ANN_BRUTE_SQL = """
-        select vec_id from embeddings
-        where vec_id <> 0
-        order by list_cosine_similarity(
-          embedding, (select embedding from embeddings where vec_id = 0)) desc,
-          vec_id asc
-        limit 10
-    """
-
-_TWIN_CTE = """
-with base as (
-  select vec_id, list_transform(embedding, x -> cast(x as double)) as v
-  from embeddings
-),
-twins as (
-  select vec_id + 1000000 as vec_id, list_prepend(v[1] + 0.001, v[2:]) as v
-  from base where vec_id % 5 = 0
-),
-allv as (select * from base union all select * from twins)
-"""
 
 ORACLES = {
     "politeness_rank": """
@@ -3633,28 +3047,6 @@ ORACLES = {
         where doc % 97 <> 0
         group by 1 having count(*) >= 3
     """,
-    "snapshot_diff": """
-        with old as (select doc_id as url_id, md5(text) as fp from documents),
-        new as (
-          select doc_id as url_id,
-                 case when doc_id % 10 = 1 then md5(text || '!')
-                      else md5(text) end as fp
-          from documents where doc_id % 17 <> 3
-          union all
-          select doc_id + 10000000, md5(text)
-          from documents where doc_id % 13 = 5
-        ), j as (
-          select coalesce(o.url_id, n.url_id) as url_id,
-                 o.fp as fp_old, n.fp as fp_new
-          from old o full outer join new n on o.url_id = n.url_id
-        )
-        select cast(url_id as bigint) as url_id,
-               case when fp_old is null then 'added'
-                    when fp_new is null then 'removed'
-                    when fp_old <> fp_new then 'changed' end as status
-        from j
-        where fp_old is null or fp_new is null or fp_old <> fp_new
-    """,
     "cdx_index": """
         select 'com,example,h' || (doc_id % 53) || ',p' || (doc_id % 7)
                || ')/Doc/' || doc_id || '?s=' || (doc_id % 3) as surt,
@@ -3790,36 +3182,6 @@ ORACLES = {
                cast(component as bigint) as component,
                rn = 1 as kept
         from win
-    """,
-    "recrawl_priority": """
-        with h as (
-          select d.doc_id as url_id, d.source as host, e.epoch,
-                 case when cast(concat('0x', substr(md5(
-                          'recrawl|' || cast(d.doc_id as varchar) || ':'
-                          || cast(e.epoch as varchar)), 1, 8)) as bigint)
-                      % 1000000 < (d.doc_id % 10) * 100000
-                      then 1 else 0 end as changed
-          from documents d
-          cross join (select unnest(generate_series(1, 8)) as epoch) e
-        ), a as (
-          select url_id, host,
-                 count(*) as n_obs, sum(changed) as n_changes,
-                 max(epoch) as last_epoch
-          from h group by 1, 2
-        ), i as (
-          select *,
-                 least(greatest(
-                     floor(16 * (n_obs + 1) / (n_changes + 1)), 1), 64)
-                   as iv
-          from a
-        )
-        select url_id, host,
-               cast(n_obs as bigint) as n_obs,
-               cast(n_changes as bigint) as n_changes,
-               cast(iv as bigint) as revisit_interval,
-               cast(floor((12 - last_epoch) * 1000000 / iv) as bigint)
-                 as overdue_micro
-        from i
     """,
     "host_reputation": rf"""
         with per_doc as (
@@ -4071,66 +3433,7 @@ ORACLES = {
     "dedup_ngram_jaccard": _SHINGLE_CTE + "," + _JACCARD_TAIL,
     "dedup_minhash_lsh": _minhash_lsh_oracle(),
     "dedup_incremental": _minhash_probe_oracle(),
-    "revisit_records": """
-        with fetches as (
-          select doc_id as url_id, e as epoch,
-                 md5(text || '#' || cast(
-                   case when doc_id % 5 = 2 and e = 2 then 0
-                        else (case when e >= 1 and doc_id % 3 = 0 then 1 else 0 end)
-                           + (case when e = 2 and doc_id % 4 = 1 then 1 else 0 end)
-                   end as varchar)) as digest
-          from documents, unnest(generate_series(0, 2)) as g(e)
-        )
-        select url_id, cast(epoch as bigint) as epoch, digest,
-               case when epoch = min(epoch) over (partition by url_id, digest)
-                    then 'response' else 'revisit' end as record_type,
-               cast(min(epoch) over (partition by url_id, digest) as bigint)
-                 as refers_to_epoch
-        from fetches
-    """,
-    "ann_brute_topk": _ANN_BRUTE_SQL,
-    # exact oracles for the pruned ANN paths: LSH's probe ball is
-    # deterministically recall-1.0 on this corpus (asserted in tests),
-    # IVF probes every cell -> provably equal to brute force
-    "ann_lsh_topk": _ANN_BRUTE_SQL,
-    "ann_ivf_topk": _ANN_BRUTE_SQL,
-    # knn_join_lsh probes the FULL Hamming ball (all 2^n_planes buckets;
-    # each corpus row is in exactly one) -> provably equal to the exact
-    # batch join, so it shares knn_join's brute-force oracle verbatim
-    # (registered right after this dict literal).
-    "knn_join": """
-        -- DuckDB LATERAL cannot contain window functions: rank the
-        -- 3 survivors in an outer window instead
-        with nn as (
-          select q.vec_id as q_id, q.embedding as qe, t.vec_id, t.ee
-          from embeddings q, lateral (
-            select e.vec_id, e.embedding as ee
-            from embeddings e where e.vec_id <> q.vec_id
-            order by list_cosine_similarity(e.embedding, q.embedding) desc,
-                     e.vec_id asc
-            limit 3
-          ) t
-          where q.vec_id % 100 = 0
-        )
-        select q_id, vec_id,
-               cast(row_number() over (
-                 partition by q_id
-                 order by list_cosine_similarity(ee, qe) desc, vec_id asc
-               ) as int) as rank
-        from nn
-    """,
-    "cosine_neardup": """
-        select a.vec_id as id_a, b.vec_id as id_b
-        from embeddings a join embeddings b on a.vec_id < b.vec_id
-        where floor(list_cosine_similarity(a.embedding, b.embedding) * 1000000) >= 400000
-    """,
-    "cosine_neardup_lsh": _TWIN_CTE + """
-        select a.vec_id as id_a, b.vec_id as id_b
-        from allv a join allv b on a.vec_id < b.vec_id
-        where floor(list_cosine_similarity(a.v, b.v) * 1000000) >= 900000
-    """,
     "simhash_pairs": _simhash_md5_oracle(max_hamming=8),
-    "winnow_fingerprints": _winnow_oracle(k=5, w=4),
     "winnow_counts_prod": _winnow_prod_oracle(k=5, w=4),
     "dup_substrings": _dup_substrings_oracle(k=20, w=4, min_shared=5, max_df=200),
     "substring_scrub": _substring_scrub_oracle(k=20, w=4, min_shared=5, max_df=200),
@@ -4354,95 +3657,6 @@ from lab l join sc s on l.doc = s.doc"""
 ORACLES["quality_train"] = _quality_train_oracle(64, 4)
 ORACLES["quality_infer"] = _quality_infer_oracle(64, 4)
 
-
-def _kmeans_oracle_blocks(
-    k: int = 8, dims: int = 64, iters: int = 3, scale: int = 1000, two: int = 16
-) -> str:
-    """Unrolled fixed-point Lloyd's CTE chain (see q_kmeans_assign) —
-    shared by the kmeans_assign and semantic_dedup_trained oracles; the
-    final assignment CTE is ``a{iters}``.  Floor division over
-    possibly-negative integer sums is spelled with the posmod identity
-    ``(a - ((a % c) + c) % c) // c`` because DuckDB's ``//`` truncates
-    toward zero while Python's floors."""
-    parts = [
-        f"""pts as (
-  select vec_id, cast(t.d as int) as d,
-         cast(floor(cast(embedding[cast(t.d as int) + 1] as double)
-                    * {scale}.0) as bigint) as xq
-  from embeddings, range({dims}) as t(d)
-),
-c0 as (select vec_id as j, d, {two} * xq as m from pts where vec_id < {k})"""
-    ]
-    for t in range(1, iters + 1):
-        parts.append(f""",
-d{t} as (
-  select p.vec_id, c.j,
-         sum(({two} * p.xq - c.m) * ({two} * p.xq - c.m)) as dist
-  from pts p join c{t - 1} c using (d) group by p.vec_id, c.j
-),
-a{t} as (
-  select vec_id, j as cluster from (
-    select vec_id, j,
-           row_number() over (partition by vec_id order by dist, j) as rn
-    from d{t}) where rn = 1
-)""")
-        if t < iters:
-            parts.append(f""",
-c{t} as (
-  select a.cluster as j, p.d,
-         cast((({two} * sum(p.xq))
-               - (((({two} * sum(p.xq)) % count(*)) + count(*)) % count(*)))
-              // count(*) as bigint) as m
-  from a{t} a join pts p using (vec_id) group by a.cluster, p.d
-)""")
-    return "".join(parts)
-
-
-def _kmeans_oracle(
-    k: int = 8, dims: int = 64, iters: int = 3, scale: int = 1000, two: int = 16
-) -> str:
-    return (
-        "with "
-        + _kmeans_oracle_blocks(k, dims, iters, scale, two)
-        + f"\nselect vec_id, cast(cluster as int) as cluster from a{iters}"
-    )
-
-
-def _semantic_dedup_trained_oracle(
-    k: int = 8, dims: int = 64, iters: int = 3, thresh: int = 400_000
-) -> str:
-    """kmeans-oracle replay for the clusters, then the SAME float pair
-    pipeline as the semantic_dedup oracle (double-cast, unit-normalize,
-    single left-fold dot per pair)."""
-    return (
-        "with "
-        + _kmeans_oracle_blocks(k, dims, iters)
-        + f""",
-embd as (
-  select vec_id, list_transform(embedding, x -> cast(x as double)) as v
-  from embeddings
-), nrm2 as (
-  select vec_id, v,
-         sqrt(list_sum(list_transform(v, x -> x * x))) as n
-  from embd
-), unitv as (
-  select vec_id, list_transform(v, x -> x / n) as v from nrm2
-), au as (
-  select u.vec_id, u.v, cast(a.cluster as bigint) as cl
-  from unitv u join a{iters} a using (vec_id)
-), pairs as (
-  select a.cl as cluster, a.vec_id as id_a, b.vec_id as id_b,
-         cast(floor(list_sum(list_transform(list_zip(a.v, b.v),
-                p -> p[1] * p[2])) * 1000000) as bigint) as cos_micro
-  from au a join au b
-    on a.cl = b.cl and a.vec_id < b.vec_id
-)
-select * from pairs where cos_micro >= {thresh}"""
-    )
-
-
-ORACLES["kmeans_assign"] = _kmeans_oracle(8, 64, 3)
-ORACLES["semantic_dedup_trained"] = _semantic_dedup_trained_oracle(8, 64, 3)
 
 # HITS: both iterations unrolled as CTE chains — each half-step is an
 # in/out-edge sum, a one-row max, and an integer floor max-normalization,
@@ -5186,10 +4400,6 @@ ORACLES["script_detect"] = """
 """
 
 
-# Full-probe LSH k-NN join == exact batch k-NN join (every bucket
-# probed; one bucket per corpus row), so it shares knn_join's oracle.
-ORACLES["knn_join_lsh"] = ORACLES["knn_join"]
-
 # Reporting rollup: exact distinct via DuckDB's native count(distinct);
 # the fingerprint and ws-token kernels are the shared normalized forms.
 ORACLES["corpus_stats"] = r"""
@@ -5400,43 +4610,6 @@ ORACLES["dsir_weights"] = r"""
     from documents d left join sc using (doc_id)
 """
 
-ORACLES["semantic_dedup"] = r"""
-    -- mirrors the Spark kernel's float pipeline EXACTLY: double-cast,
-    -- per-vector unit normalization (x / sqrt(sequential-sum of x*x)),
-    -- then a single sequential dot fold per pair (list_sum is a left
-    -- fold, same order as Spark's aggregate)
-    with embd as (
-      select vec_id, list_transform(embedding, x -> cast(x as double)) as v
-      from embeddings
-    ), nrm as (
-      select vec_id, v,
-             sqrt(list_sum(list_transform(v, x -> x * x))) as n
-      from embd
-    ), unitv as (
-      select vec_id, list_transform(v, x -> x / n) as v from nrm
-    ), cents as (
-      select vec_id as cid, v as cvec from unitv where vec_id < 16
-    ), scored as (
-      select e.vec_id, e.v, c.cid,
-             cast(floor(list_sum(list_transform(list_zip(e.v, c.cvec),
-                    p -> p[1] * p[2])) * 1000000) as bigint) as cm
-      from unitv e cross join cents c
-    ), assigned as (
-      select vec_id, v, cl from (
-        select vec_id, v, cid as cl,
-               row_number() over (partition by vec_id
-                                  order by cm desc, cid asc) as rn
-        from scored) t
-      where rn = 1
-    ), pairs as (
-      select a.cl as cluster, a.vec_id as id_a, b.vec_id as id_b,
-             cast(floor(list_sum(list_transform(list_zip(a.v, b.v),
-                    p -> p[1] * p[2])) * 1000000) as bigint) as cos_micro
-      from assigned a join assigned b
-        on a.cl = b.cl and a.vec_id < b.vec_id
-    )
-    select * from pairs where cos_micro >= 400000
-"""
 
 ORACLES["ccnet_buckets"] = r"""
     with w as (
@@ -5528,81 +4701,6 @@ ORACLES["bm25_topk"] = r"""
     qualify rank <= 20
 """
 
-ORACLES["hybrid_rrf"] = r"""
-    with t as (
-      select doc_id,
-             list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
-                         x -> x <> '') as toks
-      from documents
-    ), base as (
-      select doc_id, toks, cast(len(toks) as bigint) as dl from t
-    ), stats as (
-      select cast(count(*) as bigint) as n,
-             cast(floor(sum(dl) / count(*)) as bigint) as avgdl
-      from base
-    ), terms as (
-      select doc_id, dl, unnest(toks) as term from base
-    ), tf as (
-      select doc_id, dl, term, cast(count(*) as bigint) as tf
-      from terms
-      where term in ('spark', 'window', 'merge', 'vector')
-      group by 1, 2, 3
-    ), dfq as (
-      select term, cast(count(*) as bigint) as dfc from tf group by 1
-    ), c as (
-      select tf.doc_id,
-             cast(floor((2 * s.n - 2 * dfq.dfc + 1) * 1000
-                        / (2 * dfq.dfc + 1)) as bigint) as idf_milli,
-             (1000000 - 750000)
-               + cast(floor(750000 * tf.dl / s.avgdl) as bigint)
-               as norm_micro,
-             tf.tf
-      from tf join dfq using (term) cross join stats s
-    ), c2 as (
-      select doc_id, idf_milli,
-             cast(floor(tf * (1200000 + 1000000) * 1000
-                        / (tf * 1000000
-                           + floor(1200000 * norm_micro / 1000000)))
-                  as bigint) as tfn_milli
-      from c
-    ), sc as (
-      select doc_id,
-             cast(sum(cast(floor(idf_milli * tfn_milli / 1000) as bigint))
-                  as bigint) as score_milli
-      from c2 group by 1
-    ), lex as (
-      select doc_id,
-             cast(row_number() over (order by score_milli desc, doc_id asc)
-                  as bigint) as rank
-      from sc
-      qualify rank <= 25
-    ), dense as (
-      select vec_id as doc_id,
-             cast(row_number() over (
-               order by list_cosine_similarity(
-                 embedding,
-                 (select embedding from embeddings where vec_id = 0)) desc,
-               vec_id asc) as bigint) as rank
-      from embeddings
-      where vec_id <> 0
-      qualify rank <= 25
-    ), u as (
-      select doc_id, cast(floor(1000000000 / (60 + rank)) as bigint) as c
-      from lex
-      union all
-      select doc_id, cast(floor(1000000000 / (60 + rank)) as bigint) as c
-      from dense
-    ), fused as (
-      select doc_id, cast(sum(c) as bigint) as rrf_nano,
-             cast(count(*) as bigint) as n_lists
-      from u group by 1
-    )
-    select doc_id, rrf_nano, n_lists,
-           cast(row_number() over (order by rrf_nano desc, doc_id asc)
-                as int) as rank
-    from fused
-    qualify rank <= 10
-"""
 
 ORACLES["robots_rules"] = r"""
     with hosts as (
@@ -6093,83 +5191,6 @@ ORACLES["mirror_hosts"] = r"""
           >= 500000
 """
 
-ORACLES["date_extract"] = r"""
-    with syn as (
-      select doc_id, doc_id % 7 as k,
-             printf('%d-%02d-%02d',
-                    2000 + doc_id % 20,
-                    1 + doc_id % 12,
-                    1 + doc_id % 28) as dt,
-             case 1 + doc_id % 12
-               when 1 then 'January' when 2 then 'February'
-               when 3 then 'March' when 4 then 'April'
-               when 5 then 'May' when 6 then 'June'
-               when 7 then 'July' when 8 then 'August'
-               when 9 then 'September' when 10 then 'October'
-               when 11 then 'November' else 'December' end as mname
-      from documents
-    ), pages as (
-      select doc_id, k, dt,
-             case k
-               when 0 then '<head><meta property="article:published_time" content="'
-                           || dt || 'T10:00:00Z"></head><body>also seen '
-                           || dt || '</body>'
-               when 1 then '<body><time datetime="' || dt
-                           || '">then</time></body>'
-               when 2 then '<script type="application/ld+json">{"datePublished" : "'
-                           || dt || 'T00:00:00"}</script>'
-               when 4 then '<body>posted on ' || dt || ' by staff</body>'
-               when 5 then '<body>Published ' || mname || ' '
-                           || (1 + doc_id % 28) || ', '
-                           || (2000 + doc_id % 20) || ' by staff</body>'
-               else '<body>no dates here</body>' end as html,
-             case k
-               when 3 then 'https://ex.com' || printf('/%d/%02d/%02d/post',
-                             2000 + doc_id % 20,
-                             1 + doc_id % 12,
-                             1 + doc_id % 28)
-               else 'https://ex.com/p/1' end as url
-      from syn
-    ), ex as (
-      select doc_id, k, dt,
-        regexp_extract(html,
-          'article:published_time[^>]*content="((?:19|20)\d{2}-(?:0[1-9]|1[0-2])-(?:0[1-9]|[12]\d|3[01]))',
-          1) as m1,
-        regexp_extract(html,
-          '<time[^>]*datetime="((?:19|20)\d{2}-(?:0[1-9]|1[0-2])-(?:0[1-9]|[12]\d|3[01]))',
-          1) as t1,
-        regexp_extract(html,
-          '"datePublished"\s*:\s*"((?:19|20)\d{2}-(?:0[1-9]|1[0-2])-(?:0[1-9]|[12]\d|3[01]))',
-          1) as j1,
-        regexp_extract(url,
-          '/((?:19|20)\d{2})/(0[1-9]|1[0-2])/(0[1-9]|[12]\d|3[01])/',
-          1) as u1,
-        regexp_extract(url,
-          '/((?:19|20)\d{2})/(0[1-9]|1[0-2])/(0[1-9]|[12]\d|3[01])/',
-          2) as u2,
-        regexp_extract(url,
-          '/((?:19|20)\d{2})/(0[1-9]|1[0-2])/(0[1-9]|[12]\d|3[01])/',
-          3) as u3,
-        regexp_extract(html,
-          '(?:^|[^0-9-])((?:19|20)\d{2}-(?:0[1-9]|1[0-2])-(?:0[1-9]|[12]\d|3[01]))(?:[^0-9-]|$)',
-          1) as x1
-      from pages
-    )
-    select doc_id,
-           case when m1 <> '' then m1
-                when t1 <> '' then t1
-                when j1 <> '' then j1
-                when u1 <> '' then u1 || '-' || u2 || '-' || u3
-                when x1 <> '' then x1
-                when k = 5 then dt end as pub_date,
-           case when m1 <> '' then 'meta'
-                when t1 <> '' then 'time'
-                when j1 <> '' then 'jsonld'
-                when u1 <> '' then 'url'
-                when x1 <> '' then 'text'
-                when k = 5 then 'text_us' end as date_src
-    from ex
-"""
 
 ORACLES["unicode_clean"] = r"""
     with syn as (
@@ -6281,70 +5302,6 @@ ORACLES["site_template"] = r"""
     from tagged group by doc_id, host
 """
 
-ORACLES["cache_policy"] = r"""
-    with syn as (
-      select doc_id,
-             'HTTP/1.1 200 OK' || chr(13) || chr(10) ||
-             case doc_id % 7
-               when 0 then 'Cache-Control: public, max-age=3600'
-                           || chr(13) || chr(10)
-                           || 'ETag: "v' || doc_id || '"'
-               when 1 then 'Cache-Control: no-store'
-               when 2 then 'Cache-Control: no-cache' || chr(13) || chr(10)
-                           || 'Last-Modified: Wed, 21 Oct 2015 07:28:00 GMT'
-               when 3 then 'Cache-Control: private, max-age='
-                           || ((doc_id % 40) * 100000)
-               when 4 then 'ETag: "only' || doc_id || '"'
-               when 5 then 'Cache-Control: s-maxage=7200, max-age=600'
-               else 'Content-Type: text/html' end
-             || chr(13) || chr(10) || 'Server: x' || chr(13) || chr(10)
-             as h
-      from documents
-    ), ex as (
-      select doc_id, h,
-        regexp_extract(h, '(?i)cache-control:[^\r\n]*s-maxage=(\d+)', 1)
-          as smax,
-        regexp_extract(h, '(?i)cache-control:(?:[^\r\n]*[ ,;])?max-age=(\d+)', 1)
-          as mage,
-        regexp_matches(h, '(?i)cache-control:[^\r\n]*no-store') as no_store,
-        regexp_matches(h, '(?i)cache-control:[^\r\n]*no-cache') as no_cache,
-        regexp_matches(h, '(?i)^etag:|[\r\n]etag:') as has_etag,
-        regexp_matches(h, '(?i)^last-modified:|[\r\n]last-modified:')
-          as has_lm
-      from syn
-    ), pol as (
-      select doc_id, no_store, no_cache, has_etag,
-             (has_etag or has_lm) as has_validator,
-             case when smax <> '' then cast(smax as bigint)
-                  when mage <> '' then cast(mage as bigint) end as max_age_s
-      from ex
-    )
-    select doc_id,
-           cast(coalesce(max_age_s, -1) as bigint) as max_age_s,
-           no_store, no_cache, has_etag, has_validator,
-           cast(case
-             when no_store then 60
-             when no_cache or max_age_s is not null then
-               least(greatest(
-                 case when no_cache then 0 else max_age_s end, 60),
-                 2592000)
-             else 86400 end as bigint) as refetch_after_s
-    from pol
-"""
-
-ORACLES["hreflang_clusters"] = r"""
-    with syn as (
-      select doc_id, doc_id // 3 as c, doc_id % 3 as v from documents
-    )
-    select doc_id,
-           case when c % 2 = 0 then printf('https://ex.com/c%d/en', c)
-                else printf('https://ex.com/c%d/de', c) end as cluster_id,
-           case v when 0 then 'en' when 1 then 'de' else 'fr' end
-             as page_lang,
-           cast(case when c % 2 = 0 then 4 else 3 end as bigint) as n_alts,
-           (v = 0) as is_keeper
-    from syn
-"""
 
 ORACLES["table_extract"] = r"""
     with base as (
@@ -6392,45 +5349,6 @@ ORACLES["schema_types"] = r"""
     from base
 """
 
-ORACLES["bitext_pairs"] = r"""
-    select doc_id - (doc_id % 3) as id_pivot,
-           doc_id as id_other,
-           case when (doc_id // 3) % 2 = 0
-                then printf('https://ex.com/c%d/en', doc_id // 3)
-                else printf('https://ex.com/c%d/de', doc_id // 3) end
-             as cluster_id,
-           case doc_id % 3 when 1 then 'de' else 'fr' end as lang_other
-    from documents
-    where doc_id % 3 in (1, 2)
-"""
-
-ORACLES["refetch_schedule"] = r"""
-    with inp as (
-      select doc_id,
-             3600 * (1 + doc_id % 4) as prev_interval_s,
-             (doc_id % 3 = 0) as changed,
-             case when doc_id % 2 = 0 then 7200 * (doc_id % 5) end
-               as max_age_s,
-             (doc_id % 7 = 0) as no_store
-      from documents
-    ), calc as (
-      select doc_id,
-             least(greatest(
-               case when changed then prev_interval_s // 2
-                    else prev_interval_s * 2 end, 60), 2592000)
-               as adaptive,
-             case when (not no_store) and max_age_s is not null
-                  then least(greatest(max_age_s, 60), 2592000)
-                  else 60 end as declared
-      from inp
-    )
-    select doc_id,
-           cast(greatest(adaptive, declared) as bigint)
-             as next_interval_s,
-           case when declared > adaptive then 'declared'
-                else 'adaptive' end as source
-    from calc
-"""
 
 ORACLES["focused_priority"] = r"""
     with links as (

@@ -5,13 +5,11 @@ needs dedup / text-analysis / link-graph stages.  The modules an entry
 point (``main.py`` or ``examples/``) uses: ``dedup``, ``textops``,
 ``graph`` and ``hoststats`` by the corpus build, ``graph`` and
 ``anchors`` by the trust and focused crawls, ``sketches`` by the crawl
-monitor.  ``similarity``, ``snapshots``, ``hreflang`` and ``dates`` are
-reached only from the contract rows and tests; ``tests/test_package.py``
-walks the imports and names exactly these four, so one that gains a
-caller or is deleted must leave that list.  All hot paths are built-in
-Spark SQL expressions (JVM, codegen); Python appears only as
-Arrow-batched pandas UDFs where Spark lacks the primitive (simhash
-bit-banging, winnowing, embedding batch math).
+monitor.  Every module here has such a caller: ``tests/test_package.py``
+walks the imports from the entry points and fails on a module none of
+them reaches.  All hot paths are built-in Spark SQL expressions (JVM,
+codegen); Python appears only as Arrow-batched pandas UDFs where Spark
+lacks the primitive (simhash bit-banging, winnowing).
 """
 
 from pyspark.sql import DataFrame

@@ -17,7 +17,6 @@ Design notes (100 TB scale):
 - **SimHash**: 64-bit signature from token xxhashes via a vectorized
   pandas UDF; near-dup = signatures within Hamming distance d (banded
   into 4 x 16-bit chunks for blocking).
-- **embedding near-dup**: see similarity.py (cosine >= threshold pairs).
 """
 
 from __future__ import annotations
@@ -1121,8 +1120,6 @@ def dup_substring_pairs(
     w: int = 4,
     min_shared: int = 3,
     max_df: int | None = 1000,
-    hash_kind: str = "md5",
-    kernel: str = "prod",
 ) -> DataFrame:
     """Verbatim-overlap duplicate pairs via winnowing fingerprints — the
     scalable approximation of exact duplicated-substring dedup (Lee et
@@ -1143,21 +1140,15 @@ def dup_substring_pairs(
 
     Scale shape: fingerprinting is per-doc parallel, then ONE
     inverted-index self-join on fp with map-side-combined pair counts —
-    identical join displacement to the minhash band join.  ``kernel``
-    picks the fingerprint step: 'prod' (default) = textops.winnow_picks,
-    the linear mod-2^64 Arrow kernel — O(doc length), no row
-    amplification, vectorized for any k, and still DuckDB-reproducible
-    (hugeint % 2^64 recomputation in the oracle); 'sql' = the
-    windowed-SQL md5-slice twin (winnow_picks_sql) — one exploded row
-    per character position, kept for the plan-identical contract twin
-    only.
+    identical join displacement to the minhash band join.  The
+    fingerprint step is textops.winnow_picks, the linear mod-2^64 Arrow
+    kernel — O(doc length), no row amplification, vectorized for any k,
+    and still DuckDB-reproducible (hugeint % 2^64 recomputation in the
+    oracle).
     """
-    from .textops import winnow_picks, winnow_picks_sql
+    from .textops import winnow_picks
 
-    if kernel == "prod":
-        picks = winnow_picks(df, id_col, text_col, k, w)
-    else:
-        picks = winnow_picks_sql(df, id_col, text_col, k, w, hash_kind)
+    picks = winnow_picks(df, id_col, text_col, k, w)
     if max_df is not None:
         keep = picks.groupBy("fp").agg(F.count("*").alias("df_")).where(
             F.col("df_") <= max_df

@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 # small closed-class English stopword set for the n-gram/stopword heuristic
 EN_STOPWORDS = ("the", "a", "and", "of", "to", "in", "is", "that", "for", "on")
 EN_STOP_RE = r"\b(" + "|".join(EN_STOPWORDS) + r")\b"
-WORD_RE = r"[a-z]+"
 BPE_ISH_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 PUNCT_RE = r"[.,!?;:]"
 
@@ -488,8 +487,8 @@ def winnow_fingerprints_py(
     argmin taken on the UNSIGNED value, picks reinterpreted as int64
     two's complement at output; 'md5' = first 8 hex chars of
     md5(k-gram) as a 32-bit int — slower, but bit-reproducible in
-    DuckDB SQL / Spark built-ins (the oracle twin, same trade as the
-    MinHash signatures)."""
+    DuckDB SQL / Spark built-ins (same trade as the MinHash
+    signatures)."""
     s = _lower_keep_len(text)
     n = len(s)
     if n < k:
@@ -620,9 +619,7 @@ def winnow_picks(
     (_winnow_picks_vec64).  O(doc length) per document with NO row
     amplification, vectorized for any k, and still fully
     oracle-checkable: DuckDB recomputes the same hash as
-    hugeint % 2^64 per position (entry _dup_substrings oracle).  This
-    retires the SQL twin's per-character explode from the default
-    pair-mining path (winnow_picks_sql remains the md5 contract twin)."""
+    hugeint % 2^64 per position (entry _dup_substrings oracle)."""
     import pyspark.sql.types as T
 
     id_field = df.schema[id_col]
@@ -722,15 +719,10 @@ def winnow_counts(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     k: int = 5, w: int = 4,
 ) -> DataFrame:
-    """PRODUCTION winnowing count path (the default): Arrow-batched
-    linear kernel, O(doc length) work per document with no row
-    amplification.  The SQL contract twin (winnow_counts_sql) explodes
-    one row per character position and pays an md5 per k-gram — ~100x
-    the bytes moved on a 100 TB corpus — and survives only because it is
-    bit-reproducible in DuckDB for the oracle gate.  Counts here use the
-    rolling polynomial hash, so pick *positions* (and hence counts)
-    legitimately differ from the md5 twin's; both obey the winnowing
-    density bound.
+    """PRODUCTION winnowing count path: Arrow-batched linear kernel,
+    O(doc length) work per document with no row amplification.  Counts
+    use the rolling polynomial hash mod 2^61-1, which DuckDB recomputes
+    per position for the contract oracle (_winnow_prod_oracle).
 
     Returns (id_col, n_fp); n_fp = 0 for texts shorter than k."""
     import pyspark.sql.types as T
@@ -752,123 +744,6 @@ def winnow_counts(
     from . import fan_out
 
     return fan_out(df.select(id_col, text_col)).mapInPandas(run, schema=schema)
-
-
-def _winnow_sel_sql(
-    df: DataFrame, id_col: str, text_col: str,
-    k: int, w: int, hash_kind: str,
-) -> DataFrame:
-    """Shared windowed-SQL winnowing core: one row per window start with
-    the selected pick struct — columns (doc, i, j=pick position,
-    pj=previous pick position, ph=pick hash).  Consumers dedup
-    consecutive picks (j != pj) and take counts (winnow_counts_sql) or
-    distinct values (winnow_picks_sql)."""
-    from pyspark.sql import Window
-
-    t = F.lower(F.col(text_col))
-    gram = F.substring(F.col("_t"), F.col("i"), F.lit(k))
-    if hash_kind == "md5":
-        hcol = F.conv(F.substring(F.md5(gram), 1, 8), 16, 10).cast("long")
-    elif hash_kind == "xxhash64":
-        hcol = F.xxhash64(gram)
-    else:
-        raise ValueError(f"unknown hash_kind {hash_kind!r}")
-    g = (
-        df.where(F.length(t) >= k)
-        .select(
-            F.col(id_col).alias("doc"),
-            t.alias("_t"),
-            F.explode(F.sequence(F.lit(1), F.length(t) - k + 1)).alias("i"),
-        )
-        .select("doc", "i", hcol.alias("h"))
-    )
-    wwin = Window.partitionBy("doc").orderBy("i").rowsBetween(0, w - 1)
-    wall = Window.partitionBy("doc")
-    word = Window.partitionBy("doc").orderBy("i")
-    return (
-        g.withColumn("pick", F.min(F.struct("h", "i")).over(wwin))
-        .withColumn("nh", F.count("*").over(wall))
-        .where(F.col("i") <= F.greatest(F.col("nh") - w + 1, F.lit(1)))
-        .withColumn("j", F.col("pick.i"))
-        .withColumn("ph", F.col("pick.h"))
-        .withColumn("pj", F.lag("j").over(word))
-    )
-
-
-def winnow_picks_sql(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    k: int = 12, w: int = 4, hash_kind: str = "md5",
-) -> DataFrame:
-    """Distinct selected fingerprint VALUES per doc — ``(id_col, fp)``,
-    the inverted-index input for shared-substring pair mining
-    (dedup.dup_substring_pairs).  Same kernel and oracle-twin caveats
-    as winnow_counts_sql (row-per-character explode; md5 slice for
-    DuckDB reproducibility, xxhash64 for the plan-identical prod swap);
-    default k=12 so a fingerprint witnesses a >=k+w-1 = 15-char
-    verbatim overlap, not a common short word."""
-    sel = _winnow_sel_sql(df, id_col, text_col, k, w, hash_kind)
-    return (
-        sel.where(F.col("pj").isNull() | (F.col("j") != F.col("pj")))
-        .select(F.col("doc").alias(id_col), F.col("ph").alias("fp"))
-        .distinct()
-    )
-
-
-def winnow_counts_sql(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    k: int = 5, w: int = 4, hash_kind: str = "md5",
-) -> DataFrame:
-    """Winnowing fingerprint COUNTS as pure DataFrame ops: explode k-gram
-    positions -> k-gram hash -> struct-min over a w-row window (leftmost
-    (hash, pos) argmin == the winnowing tie-break) -> drop consecutive
-    repeats via lag.  The per-doc window partitions by doc, so work is
-    embarrassingly parallel across docs.
-
-    ORACLE TWIN, not the production default: the position explode is one
-    row per character, ~100x amplification — use winnow_counts (linear
-    Arrow kernel) in pipelines.  hash_kind 'md5' (32-bit slice) is
-    DuckDB-bit-reproducible and feeds the contract gate; 'xxhash64' swaps
-    in the far cheaper JVM hash with the identical plan shape — the
-    middle ground when the windowed-SQL form itself is wanted at scale.
-
-    Returns (id_col, n_fp) with n_fp = 0 for texts shorter than k.
-    For 'md5', equivalent to len(winnow_fingerprints_py(text, k, w,
-    'md5')) — asserted in tests."""
-    sel = _winnow_sel_sql(df, id_col, text_col, k, w, hash_kind)
-    counts = (
-        sel.where(F.col("pj").isNull() | (F.col("j") != F.col("pj")))
-        .groupBy("doc").agg(F.count("*").alias("n_fp"))
-    )
-    return (
-        df.select(F.col(id_col).alias("doc"))
-        .join(counts, "doc", "left")
-        .select(
-            F.col("doc").alias(id_col),
-            F.coalesce(F.col("n_fp"), F.lit(0)).cast("long").alias("n_fp"),
-        )
-    )
-
-
-def winnow_fingerprints(df: DataFrame, text_col: str = "text", k: int = 5, w: int = 4) -> DataFrame:
-    """Arrow-batched winnowing: adds ``fingerprints array<long>``.
-    Vectorized numpy kernel per doc (identical picks to the pure-Python
-    rolling reference); per-character Python only for k large enough to
-    overflow the int64 dot product."""
-    import pyspark.sql.types as T
-
-    schema = T.StructType(df.schema.fields + [T.StructField("fingerprints", T.ArrayType(T.LongType()))])
-
-    def one(t: str) -> list[int]:
-        picks = _winnow_picks_vec(t, k, w)
-        return winnow_fingerprints_py(t, k, w) if picks is None else picks
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["fingerprints"] = [one(t or "") for t in pdf[text_col]]
-            yield pdf
-
-    return df.mapInPandas(run, schema=schema)
 
 
 # ----------------------------------------------------- sequence packing

@@ -120,35 +120,7 @@ def main() -> None:
         explain_str(QUERIES["dedup_minhash_lsh"](spark, "/root/testdata/sf0.001")),
     ))
 
-    # 5. LSH-blocked near-dup (the scale path for embedding dedup)
-    sections.append((
-        "cosine_neardup_lsh (bucket-blocked pair join)",
-        "MUST: the self-join key is (seed, bucket) — shuffle bounded by "
-        "bucket population, no CartesianProduct anywhere; exact cosine "
-        "evaluated on candidate pairs only.",
-        explain_str(QUERIES["cosine_neardup_lsh"](spark, "/root/testdata/sf0.001")),
-    ))
-
-    # 6. multi-probe ANN top-k
-    sections.append((
-        "ann_lsh_topk (multi-probe bucket ball + TakeOrdered)",
-        "MUST: bucket membership filter (IN probe-list) ahead of the "
-        "scoring projection; global top-k via TakeOrderedAndProject "
-        "(no full sort).  At scale `bucket` is the table's partition "
-        "key, so the IN filter becomes partition pruning at the scan.",
-        explain_str(QUERIES["ann_lsh_topk"](spark, "/root/testdata/sf0.001")),
-    ))
-
-    # 7. winnowing as pure DataFrame ops
-    sections.append((
-        "winnow_fingerprints (md5-slice + struct-min window, no Python)",
-        "MUST: no Python UDF anywhere (BatchEvalPython/ArrowEvalPython "
-        "absent); per-doc window partitions by doc — embarrassingly "
-        "parallel across documents.",
-        explain_str(QUERIES["winnow_fingerprints"](spark, "/root/testdata/sf0.001")),
-    ))
-
-    # 8. decontamination: broadcast probe, corpus never shuffled pre-join
+    # 5. decontamination: broadcast probe, corpus never shuffled pre-join
     sections.append((
         "decontaminate (broadcast benchmark-shingle probe)",
         "Witness: the corpus branch reaches the join with no KEY shuffle —\n"
@@ -167,7 +139,7 @@ def main() -> None:
         explain_str(QUERIES["decontaminate"](spark, "/root/testdata/sf0.001")),
     ))
 
-    # 9. connected components (pointer jumping, checkpointed sweeps)
+    # 6. connected components (pointer jumping, checkpointed sweeps)
     sections.append((
         "dedup_clusters (connected components, pointer jumping)",
         "Per sweep, three joins materialized by one eager localCheckpoint job:\n"
@@ -181,7 +153,7 @@ def main() -> None:
         explain_str(QUERIES["dedup_clusters"](spark, "/root/testdata/sf0.001")),
     ))
 
-    # 10. blocklist: corpus-side shuffle-freedom
+    # 7. blocklist: corpus-side shuffle-freedom
     sections.append((
         "blocklist_filter (domain suffix match, corpus never shuffled)",
         "The 100 TB contract in hoststats.tag_blocked's docstring, witnessed:\n"
@@ -195,7 +167,7 @@ def main() -> None:
         explain_str(QUERIES["blocklist_filter"](spark, "/root/testdata/sf0.001")),
     ))
 
-    # 11. incremental minhash probe (O(batch) signature work)
+    # 8. incremental minhash probe (O(batch) signature work)
     sections.append((
         "dedup_incremental (LSH index probe, O(batch) signatures)",
         "MUST: probe and index band rows meet in ONE hash join keyed on\n"
@@ -209,7 +181,7 @@ def main() -> None:
         explain_str(QUERIES["dedup_incremental"](spark, "/root/testdata/sf0.001")),
     ))
 
-    # 12. substring scrub (positions kernel + interval merge)
+    # 9. substring scrub (positions kernel + interval merge)
     sections.append((
         "substring_scrub (winnow positions + gaps-and-islands merge)",
         "MUST: the linear mod-2^64 Arrow fingerprint pass (MapInPandas —\n"
@@ -225,7 +197,7 @@ def main() -> None:
         explain_str(QUERIES["substring_scrub"](spark, "/root/testdata/sf0.001")),
     ))
 
-    # 13. competitive LM language ID (train + score + argmax window)
+    # 10. competitive LM language ID (train + score + argmax window)
     sections.append((
         "lang_id_lm (per-language bigram LM, train/score/argmax)",
         "MUST: fully JVM-side (no Python stage anywhere — the bigram\n"
@@ -258,17 +230,6 @@ def main() -> None:
         "BroadcastExchanges; the final rank is one window over matched\n"
         "docs only, never the corpus.",
         explain_str(QUERIES["bm25_topk"](spark, "/root/testdata/sf0.001")),
-    ))
-
-    sections.append((
-        "hybrid_rrf (rank fusion over two top-k lists)",
-        "Witness: both retrieval arms end in their own bounded top-k\n"
-        "(window rank <= 25) BEFORE the union — the fuse stage's inputs\n"
-        "are k-row frames, so the grouped sum and final rank window cost\n"
-        "O(k), independent of corpus size.  The BM25 arm keeps its\n"
-        "scan-side term filter; the dense arm is the brute-topk scan\n"
-        "(TakeOrderedAndProject) the ann_brute contract row pins.",
-        explain_str(QUERIES["hybrid_rrf"](spark, "/root/testdata/sf0.001")),
     ))
 
     sections.append((

@@ -1,13 +1,11 @@
 """Unit tests for the r4 pipeline additions: C4 line filters, DSIR
-importance weights, and SemDeDup within-cluster near-dup pairs.  Each
+importance weights and repetition scores.  Each
 rule/branch is pinned on tiny constructed inputs; the cross-engine hash
 gate (test_entry_contract) covers the sf0.01 contract rows."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from crawler_spark.functions import similarity, textops
+from crawler_spark.functions import textops
 
 
 # ------------------------------------------------------------ c4_clean
@@ -107,70 +105,6 @@ def test_dsir_model_is_broadcast(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastHashJoin" in plan  # bucket model never sort-merge-joined
-
-
-# ------------------------------------------------- semantic_dedup_pairs
-def _vec(*xs):
-    return [float(x) for x in xs]
-
-
-def test_semantic_dedup_pairs_within_cluster_only(spark):
-    # centroids: e0 and e1.  ids 10,11 are near-identical copies near e0
-    # (a within-cluster near-dup pair); id 20 sits near e1.  10-20 and
-    # 11-20 are low-cos AND cross-cluster -> exactly one pair emitted.
-    emb = spark.createDataFrame(
-        [
-            (0, _vec(1, 0, 0, 0)),
-            (1, _vec(0, 1, 0, 0)),
-            (10, _vec(0.9, 0.1, 0, 0)),
-            (11, _vec(0.9, 0.11, 0, 0)),
-            (20, _vec(0.1, 0.9, 0, 0)),
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    cents = emb.where(F.col("vec_id") < 2)
-    rows = similarity.semantic_dedup_pairs(
-        emb, cents, thresh_micro=990_000
-    ).collect()
-    got = {(r.id_a, r.id_b) for r in rows}
-    assert (10, 11) in got
-    # 0 and 10 are same-cluster with cos ~0.99 < 0.999.. threshold edge:
-    # only pairs >= thresh survive
-    assert all(r.cos_micro >= 990_000 for r in rows)
-    assert not any({a, b} & {20} and {a, b} & {10, 11} for a, b in got)
-
-
-def test_semantic_dedup_blocks_cross_cluster_high_cos(spark):
-    # two vectors with cos ~0.98 but assigned to DIFFERENT centroids:
-    # SemDeDup's blocking means no pair (this is the approximation the
-    # clustering buys — document, don't hide)
-    emb = spark.createDataFrame(
-        [
-            (0, _vec(1, 0.2, 0, 0)),
-            (1, _vec(0.2, 1, 0, 0)),
-            (10, _vec(1, 0.45, 0, 0)),   # nearer e0
-            (11, _vec(0.45, 1, 0, 0)),   # nearer e1, cos(10,11) ~ 0.73
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    cents = emb.where(F.col("vec_id") < 2)
-    rows = similarity.semantic_dedup_pairs(emb, cents, thresh_micro=700_000).collect()
-    got = {(r.id_a, r.id_b) for r in rows}
-    assert (10, 11) not in got          # blocked despite cos ~0.73
-    assert got == {(0, 10), (1, 11)}    # within-cluster pairs still found
-
-
-def test_semantic_dedup_centroids_broadcast(spark):
-    emb = spark.createDataFrame(
-        [(i, _vec(i, 1, 0, 0)) for i in range(20)],
-        "vec_id long, embedding array<double>",
-    )
-    cents = emb.where(F.col("vec_id") < 2)
-    plan = (
-        similarity.semantic_dedup_pairs(emb, cents)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
 # ------------------------------------- repetition_scores (r4 rewrite)

@@ -17,7 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = ["events", "documents", "embeddings"]
+TABLES = ["events", "documents"]
 
 
 @pytest.fixture(scope="module")

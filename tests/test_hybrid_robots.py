@@ -1,36 +1,11 @@
-"""Hybrid RRF fusion + robots.txt contract-surface kernels.
+"""robots.txt, boilerplate n-gram, chunking and registered-domain
+contract-surface kernels.
 
-Contract rows hybrid_rrf / robots_rules hash these against DuckDB at
-sf0.01 (test_entry_contract.py); these units pin the fusion arithmetic
-and the RFC 9309 behaviors the synthetic robots corpus exercises.
+Their contract rows hash these against DuckDB at sf0.01
+(test_entry_contract.py); these units pin the RFC 9309 behaviors the
+synthetic robots corpus exercises and the kernels' closed forms.
 """
 from pyspark.sql import functions as F
-
-from crawler_spark.functions import similarity
-
-
-def test_rrf_fuse_known_values(spark):
-    # doc 1 is rank 1 in both lists; doc 2 only lexical rank 2; doc 3
-    # only dense rank 2
-    lex = spark.createDataFrame([(1, 1), (2, 2)], "doc_id long, rank int")
-    dense = spark.createDataFrame([(1, 1), (3, 2)], "doc_id long, rank int")
-    out = {r.doc_id: r for r in similarity.rrf_fuse([lex, dense]).collect()}
-    c1 = 1_000_000_000 // 61
-    c2 = 1_000_000_000 // 62
-    assert out[1].rrf_nano == 2 * c1 and out[1].n_lists == 2
-    assert out[2].rrf_nano == c2 and out[2].n_lists == 1
-    assert out[3].rrf_nano == c2 and out[3].n_lists == 1
-    assert out[1].rank == 1
-    # tie between docs 2 and 3 broken by id asc
-    assert out[2].rank == 2 and out[3].rank == 3
-
-
-def test_rrf_fuse_topk_cut(spark):
-    lex = spark.createDataFrame(
-        [(i, i) for i in range(1, 30)], "doc_id long, rank int"
-    )
-    out = similarity.rrf_fuse([lex], topk=5).collect()
-    assert [r.doc_id for r in sorted(out, key=lambda r: r.rank)] == [1, 2, 3, 4, 5]
 
 
 def test_robots_rules_contract_behaviors(spark):

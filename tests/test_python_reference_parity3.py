@@ -1,6 +1,6 @@
 """Third-engine randomized parity, part 3 — the older late-r4
-never-driver-checked extraction kernels: date_extract, img_alt_pairs,
-robots_meta, html_meta.  Same discipline as parts 1-2.
+never-driver-checked extraction kernels: img_alt_pairs, robots_meta,
+html_meta.  Same discipline as parts 1-2.
 """
 
 from __future__ import annotations
@@ -12,67 +12,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from crawler_spark.functions import dates, textops  # noqa: E402
-
-ISO_RE = re.compile(
-    r"((?:19|20)\d{2}-(?:0[1-9]|1[0-2])-(?:0[1-9]|[12]\d|3[01]))")
-MONTHS = dates.MONTHS
-
-
-def _py_date(html, url):
-    m = re.search(r'article:published_time[^>]*content="'
-                  + ISO_RE.pattern, html)
-    if m:
-        return m.group(1), "meta"
-    m = re.search(r'<time[^>]*datetime="' + ISO_RE.pattern, html)
-    if m:
-        return m.group(1), "time"
-    m = re.search(r'"datePublished"\s*:\s*"' + ISO_RE.pattern, html)
-    if m:
-        return m.group(1), "jsonld"
-    m = re.search(
-        r"/((?:19|20)\d{2})/(0[1-9]|1[0-2])/(0[1-9]|[12]\d|3[01])/", url)
-    if m:
-        return "-".join(m.groups()), "url"
-    m = ISO_RE.search(html)
-    if m:
-        return m.group(1), "text"
-    m = re.search(
-        r"(?i)(January|February|March|April|May|June|July|August"
-        r"|September|October|November|December)\s+(\d{1,2}),\s+"
-        r"((?:19|20)\d{2})", html)
-    if m and 1 <= int(m.group(2)) <= 31:
-        mm = MONTHS.index(m.group(1).lower()) + 1
-        return f"{m.group(3)}-{mm:02d}-{int(m.group(2)):02d}", "text_us"
-    return None, None
-
-
-def test_date_extract_vs_python(spark):
-    rng = random.Random(11)
-    rows = []
-    frags = [
-        lambda d: f'<meta property="article:published_time" content="{d}T01:02:03Z">',
-        lambda d: f'<time datetime="{d}">x</time>',
-        lambda d: f'{{"datePublished": "{d}"}}',
-        lambda d: f"posted {d} ok",
-        lambda d: "Published May 5, 2019",
-        lambda d: "published FEBRUARY 9, 2001!",
-        lambda d: "bad date 2021-13-40",
-        lambda d: "no date",
-    ]
-    for i in range(150):
-        d = (f"{2000 + rng.randint(0, 20)}-{rng.randint(1, 12):02d}"
-             f"-{rng.randint(1, 28):02d}")
-        picks = rng.sample(frags, rng.randint(1, 3))
-        html = "<body>" + " ".join(p(d) for p in picks) + "</body>"
-        url = (f"https://e.com/{d.replace('-', '/')}/p"
-               if rng.random() < 0.3 else "https://e.com/p")
-        rows.append((i, html, url))
-    df = spark.createDataFrame(rows, "doc_id long, html string, url string")
-    got = {r["doc_id"]: (r["pub_date"], r["date_src"])
-           for r in dates.date_extract(df).collect()}
-    for i, html, url in rows:
-        assert got[i] == _py_date(html, url), (html, url)
+from crawler_spark.functions import textops  # noqa: E402
 
 
 def test_img_alt_pairs_vs_python(spark):

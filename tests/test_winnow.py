@@ -1,6 +1,6 @@
-"""Winnowing kernels: the SQL (md5-slice) and pandas (rolling-hash)
-implementations must agree with the pure-Python core on every doc,
-including the short-text / all-repeats edge cases."""
+"""Winnowing kernels: the vectorized production kernels must agree with
+the pure-Python reference on every doc, including the short-text /
+all-repeats edge cases."""
 
 from __future__ import annotations
 
@@ -16,27 +16,6 @@ DOCS = [
     (6, "abcdefg"),         # n_hashes (3) < window (4) -> single window
     (7, "xyz " * 40),
 ]
-
-
-def test_winnow_sql_matches_python_md5(spark):
-    df = spark.createDataFrame(DOCS, "doc_id long, text string")
-    got = {
-        r.doc_id: r.n_fp
-        for r in textops.winnow_counts_sql(df, "doc_id").collect()
-    }
-    want = {
-        i: len(textops.winnow_fingerprints_py(t, 5, 4, hash_kind="md5"))
-        for i, t in DOCS
-    }
-    assert got == want
-
-
-def test_winnow_pandas_matches_python_rolling(spark):
-    df = spark.createDataFrame(DOCS, "doc_id long, text string")
-    out = textops.winnow_fingerprints(df)
-    got = {r.doc_id: list(r.fingerprints) for r in out.collect()}
-    want = {i: textops.winnow_fingerprints_py(t, 5, 4) for i, t in DOCS}
-    assert got == want
 
 
 def test_winnow_counts_prod_matches_python_rolling(spark):
@@ -69,22 +48,6 @@ def test_winnow_count_vec_matches_python_fuzz():
                 assert k >= 7, (s, k, w)
             else:
                 assert picks == want, (s, k, w)
-
-
-def test_winnow_sql_xxhash64_variant(spark):
-    """The JVM-hash variant keeps the identical plan shape and the
-    winnowing density bounds; only pick positions may differ from md5."""
-    df = spark.createDataFrame(DOCS, "doc_id long, text string")
-    got = {
-        r.doc_id: r.n_fp
-        for r in textops.winnow_counts_sql(df, "doc_id", hash_kind="xxhash64").collect()
-    }
-    for i, t in DOCS:
-        n_h = max(0, len(t) - 5 + 1)
-        if n_h == 0:
-            assert got[i] == 0, (i, got[i])
-        else:
-            assert 1 <= got[i] <= max(1, n_h - 4 + 1), (i, got[i])
 
 
 def test_winnow_hash_kinds_same_pick_structure():
@@ -156,10 +119,8 @@ def test_winnow_picks_prod_dataframe(spark):
 
 
 def test_dup_substring_pairs_prod_and_sql_agree_on_planted(spark):
-    """Both fingerprint kernels honour the (k,w) guarantee: the planted
-    verbatim overlap surfaces under the prod mod-2^64 kernel AND the
-    md5 SQL twin (pick positions may differ; the guaranteed pair may
-    not)."""
+    """The prod mod-2^64 fingerprint kernel honours the (k,w) guarantee:
+    the planted verbatim overlap surfaces as the only pair."""
     from crawler_spark.functions import dedup
 
     shared = "the exact same long verbatim overlapping span of text"
@@ -171,8 +132,5 @@ def test_dup_substring_pairs_prod_and_sql_agree_on_planted(spark):
         ],
         "doc_id long, text string",
     )
-    for kernel in ("prod", "sql"):
-        out = dedup.dup_substring_pairs(
-            docs, k=12, w=4, min_shared=2, max_df=100, kernel=kernel
-        )
-        assert [(r.doc_a, r.doc_b) for r in out.collect()] == [(1, 2)], kernel
+    out = dedup.dup_substring_pairs(docs, k=12, w=4, min_shared=2, max_df=100)
+    assert [(r.doc_a, r.doc_b) for r in out.collect()] == [(1, 2)]
