@@ -28,7 +28,7 @@ Layout
 - ``corpus``      deterministic synthetic Common-Crawl-style page corpus (seed 42)
 - ``oracle``      pure-Python single-worker reference oracle for equivalence tests
 - ``functions``   training-data pipeline ops (dedup suite, text analysis, link graph,
-                  host stats, sketches, anchors)
+                  host stats, sketches, anchors, snapshots)
 """
 
 __version__ = "0.1.0"

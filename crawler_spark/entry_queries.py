@@ -21,11 +21,12 @@ dedup_minhash_lsh, simhash_pairs, winnow_counts_prod, dup_substrings,
 pii_redact, line_dedup, sequence_pack, bigram_lm, warc_roundtrip,
 host_rank (fixed-point PageRank, unrolled-CTE oracle), dedup_clusters
 (connected components, recursive-CTE oracle), decontaminate (broadcast
-benchmark-shingle scrub), cdx_index (SURT archive key) — every query
-has a DuckDB oracle (the md5-slice hashing trick makes simhash
-reproducible; minhash uses the affine family over one md5-derived
-32-bit base hash; the production winnow and dup_substrings kernels
-recompute their polynomial hashes in SQL).
+benchmark-shingle scrub), snapshot_diff (recrawl differencing),
+cdx_index (SURT archive key) — every query has a DuckDB oracle (the
+md5-slice hashing trick makes simhash reproducible; minhash uses the
+affine family over one md5-derived 32-bit base hash; the production
+winnow and dup_substrings kernels recompute their polynomial hashes in
+SQL).
 """
 
 from __future__ import annotations
@@ -566,6 +567,69 @@ def q_decontaminate(spark, sf_dir):
     )
 
 
+def q_snapshot_diff(spark, sf_dir):
+    """Recrawl differencing (snapshots.snapshot_diff): snapshot B is a
+    deterministic perturbation of A (doc_id % 17 == 3 removed,
+    % 10 == 1 content-changed, % 13 == 5 re-added under a new url id);
+    the full-outer fingerprint join classifies added/removed/changed
+    and drops the unchanged majority."""
+    from .functions import snapshots
+
+    docs = _docs(spark, sf_dir)
+    old = docs.select(
+        F.col("doc_id").alias("url_id"), F.md5("text").alias("fp")
+    )
+    new = docs.where(F.col("doc_id") % 17 != 3).select(
+        F.col("doc_id").alias("url_id"),
+        F.when(
+            F.col("doc_id") % 10 == 1,
+            F.md5(F.concat(F.col("text"), F.lit("!"))),
+        ).otherwise(F.md5("text")).alias("fp"),
+    )
+    added = docs.where(F.col("doc_id") % 13 == 5).select(
+        (F.col("doc_id") + 10000000).alias("url_id"),
+        F.md5("text").alias("fp"),
+    )
+    return snapshots.snapshot_diff(
+        old, new.union(added), key_col="url_id"
+    ).select(F.col("url_id").cast("long").alias("url_id"), "status")
+
+
+def q_revisit_records(spark, sf_dir):
+    """WARC revisit-record classification (snapshots.revisit_records):
+    a 3-epoch fetch log is synthesized deterministically from the
+    documents table (content version flips at epoch 1 for doc_id%3==0,
+    again at epoch 2 for doc_id%4==1, and doc_id%5==2 REVERTS to the
+    original content at epoch 2 — exercising the revisit-to-a-non-
+    adjacent-capture case).  First capture of each (url, digest) is a
+    'response'; every later identical fetch is a 'revisit' pointing at
+    the original capture epoch.  One window over (url_id, digest)."""
+    from .functions import snapshots
+
+    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    f0 = docs.select(
+        F.col("doc_id").alias("url_id"),
+        "text",
+        F.explode(F.array(F.lit(0), F.lit(1), F.lit(2))).alias("epoch"),
+    )
+    v = (
+        F.when((F.col("url_id") % 5 == 2) & (F.col("epoch") == 2), F.lit(0))
+        .otherwise(
+            ((F.col("epoch") >= 1) & (F.col("url_id") % 3 == 0)).cast("int")
+            + ((F.col("epoch") == 2) & (F.col("url_id") % 4 == 1)).cast("int")
+        )
+    )
+    fetches = f0.select(
+        "url_id",
+        F.col("epoch").cast("long").alias("epoch"),
+        F.md5(F.concat(F.col("text"), F.lit("#"), v.cast("string"))).alias("digest"),
+    )
+    return snapshots.revisit_records(fetches).select(
+        "url_id", "epoch", "digest", "record_type",
+        F.col("refers_to_epoch").cast("long").alias("refers_to_epoch"),
+    )
+
+
 def q_cdx_index(spark, sf_dir):
     """CDX-style archive index (urlnorm.surt_col): urls are synthesized
     with mixed-case host + fragment so the row exercises the full
@@ -690,6 +754,38 @@ def q_mixture_sample(spark, sf_dir):
     return textops.sample_temperature(
         _docs(spark, sf_dir), target_frac_micro=100_000
     ).select("doc_id", "source")
+
+
+def q_recrawl_priority(spark, sf_dir):
+    """Change-rate recrawl scheduling (snapshots.recrawl_priority): an
+    8-epoch observation history is synthesized deterministically (url's
+    change probability = (doc_id % 10) * 10%, md5-bucket draw per
+    epoch), then the integer Cho&Garcia-Molina-shape estimator turns it
+    into a revisit interval and an overdue score.  All floor-division
+    fixed point — DuckDB replays the identical history and estimator."""
+    from .functions import snapshots
+
+    docs = _docs(spark, sf_dir).select("doc_id", "source")
+    hist = docs.select(
+        F.col("doc_id").alias("url_id"),
+        F.col("source").alias("host"),
+        F.explode(F.sequence(F.lit(1), F.lit(8))).alias("epoch"),
+    )
+    bucket = textops.hash_bucket_micro(
+        F.concat(
+            F.col("url_id").cast("string"),
+            F.lit(":"),
+            F.col("epoch").cast("string"),
+        ),
+        seed="recrawl",
+    )
+    hist = hist.withColumn(
+        "changed",
+        (bucket < (F.col("url_id") % 10) * 100_000).cast("int"),
+    )
+    return snapshots.recrawl_priority(hist, now_epoch=12).withColumnRenamed(
+        "interval", "revisit_interval"
+    )
 
 
 def q_host_reputation(spark, sf_dir):
@@ -1586,6 +1682,84 @@ def q_site_template(spark, sf_dir):
     )
 
 
+def q_cache_policy(spark, sf_dir):
+    """HTTP caching-policy extraction (snapshots.cache_policy):
+    doc_id%7 cycles max-age+ETag, no-store, no-cache+Last-Modified,
+    a variable max-age of (doc_id%40)*100000 (0..3.9M s — exercises
+    BOTH the min clamp at 60 and the 30-day max clamp), ETag-only
+    (default TTL), s-maxage-beats-max-age, and no caching headers.
+    Oracle replays the header synthesis and every regex + clamp."""
+    from .functions import snapshots
+
+    d = _docs(spark, sf_dir).select("doc_id")
+    k = F.col("doc_id") % 7
+    crlf = "\r\n"
+    hdrs = F.concat(
+        F.lit("HTTP/1.1 200 OK" + crlf),
+        F.when(k == 0, F.format_string(
+            "Cache-Control: public, max-age=3600%sETag: \"v%d\"",
+            F.lit(crlf), F.col("doc_id")))
+        .when(k == 1, F.lit("Cache-Control: no-store"))
+        .when(k == 2, F.lit(
+            "Cache-Control: no-cache" + crlf +
+            "Last-Modified: Wed, 21 Oct 2015 07:28:00 GMT"))
+        .when(k == 3, F.format_string(
+            "Cache-Control: private, max-age=%d",
+            (F.col("doc_id") % 40) * 100000))
+        .when(k == 4, F.format_string("ETag: \"only%d\"", F.col("doc_id")))
+        .when(k == 5, F.lit("Cache-Control: s-maxage=7200, max-age=600"))
+        .otherwise(F.lit("Content-Type: text/html")),
+        F.lit(crlf + "Server: x" + crlf),
+    )
+    out = snapshots.cache_policy(
+        d.select("doc_id", hdrs.alias("headers"))
+    )
+    # -1 sentinel for "no declared max-age": the driver hash requires a
+    # non-nullable integer dtype (NULL bigint -> float64 in the oracle
+    # frame); the kernel itself keeps NULL semantics.
+    return out.withColumn(
+        "max_age_s", F.coalesce(F.col("max_age_s"), F.lit(-1)).cast("long")
+    )
+
+
+def q_hreflang_clusters(spark, sf_dir):
+    """hreflang alternate clustering (hreflang.hreflang_clusters):
+    clusters of 3 language variants (c = doc_id div 3; en/de/fr by
+    doc_id%3), every page carrying the full 3-tag alternate set (the
+    de tag with attributes REVERSED to exercise order-freedom) plus
+    an x-default -> en tag on even clusters.  cluster_id = x-default
+    href (even c) else min href (the de url); keeper = the en member.
+    The oracle replays the synthesis in closed form — any kernel
+    extraction/election bug diverges from it."""
+    from .functions import hreflang
+
+    d = _docs(spark, sf_dir).select("doc_id")
+    c = F.floor(F.col("doc_id") / 3).cast("long")
+    v = F.col("doc_id") % 3
+    lang = (
+        F.when(v == 0, F.lit("en")).when(v == 1, F.lit("de"))
+        .otherwise(F.lit("fr"))
+    )
+    u_en = F.format_string("https://ex.com/c%d/en", c)
+    u_de = F.format_string("https://ex.com/c%d/de", c)
+    u_fr = F.format_string("https://ex.com/c%d/fr", c)
+    url = F.format_string("https://ex.com/c%d/", c)
+    url = F.concat(url, lang)
+    html = F.concat(
+        F.lit('<head><link rel="alternate" hreflang="en" href="'),
+        u_en, F.lit('"><link href="'), u_de,
+        F.lit('" hreflang="de" rel="alternate"><link rel="alternate" '
+              'hreflang="fr" href="'), u_fr, F.lit('">'),
+        F.when(c % 2 == 0, F.concat(
+            F.lit('<link rel="alternate" hreflang="x-default" href="'),
+            u_en, F.lit('">'))).otherwise(F.lit("")),
+        F.lit("</head>"),
+    )
+    return hreflang.hreflang_clusters(
+        d.select("doc_id", url.alias("url"), html.alias("html"))
+    )
+
+
 def q_table_extract(spark, sf_dir):
     """HTML table mining (textops.table_extract): doc_id%3 cycles a
     3-row table (th header, a nested-<b> cell, an empty cell), TWO
@@ -1639,6 +1813,61 @@ def q_schema_types(spark, sf_dir):
         F.lit("</script>"), og, F.lit("</head><body>b</body>"),
     )
     return textops.schema_types(d.select("doc_id", html.alias("html")))
+
+
+def q_bitext_pairs(spark, sf_dir):
+    """Page-aligned bitext mining (hreflang.bitext_pairs) over the
+    same synthesis as q_hreflang_clusters: every de/fr page pairs
+    with its cluster's en pivot -> 2 pairs per full cluster, 1 for
+    the trailing partial cluster.  Oracle closed form: docs with
+    doc_id%3 in (1,2) pair with doc_id - doc_id%3."""
+    from .functions import hreflang
+
+    d = _docs(spark, sf_dir).select("doc_id")
+    c = F.floor(F.col("doc_id") / 3).cast("long")
+    v = F.col("doc_id") % 3
+    lang = (
+        F.when(v == 0, F.lit("en")).when(v == 1, F.lit("de"))
+        .otherwise(F.lit("fr"))
+    )
+    u_en = F.format_string("https://ex.com/c%d/en", c)
+    u_de = F.format_string("https://ex.com/c%d/de", c)
+    u_fr = F.format_string("https://ex.com/c%d/fr", c)
+    url = F.concat(F.format_string("https://ex.com/c%d/", c), lang)
+    html = F.concat(
+        F.lit('<head><link rel="alternate" hreflang="en" href="'),
+        u_en, F.lit('"><link href="'), u_de,
+        F.lit('" hreflang="de" rel="alternate"><link rel="alternate" '
+              'hreflang="fr" href="'), u_fr, F.lit('">'),
+        F.when(c % 2 == 0, F.concat(
+            F.lit('<link rel="alternate" hreflang="x-default" href="'),
+            u_en, F.lit('">'))).otherwise(F.lit("")),
+        F.lit("</head>"),
+    )
+    return hreflang.bitext_pairs(
+        d.select("doc_id", url.alias("url"), html.alias("html"))
+    )
+
+
+def q_refetch_schedule(spark, sf_dir):
+    """Adaptive revisit scheduling (snapshots.refetch_schedule):
+    prev interval 3600*(1+doc_id%4), changed on doc_id%3==0, declared
+    max-age 7200*(doc_id%5) on even ids (0 exercises the min clamp of
+    the declared floor), no_store on doc_id%7==0.  Halve-on-change /
+    double-on-static, clamps, and the declared-freshness floor all
+    replayed in the oracle."""
+    from .functions import snapshots
+
+    d = _docs(spark, sf_dir).select("doc_id")
+    inp = d.select(
+        "doc_id",
+        (F.lit(3600) * (1 + F.col("doc_id") % 4)).alias("prev_interval_s"),
+        (F.col("doc_id") % 3 == 0).alias("changed"),
+        F.when(F.col("doc_id") % 2 == 0,
+               F.lit(7200) * (F.col("doc_id") % 5)).alias("max_age_s"),
+        (F.col("doc_id") % 7 == 0).alias("no_store"),
+    )
+    return snapshots.refetch_schedule(inp)
 
 
 def q_focused_priority(spark, sf_dir):
@@ -2286,8 +2515,12 @@ QUERIES = {
     "unicode_clean": q_unicode_clean,
     "soft404_detect": q_soft404_detect,
     "site_template": q_site_template,
+    "cache_policy": q_cache_policy,
+    "hreflang_clusters": q_hreflang_clusters,
     "table_extract": q_table_extract,
     "schema_types": q_schema_types,
+    "bitext_pairs": q_bitext_pairs,
+    "refetch_schedule": q_refetch_schedule,
     "focused_priority": q_focused_priority,
     # -- (b) newest driver green is r2 (html_extract displaced at the
     # last birth: its html_to_text kernel gets a fresh driver green
@@ -2334,13 +2567,13 @@ QUERIES = {
     "dedup_anti_join": q_dedup_anti_join,
     "regex_field_extract": q_regex_field_extract,
     "fingerprint": q_fingerprint,
+    # ---------------- driver window ends here (50) ------------------
+    # link_explode .. per_source_agg are r3/r4 hash-green with
+    # untouched kernels and head the r6 queue.
     "link_explode": q_link_explode,
     "body_length_filter": q_body_length_filter,
     "rlike_filter": q_rlike_filter,
     "text_quality": q_text_quality,
-    # ---------------- driver window ends here (50) ------------------
-    # link_truncate .. per_source_agg are r3/r4 hash-green with
-    # untouched kernels and head the r6 queue.
     "link_truncate": q_link_truncate,
     "tfidf_topk": q_tfidf_topk,
     "lang_id_lm": q_lang_id_lm,
@@ -2348,6 +2581,7 @@ QUERIES = {
     "host_rank": q_host_rank,
     "dedup_clusters": q_dedup_clusters,
     "warc_roundtrip": q_warc_roundtrip,
+    "revisit_records": q_revisit_records,
     "per_source_agg": q_per_source_agg,
     # Everything below holds a driver hash-green row from r4 or r3
     # (CORRECTNESS_r04/r03.json) with its kernel untouched since; the
@@ -2393,10 +2627,12 @@ QUERIES = {
     "pii_redact": q_pii_redact,
     "line_dedup": q_line_dedup,
     "sequence_pack": q_sequence_pack,
+    "snapshot_diff": q_snapshot_diff,
     "cdx_index": q_cdx_index,
     "corpus_stats": q_corpus_stats,
     "length_quantiles": q_length_quantiles,
     "mixture_sample": q_mixture_sample,
+    "recrawl_priority": q_recrawl_priority,
     "host_reputation": q_host_reputation,
     "blocklist_filter": q_blocklist_filter,
     "anchor_text": q_anchor_text,
@@ -3047,6 +3283,28 @@ ORACLES = {
         where doc % 97 <> 0
         group by 1 having count(*) >= 3
     """,
+    "snapshot_diff": """
+        with old as (select doc_id as url_id, md5(text) as fp from documents),
+        new as (
+          select doc_id as url_id,
+                 case when doc_id % 10 = 1 then md5(text || '!')
+                      else md5(text) end as fp
+          from documents where doc_id % 17 <> 3
+          union all
+          select doc_id + 10000000, md5(text)
+          from documents where doc_id % 13 = 5
+        ), j as (
+          select coalesce(o.url_id, n.url_id) as url_id,
+                 o.fp as fp_old, n.fp as fp_new
+          from old o full outer join new n on o.url_id = n.url_id
+        )
+        select cast(url_id as bigint) as url_id,
+               case when fp_old is null then 'added'
+                    when fp_new is null then 'removed'
+                    when fp_old <> fp_new then 'changed' end as status
+        from j
+        where fp_old is null or fp_new is null or fp_old <> fp_new
+    """,
     "cdx_index": """
         select 'com,example,h' || (doc_id % 53) || ',p' || (doc_id % 7)
                || ')/Doc/' || doc_id || '?s=' || (doc_id % 3) as surt,
@@ -3182,6 +3440,36 @@ ORACLES = {
                cast(component as bigint) as component,
                rn = 1 as kept
         from win
+    """,
+    "recrawl_priority": """
+        with h as (
+          select d.doc_id as url_id, d.source as host, e.epoch,
+                 case when cast(concat('0x', substr(md5(
+                          'recrawl|' || cast(d.doc_id as varchar) || ':'
+                          || cast(e.epoch as varchar)), 1, 8)) as bigint)
+                      % 1000000 < (d.doc_id % 10) * 100000
+                      then 1 else 0 end as changed
+          from documents d
+          cross join (select unnest(generate_series(1, 8)) as epoch) e
+        ), a as (
+          select url_id, host,
+                 count(*) as n_obs, sum(changed) as n_changes,
+                 max(epoch) as last_epoch
+          from h group by 1, 2
+        ), i as (
+          select *,
+                 least(greatest(
+                     floor(16 * (n_obs + 1) / (n_changes + 1)), 1), 64)
+                   as iv
+          from a
+        )
+        select url_id, host,
+               cast(n_obs as bigint) as n_obs,
+               cast(n_changes as bigint) as n_changes,
+               cast(iv as bigint) as revisit_interval,
+               cast(floor((12 - last_epoch) * 1000000 / iv) as bigint)
+                 as overdue_micro
+        from i
     """,
     "host_reputation": rf"""
         with per_doc as (
@@ -3433,6 +3721,23 @@ ORACLES = {
     "dedup_ngram_jaccard": _SHINGLE_CTE + "," + _JACCARD_TAIL,
     "dedup_minhash_lsh": _minhash_lsh_oracle(),
     "dedup_incremental": _minhash_probe_oracle(),
+    "revisit_records": """
+        with fetches as (
+          select doc_id as url_id, e as epoch,
+                 md5(text || '#' || cast(
+                   case when doc_id % 5 = 2 and e = 2 then 0
+                        else (case when e >= 1 and doc_id % 3 = 0 then 1 else 0 end)
+                           + (case when e = 2 and doc_id % 4 = 1 then 1 else 0 end)
+                   end as varchar)) as digest
+          from documents, unnest(generate_series(0, 2)) as g(e)
+        )
+        select url_id, cast(epoch as bigint) as epoch, digest,
+               case when epoch = min(epoch) over (partition by url_id, digest)
+                    then 'response' else 'revisit' end as record_type,
+               cast(min(epoch) over (partition by url_id, digest) as bigint)
+                 as refers_to_epoch
+        from fetches
+    """,
     "simhash_pairs": _simhash_md5_oracle(max_hamming=8),
     "winnow_counts_prod": _winnow_prod_oracle(k=5, w=4),
     "dup_substrings": _dup_substrings_oracle(k=20, w=4, min_shared=5, max_df=200),
@@ -5302,6 +5607,70 @@ ORACLES["site_template"] = r"""
     from tagged group by doc_id, host
 """
 
+ORACLES["cache_policy"] = r"""
+    with syn as (
+      select doc_id,
+             'HTTP/1.1 200 OK' || chr(13) || chr(10) ||
+             case doc_id % 7
+               when 0 then 'Cache-Control: public, max-age=3600'
+                           || chr(13) || chr(10)
+                           || 'ETag: "v' || doc_id || '"'
+               when 1 then 'Cache-Control: no-store'
+               when 2 then 'Cache-Control: no-cache' || chr(13) || chr(10)
+                           || 'Last-Modified: Wed, 21 Oct 2015 07:28:00 GMT'
+               when 3 then 'Cache-Control: private, max-age='
+                           || ((doc_id % 40) * 100000)
+               when 4 then 'ETag: "only' || doc_id || '"'
+               when 5 then 'Cache-Control: s-maxage=7200, max-age=600'
+               else 'Content-Type: text/html' end
+             || chr(13) || chr(10) || 'Server: x' || chr(13) || chr(10)
+             as h
+      from documents
+    ), ex as (
+      select doc_id, h,
+        regexp_extract(h, '(?i)cache-control:[^\r\n]*s-maxage=(\d+)', 1)
+          as smax,
+        regexp_extract(h, '(?i)cache-control:(?:[^\r\n]*[ ,;])?max-age=(\d+)', 1)
+          as mage,
+        regexp_matches(h, '(?i)cache-control:[^\r\n]*no-store') as no_store,
+        regexp_matches(h, '(?i)cache-control:[^\r\n]*no-cache') as no_cache,
+        regexp_matches(h, '(?i)^etag:|[\r\n]etag:') as has_etag,
+        regexp_matches(h, '(?i)^last-modified:|[\r\n]last-modified:')
+          as has_lm
+      from syn
+    ), pol as (
+      select doc_id, no_store, no_cache, has_etag,
+             (has_etag or has_lm) as has_validator,
+             case when smax <> '' then cast(smax as bigint)
+                  when mage <> '' then cast(mage as bigint) end as max_age_s
+      from ex
+    )
+    select doc_id,
+           cast(coalesce(max_age_s, -1) as bigint) as max_age_s,
+           no_store, no_cache, has_etag, has_validator,
+           cast(case
+             when no_store then 60
+             when no_cache or max_age_s is not null then
+               least(greatest(
+                 case when no_cache then 0 else max_age_s end, 60),
+                 2592000)
+             else 86400 end as bigint) as refetch_after_s
+    from pol
+"""
+
+ORACLES["hreflang_clusters"] = r"""
+    with syn as (
+      select doc_id, doc_id // 3 as c, doc_id % 3 as v from documents
+    )
+    select doc_id,
+           case when c % 2 = 0 then printf('https://ex.com/c%d/en', c)
+                else printf('https://ex.com/c%d/de', c) end as cluster_id,
+           case v when 0 then 'en' when 1 then 'de' else 'fr' end
+             as page_lang,
+           cast(case when c % 2 = 0 then 4 else 3 end as bigint) as n_alts,
+           (v = 0) as is_keeper
+    from syn
+"""
 
 ORACLES["table_extract"] = r"""
     with base as (
@@ -5349,6 +5718,45 @@ ORACLES["schema_types"] = r"""
     from base
 """
 
+ORACLES["bitext_pairs"] = r"""
+    select doc_id - (doc_id % 3) as id_pivot,
+           doc_id as id_other,
+           case when (doc_id // 3) % 2 = 0
+                then printf('https://ex.com/c%d/en', doc_id // 3)
+                else printf('https://ex.com/c%d/de', doc_id // 3) end
+             as cluster_id,
+           case doc_id % 3 when 1 then 'de' else 'fr' end as lang_other
+    from documents
+    where doc_id % 3 in (1, 2)
+"""
+
+ORACLES["refetch_schedule"] = r"""
+    with inp as (
+      select doc_id,
+             3600 * (1 + doc_id % 4) as prev_interval_s,
+             (doc_id % 3 = 0) as changed,
+             case when doc_id % 2 = 0 then 7200 * (doc_id % 5) end
+               as max_age_s,
+             (doc_id % 7 = 0) as no_store
+      from documents
+    ), calc as (
+      select doc_id,
+             least(greatest(
+               case when changed then prev_interval_s // 2
+                    else prev_interval_s * 2 end, 60), 2592000)
+               as adaptive,
+             case when (not no_store) and max_age_s is not null
+                  then least(greatest(max_age_s, 60), 2592000)
+                  else 60 end as declared
+      from inp
+    )
+    select doc_id,
+           cast(greatest(adaptive, declared) as bigint)
+             as next_interval_s,
+           case when declared > adaptive then 'declared'
+                else 'adaptive' end as source
+    from calc
+"""
 
 ORACLES["focused_priority"] = r"""
     with links as (

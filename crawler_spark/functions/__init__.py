@@ -5,11 +5,13 @@ needs dedup / text-analysis / link-graph stages.  The modules an entry
 point (``main.py`` or ``examples/``) uses: ``dedup``, ``textops``,
 ``graph`` and ``hoststats`` by the corpus build, ``graph`` and
 ``anchors`` by the trust and focused crawls, ``sketches`` by the crawl
-monitor.  Every module here has such a caller: ``tests/test_package.py``
-walks the imports from the entry points and fails on a module none of
-them reaches.  All hot paths are built-in Spark SQL expressions (JVM,
-codegen); Python appears only as Arrow-batched pandas UDFs where Spark
-lacks the primitive (simhash bit-banging, winnowing).
+monitor.  ``snapshots`` and ``hreflang`` are reached only from the
+contract rows and tests; ``tests/test_package.py`` walks the imports
+from the entry points and names exactly these two, so one that gains a
+caller or is deleted must leave that list.  All hot paths are built-in
+Spark SQL expressions (JVM, codegen); Python appears only as
+Arrow-batched pandas UDFs where Spark lacks the primitive (simhash
+bit-banging, winnowing).
 """
 
 from pyspark.sql import DataFrame

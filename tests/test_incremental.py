@@ -1,9 +1,10 @@
-"""Incremental cross-snapshot dedup: the minhash index probe, plus
-containment pairs."""
+"""Incremental cross-snapshot ops: minhash index probe + WARC revisits."""
 
 from __future__ import annotations
 
-from crawler_spark.functions import dedup
+from pyspark.sql import functions as F
+
+from crawler_spark.functions import dedup, snapshots
 
 
 def _mk_docs(spark, rows):
@@ -103,6 +104,41 @@ def test_index_append_rewrites_only_touched_buckets(spark, tmp_path):
     ).collect()
     assert len(hit) == 1 and hit[0].match_id == 100
     assert hit[0].jac_micro == 1_000_000
+
+
+def test_revisit_records_classification(spark):
+    fetches = spark.createDataFrame(
+        [
+            # url 1: content constant -> epoch 0 response, 1-2 revisits of 0
+            (1, 0, "d0"), (1, 1, "d0"), (1, 2, "d0"),
+            # url 2: changes at 1, reverts at 2 -> revisit points at epoch 0
+            (2, 0, "a"), (2, 1, "b"), (2, 2, "a"),
+        ],
+        "url_id long, epoch long, digest string",
+    )
+    out = {
+        (r.url_id, r.epoch): (r.record_type, r.refers_to_epoch)
+        for r in snapshots.revisit_records(fetches).collect()
+    }
+    assert out[(1, 0)] == ("response", 0)
+    assert out[(1, 1)] == ("revisit", 0)
+    assert out[(1, 2)] == ("revisit", 0)
+    assert out[(2, 0)] == ("response", 0)
+    assert out[(2, 1)] == ("response", 1)
+    assert out[(2, 2)] == ("revisit", 0)
+
+
+def test_revisit_saved_bytes_rollup(spark):
+    """The archival win: payload bytes are only stored for responses."""
+    fetches = spark.createDataFrame(
+        [(1, 0, "x", 100), (1, 1, "x", 100), (1, 2, "y", 120)],
+        "url_id long, epoch long, digest string, length long",
+    )
+    out = snapshots.revisit_records(fetches)
+    saved = out.where(F.col("record_type") == "revisit").agg(
+        F.sum("length")
+    ).collect()[0][0]
+    assert saved == 100
 
 
 def test_containment_catches_subset_jaccard_misses(spark):

@@ -1,7 +1,7 @@
 """The spark-submit deliverable: dist/crawler_spark.zip builds
 deterministically and the package imports from the zip alone (what
 --py-files does on every executor); and every kernel module it ships
-is one an entry point uses."""
+is one an entry point uses, or one of the few still named as not."""
 
 from __future__ import annotations
 
@@ -72,6 +72,15 @@ def _imports(path: str, name: str):
             yield from (f"{base}.{a.name}" for a in node.names)
 
 
+#: Kernel modules that only the contract rows and tests reach.  The list
+#: may only shrink: a module that gains an entry-point caller, or is
+#: deleted, leaves it (the assertion below is an equality).
+UNREACHED_KERNELS = {
+    "crawler_spark.functions.hreflang",
+    "crawler_spark.functions.snapshots",
+}
+
+
 def test_every_functions_module_reachable_from_an_entry_point():
     """No Spark: walk the import graph from main.py and examples/*.py.
     A kernel module no entry point reaches is contract-only upkeep."""
@@ -96,5 +105,5 @@ def test_every_functions_module_reachable_from_an_entry_point():
     }
     assert kernels, "no kernel modules found"
     unreached = kernels - reached
-    assert not unreached, (
+    assert unreached == UNREACHED_KERNELS, (
         f"kernel modules no entry point imports: {sorted(unreached)}")

@@ -17,7 +17,7 @@ from collections import defaultdict
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from crawler_spark.functions import dedup, hoststats  # noqa: E402
+from crawler_spark.functions import dedup, hoststats, snapshots  # noqa: E402
 
 
 def _norm(s):
@@ -90,3 +90,49 @@ def test_site_template_vs_python(spark):
     assert any(k[1] < k[0] for k in want.values())  # some line dropped
 
 
+def test_cache_policy_vs_python(spark):
+    rng = random.Random(43)
+    directives = [
+        "max-age={}", "no-store", "no-cache", "private", "public",
+        "s-maxage={}", "must-revalidate",
+    ]
+    rows = []
+    for i in range(120):
+        parts = []
+        if rng.random() < 0.8:
+            chosen = rng.sample(directives, rng.randint(1, 3))
+            vals = [c.format(rng.choice([0, 60, 3600, 10**9]))
+                    for c in chosen]
+            parts.append("Cache-Control: " + ", ".join(vals))
+        if rng.random() < 0.4:
+            parts.append(f'ETag: "e{i}"')
+        if rng.random() < 0.3:
+            parts.append("Last-Modified: Tue, 01 Jan 2019 00:00:00 GMT")
+        parts.append("Server: x")
+        rows.append((i, "HTTP/1.1 200 OK\r\n" + "\r\n".join(parts)))
+    df = spark.createDataFrame(rows, "doc_id long, headers string")
+    got = {r["doc_id"]: r.asDict()
+           for r in snapshots.cache_policy(df).collect()}
+
+    for i, h in rows:
+        sm = re.search(r"(?i)cache-control:[^\r\n]*s-maxage=(\d+)", h)
+        ma = re.search(r"(?i)cache-control:[^\r\n]*max-age=(\d+)", h)
+        declared = int(sm.group(1)) if sm else (
+            int(ma.group(1)) if ma else None)
+        no_store = bool(re.search(r"(?i)cache-control:[^\r\n]*no-store", h))
+        no_cache = bool(re.search(r"(?i)cache-control:[^\r\n]*no-cache", h))
+        has_etag = bool(re.search(r"(?i)^etag:|[\r\n]etag:", h))
+        has_lm = bool(
+            re.search(r"(?i)^last-modified:|[\r\n]last-modified:", h))
+        if no_store:
+            refetch = 60
+        elif no_cache or declared is not None:
+            refetch = min(max(0 if no_cache else declared, 60), 2592000)
+        else:
+            refetch = 86400
+        g = got[i]
+        assert g["max_age_s"] == declared, (i, h)
+        assert g["no_store"] == no_store and g["no_cache"] == no_cache
+        assert g["has_etag"] == has_etag
+        assert g["has_validator"] == (has_etag or has_lm)
+        assert g["refetch_after_s"] == refetch, (i, h)

@@ -1,5 +1,6 @@
 """Third-engine randomized parity, part 2 — table_extract vs a Python
-regex mini-parser and soft404_detect vs a Python vote.  Same discipline as
+regex mini-parser, hreflang_clusters vs a Python cluster/election
+reference, and soft404_detect vs a Python vote.  Same discipline as
 part 1: one seeded batch per kernel, plain-Python references
 independent of both Spark and the DuckDB oracles.
 """
@@ -13,7 +14,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from crawler_spark.functions import textops  # noqa: E402
+from crawler_spark.functions import hreflang, textops  # noqa: E402
 
 
 def _py_tables(html):
@@ -64,6 +65,45 @@ def test_table_extract_vs_python(spark):
              r["row_text"]))
     for i, h in enumerate(htmls):
         assert sorted(got.get(i, [])) == sorted(_py_tables(h)), h
+
+
+def test_hreflang_vs_python(spark):
+    rng = random.Random(9)
+    rows = []
+    meta = {}
+    for c in range(20):
+        langs = rng.sample(["en", "de", "fr", "ja", "pt"],
+                           rng.randint(1, 4))
+        xdef = rng.random() < 0.5
+        urls = {l: f"https://x.io/c{c}/{l}" for l in langs}
+        tags = "".join(
+            f'<link rel="alternate" hreflang="{l}" href="{urls[l]}">'
+            for l in langs
+        )
+        if xdef:
+            tags += ('<link rel="alternate" hreflang="x-default" '
+                     f'href="{urls[langs[0]]}">')
+        present = [l for l in langs if rng.random() < 0.9] or langs[:1]
+        for l in present:
+            doc = len(rows)
+            rows.append((doc, urls[l], f"<head>{tags}</head>"))
+            meta[doc] = (c, l, langs, xdef, urls, present)
+    df = spark.createDataFrame(rows, "doc_id long, url string, html string")
+    got = {r["doc_id"]: r.asDict()
+           for r in hreflang.hreflang_clusters(df).collect()}
+    # python reference
+    clusters = {}
+    for doc, (c, l, langs, xdef, urls, present) in meta.items():
+        cid = urls[langs[0]] if xdef else min(urls.values())
+        clusters.setdefault(cid, []).append((doc, l, urls[l]))
+    for cid, members in clusters.items():
+        en = sorted(u for _, l, u in members if l == "en")
+        keep_url = en[0] if en else min(u for _, _, u in members)
+        for doc, l, u in members:
+            g = got[doc]
+            assert g["cluster_id"] == cid, doc
+            assert g["page_lang"] == l
+            assert g["is_keeper"] == (u == keep_url), (doc, cid)
 
 
 def test_soft404_vs_python(spark):

@@ -1,7 +1,8 @@
 """Third-engine randomized parity, part 9 — the late-r4 debtor kernels
 the earlier parity parts did not reach: link-farm stats, Heaps-law
 vocab stats, intra-document repeated-line removal, unicode
-normalization, structured-data typing, and focused-crawl scoring.  Same
+normalization, structured-data typing, bitext pair mining, adaptive
+revisit scheduling, and focused-crawl scoring.  Same
 discipline as parts 1-8: one seeded batch per kernel, plain-Python
 references independent of both Spark and the DuckDB oracles.
 """
@@ -20,6 +21,8 @@ from crawler_spark.functions import (  # noqa: E402
     anchors,
     dedup,
     graph,
+    hreflang,
+    snapshots,
     textops,
 )
 
@@ -192,9 +195,63 @@ def test_schema_types_vs_python(spark):
 
 
 # ---------------------------------------------------------- bitext pairs
+def test_bitext_pairs_vs_python(spark):
+    rng = random.Random(17)
+    rows, meta = [], []
+    for c in range(25):
+        langs = rng.sample(["en", "de", "fr", "ja", "pt"],
+                           rng.randint(1, 4))
+        urls = {lang: f"https://x.io/c{c}/{lang}" for lang in langs}
+        tags = "".join(
+            f'<link rel="alternate" hreflang="{lang}" href="{urls[lang]}">'
+            for lang in langs)
+        for lang in langs:
+            doc = len(rows)
+            rows.append((doc, urls[lang], f"<head>{tags}</head>"))
+            meta.append((doc, c, lang, min(urls.values())))
+    df = spark.createDataFrame(rows, "doc_id long, url string, html string")
+    got = sorted(
+        (r["id_pivot"], r["id_other"], r["cluster_id"], r["lang_other"])
+        for r in hreflang.bitext_pairs(df).collect())
+    by_cluster: dict[str, list[tuple[int, str]]] = {}
+    for doc, _c, lang, cid in meta:
+        by_cluster.setdefault(cid, []).append((doc, lang))
+    exp = sorted(
+        (p, o, cid, ol)
+        for cid, members in by_cluster.items()
+        for p, pl in members if pl == "en"
+        for o, ol in members if ol != "en")
+    assert got == exp
+    assert len(exp) > 0  # multi-lang clusters with an en pivot exist
 
 
 # ----------------------------------------------------- refetch_schedule
+def test_refetch_schedule_vs_python(spark):
+    rng = random.Random(18)
+    rows = []
+    for i in range(200):
+        rows.append((
+            i,
+            rng.choice([30, 60, 3600, 86_400, 20 * 86_400, 40 * 86_400]),
+            rng.random() < 0.5,
+            rng.choice([None, 0, 120, 7200, 60 * 86_400]),
+            rng.random() < 0.2,
+        ))
+    df = spark.createDataFrame(
+        rows, "doc_id long, prev_interval_s long, changed boolean,"
+              " max_age_s long, no_store boolean")
+    got = {r["doc_id"]: (r["next_interval_s"], r["source"])
+           for r in snapshots.refetch_schedule(df).collect()}
+    lo, hi = 60, 30 * 86_400
+    for i, prev, changed, max_age, no_store in rows:
+        adaptive = min(max(prev // 2 if changed else prev * 2, lo), hi)
+        if not no_store and max_age is not None:
+            declared = min(max(max_age, lo), hi)
+        else:
+            declared = lo
+        nxt = max(adaptive, declared)
+        src = "declared" if declared > adaptive else "adaptive"
+        assert got[i] == (nxt, src), (i, prev, changed, max_age, no_store)
 
 
 # ----------------------------------------------------- focused_priority

@@ -1,5 +1,30 @@
-"""host_reputation rollup semantics."""
-from crawler_spark.functions import hoststats
+"""recrawl_priority estimator semantics + host_reputation rollup."""
+from pyspark.sql import functions as F
+
+from crawler_spark.functions import hoststats, snapshots
+
+
+def test_recrawl_priority_estimator(spark):
+    # url 1: changed every visit; url 2: never changed; url 3: one obs.
+    rows = (
+        [(1, "a", e, 1) for e in range(1, 9)]
+        + [(2, "a", e, 0) for e in range(1, 9)]
+        + [(3, "b", 8, 1)]
+    )
+    hist = spark.createDataFrame(rows, "url_id int, host string, epoch int, changed int")
+    out = {
+        r.url_id: r
+        for r in snapshots.recrawl_priority(hist, now_epoch=12).collect()
+    }
+    # hot page: 16*9//9 = 16
+    assert out[1].interval == 16 and out[1].n_changes == 8
+    # cold page: 16*9//1 = 144 -> clamped at 64
+    assert out[2].interval == 64 and out[2].n_changes == 0
+    # fresh page (1 obs, 1 change): 16*2//2 = 16, Laplace keeps it at base
+    assert out[3].interval == 16 and out[3].n_obs == 1
+    # overdue: hot page 4 epochs late on a 16 interval = 250000 micro
+    assert out[1].overdue_micro == 250_000
+    assert out[2].overdue_micro == 62_500  # 4e6 // 64
 
 
 def test_host_reputation_rollup(spark):

@@ -1,5 +1,6 @@
-"""Closed-form unit tests for benchmark decontamination and the SURT
-key."""
+"""Closed-form unit tests for snapshot differencing, benchmark
+decontamination, and the SURT key (the crawl-archive trio added in
+round 3)."""
 
 from __future__ import annotations
 
@@ -10,8 +11,35 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from crawler_spark.functions import dedup  # noqa: E402
+from crawler_spark.functions import dedup, snapshots  # noqa: E402
 from crawler_spark.urlnorm import surt_col  # noqa: E402
+
+
+def test_snapshot_diff_closed_form(spark):
+    old = spark.createDataFrame(
+        [("a", "f1"), ("b", "f2"), ("c", "f3")], ["url", "fp"]
+    )
+    new = spark.createDataFrame(
+        [("a", "f1"), ("b", "XX"), ("d", "f4")], ["url", "fp"]
+    )
+    got = {
+        r["url"]: r["status"]
+        for r in snapshots.snapshot_diff(old, new).collect()
+    }
+    # 'a' unchanged -> dropped
+    assert got == {"b": "changed", "c": "removed", "d": "added"}
+
+
+def test_churn_by_key(spark):
+    diff = spark.createDataFrame(
+        [("h1", "added"), ("h1", "added"), ("h1", "changed"), ("h2", "removed")],
+        ["host", "status"],
+    )
+    got = {
+        r["host"]: (r["n_added"], r["n_removed"], r["n_changed"])
+        for r in snapshots.churn_by_key(diff, "host", key_col="host").collect()
+    }
+    assert got == {"h1": (2, 0, 1), "h2": (0, 1, 0)}
 
 
 def test_contaminated_docs_closed_form(spark):
