@@ -302,18 +302,23 @@ class Catalog:
         return removed
 
     def read(
-        self, spark: SparkSession, table: str, snapshot_id: int | None = None
+        self, spark: SparkSession, table: str, snapshot_id: int | None = None,
+        schema=None,
     ) -> DataFrame:
+        """Live rows of ``table``.  With the table's ``schema`` the read
+        plans without touching a file; without it Spark infers the schema
+        from a parquet footer in a job of its own."""
         dirs = self._live_dirs(table, snapshot_id)
         if not dirs:
             raise FileNotFoundError(f"table {table!r} has no committed snapshots")
-        return spark.read.parquet(*dirs)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*dirs)
 
     def read_or_empty(
         self, spark: SparkSession, table: str, schema, snapshot_id: int | None = None
     ) -> DataFrame:
         try:
-            return self.read(spark, table, snapshot_id)
+            return self.read(spark, table, snapshot_id, schema)
         except FileNotFoundError:
             return spark.createDataFrame([], schema)
 

@@ -48,8 +48,6 @@ N_GROUPS = 2
 TOPICS_PER_GROUP = 8
 N_TOPICS = 12
 
-PAGES_PER_HOST = 1 + N_TAGS + N_DETAILS + N_GROUPS + N_TOPICS
-
 BASE_TS = "2026-01-01 00:00:00"
 
 

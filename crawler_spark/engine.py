@@ -29,10 +29,23 @@ the (budget-bounded, small) scheduled set, so the huge corpus is only
 ONE pass over the corpus: scan -> decode -> join -> ban/short flags ->
 all rule kernels as a single CASE-dispatch projection
 (parsers.dispatch_cols); only the narrow parsed result (no bodies) is
-persisted, and misses are recovered by a cheap broadcast anti-join
+stashed, and misses are recovered by a cheap broadcast anti-join
 against its keys.  At 100 TB the pages table would additionally be
 bucketed by url_norm / carry Iceberg bloom skip indexes so the scan
 prunes files; the join shape stays identical.
+
+Job chain: Spark runs the round as a chain of jobs (under AQE every
+shuffle and broadcast stage is a job of its own), and at small scale a
+round costs per job, not per row.  So the chain carries no job that only
+recomputes or counts: the candidates are ranked once into a stashed,
+``_sched``-flagged frame (scheduled and deferred are two filters of it);
+the schedule_log commit observes the candidate count and the scheduled
+rows' frontier buckets; ``assign_seq``'s checkpoint observes its
+per-partition counts and the new rows' buckets (the dirty set); the
+misses are stashed once for failures and retries; the frontier and seen
+reads carry their schemas, so planning them opens no parquet footer.
+Every job carries a ``crawl r<N>: <layer>`` description, and
+``tests/test_round_jobs.py`` pins the count.
 """
 
 from __future__ import annotations
@@ -42,7 +55,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import corpus as corpus_mod
@@ -54,9 +67,9 @@ from .frontier import (
     seed_frontier,
 )
 from .parsers import dispatch_cols
-from .politeness import apply_robots, rank_by_budget
+from .politeness import apply_robots, flag_by_budget
 from .rules import FieldsRule, LinkRule, Task
-from .schemas import LINEAGE_SCHEMA, METRICS_SCHEMA, SEEN_SCHEMA
+from .schemas import FRONTIER_SCHEMA, LINEAGE_SCHEMA, METRICS_SCHEMA, SEEN_SCHEMA
 from .seen import IncrementalBloom, dedup_candidates
 
 TABLES = [
@@ -190,9 +203,11 @@ def _reload_col(tasks: dict[str, Task]) -> F.Column:
 
 def bootstrap(spark: SparkSession, cat: Catalog, cfg: CrawlConfig) -> dict:
     seeds = seed_frontier(spark, cfg.tasks)
+    spark.sparkContext.setJobDescription("crawl r0: bootstrap")
     snap, n = cat.commit_buckets(
         seeds, "frontier_pending", "url_hash", cfg.frontier_buckets
     )
+    spark.sparkContext.setJobDescription(None)
     state = {
         "round": 0,
         "max_seq": n - 1,
@@ -215,6 +230,24 @@ def resume(cat: Catalog) -> dict:
         if table not in state["snapshots"] and cat.exists(table):
             cat.drop(table)
     return state
+
+
+def _stash(df: DataFrame) -> DataFrame:
+    """Keep ``df``'s rows for the round's several consumers.
+
+    A lazy local checkpoint, not ``persist()``: the first action that
+    reads the frame stores its rows inside that action's own job, while
+    AQE builds a persisted frame in a table-cache query stage, one extra
+    job before its first consumer.  The plan's shuffle and broadcast
+    stages run at this call, under the caller's job description."""
+    return df.localCheckpoint(eager=False)
+
+
+def _release(df: DataFrame) -> None:
+    """Drop the rows a :func:`_stash` frame stored (``unpersist`` does
+    not reach a checkpoint; left alone they wait for the JVM's GC)."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
 
 class _BgAction:
     """One overlapped driver action on a ``pyspark.InheritableThread``.
@@ -265,8 +298,15 @@ def run_round(
 ) -> dict:
     round_no = state["round"] + 1
     t0 = time.time()
+    _sc = spark.sparkContext
 
-    pending = cat.read(spark, "frontier_pending")
+    def label(layer: str | None) -> None:
+        # every job of the round carries a `crawl r<N>: <layer>`
+        # description: the Spark UI / REST API groups stage walls by it
+        _sc.setJobDescription(layer and f"crawl r{round_no}: {layer}")
+
+    # schema'd reads: planning them opens no parquet footer (no job)
+    pending = cat.read(spark, "frontier_pending", schema=FRONTIER_SCHEMA)
     seen_df = cat.read_or_empty(spark, "seen", SEEN_SCHEMA)
     any_reload = any(t.reload for t in cfg.tasks.values())
 
@@ -286,9 +326,9 @@ def run_round(
     bloom_wall = 0.0
     if probe and bloom.n != state["seen_count"]:
         _t = time.time()
-        spark.sparkContext.setJobDescription(f"crawl r{round_no}: dedup prefilter")
+        label("dedup prefilter")
         bloom.rebuild_from(seen_df.select("url_hash"), state["seen_count"])
-        spark.sparkContext.setJobDescription(None)
+        label(None)
         bloom_wall = time.time() - _t
     round_bcs: list = []  # probe broadcasts, destroyed after the round's actions
     # lazy: the probe UDF runs inside the `commit schedule_log` jobs
@@ -310,16 +350,24 @@ def run_round(
     )
     if any_reload:
         cand = cand.unionByName(rel_rows)
-    # F5 politeness: robots + per-(task,host) round budget, skew-salted
-    cand = apply_robots(
-        cand, robots_df, cfg.round_seconds, broadcast_robots=robots_small
-    ).persist()
-    scheduled, deferred = rank_by_budget(
-        cand, cfg.tasks, cfg.round_seconds, cfg.salt_buckets,
+    # F5 politeness: robots + per-(task,host) round budget, skew-salted.
+    # Ranked ONCE into one flagged, stashed frame: scheduled and deferred
+    # are two filters of its rows, so no later consumer re-runs the dedup
+    # or the rank windows.  The dedup and rank shuffles run here.
+    label("commit schedule_log")
+    ranked = _stash(flag_by_budget(
+        apply_robots(
+            cand, robots_df, cfg.round_seconds, broadcast_robots=robots_small
+        ),
+        cfg.tasks, cfg.round_seconds, cfg.salt_buckets,
         politeness_key=cfg.politeness_key,
-    )
-    scheduled = scheduled.select(*FRONTIER_COLS).persist()
-    deferred = deferred.select(*FRONTIER_COLS)
+    ))
+    scheduled = ranked.where(F.col("_sched")).select(*FRONTIER_COLS)
+    deferred = ranked.where(~F.col("_sched")).select(*FRONTIER_COLS)
+    # frontier bucket of a row (the frontier table is pmod(url_hash, B)
+    # bucketed; see the frontier delta-commit below)
+    B = cfg.frontier_buckets
+    _bcol = F.pmod(F.col("url_hash"), F.lit(B)).cast("int")
 
     # ---- commit plumbing (state last = the checkpoint barrier).  Row
     # counts come from the write itself (parquet footers / Iceberg
@@ -328,38 +376,47 @@ def run_round(
     rows: dict[str, int] = {}
     stage_wall: dict[str, float] = {}
 
-    _sc = spark.sparkContext
-
     def commit(df: DataFrame, table: str, mode: str = "append") -> None:
         t = time.time()
-        # label every action so the Spark UI / REST API attributes its
-        # jobs (the scaling decomposition groups stage walls by this)
-        _sc.setJobDescription(f"crawl r{round_no}: commit {table}")
+        label(f"commit {table}")
         # skip_empty: long crawls must not accrue one empty snapshot dir
         # per table per round (manifest + union growth); overwrites always
         # commit (they reset the live set)
         snaps[table], rows[table] = cat.write_counted(
             df, table, mode, skip_empty=(mode == "append")
         )
-        _sc.setJobDescription(None)
+        label(None)
         stage_wall[table] = time.time() - t
 
-    # crawl-order artifact committed FIRST: it materializes `scheduled`
-    # into its (small) cache, so every later consumer — the fetch-join
-    # broadcast build, the miss anti-join, deferred — reads the cache
-    # instead of re-running the dedup/rank pipeline.
+    # crawl-order artifact committed FIRST: it stores `ranked`'s rows, so
+    # every later consumer — the fetch-join broadcast build, the miss
+    # anti-join, deferred — reads them instead of re-running the
+    # dedup/rank pipeline.  The same pass observes the candidate count
+    # and the buckets the scheduled rows leave, so neither costs a job of
+    # its own.
+    ranked_obs = Observation()
     commit(
-        scheduled.select(
+        ranked.observe(
+            ranked_obs,
+            F.count(F.lit(1)).alias("n_cand"),
+            F.collect_set(F.when(F.col("_sched"), _bcol)).alias("buckets"),
+        )
+        .where(F.col("_sched"))
+        .select(
             F.lit(round_no).alias("round"), "seq", "priority", "url_norm", "url_hash"
         ),
         "schedule_log",
     )
     n_scheduled = rows["schedule_log"]
+    observed = ranked_obs.get
+    # rank PARTITIONS the candidates into scheduled/deferred
+    n_deferred = observed["n_cand"] - n_scheduled
+    dirty_buckets = set(observed["buckets"])
 
     # S5 fetch + parse: ONE streaming pass over the corpus per round.
     # The corpus is never cached (at 10^10 URLs it never could be) —
     # scan -> join -> decode -> flags -> every rule kernel as CASE
-    # dispatch — and only the *narrow* result (no bodies) is persisted.
+    # dispatch — and only the *narrow* result (no bodies) is stashed.
     # Build-side gate: broadcast the scheduled set only below
     # broadcast_max_rows; above it (huge budgets x 10^7 hosts would blow
     # the driver) fall back to an un-hinted join — AQE picks the
@@ -397,7 +454,8 @@ def run_round(
         hits = hits.withColumn("body_bytes", F.octet_length(F.encode(F.col("body"), "UTF-8")))
     else:
         hits = hits.withColumn("body", F.decode(F.col("html"), "UTF-8"))
-    parsed = hits.select(
+    label("commit seen")  # the stash runs the fetch join's broadcast
+    parsed = _stash(hits.select(
         *FRONTIER_COLS,
         F.col("body").contains(cfg.ban_marker).alias("banned"),  # F8
         (F.col("body_bytes") < cfg.min_body_bytes).alias("short"),  # F9
@@ -407,7 +465,7 @@ def run_round(
                 rule_cols or dispatch_cols(cfg.tasks, body_col="body")
             ).items()
         ],
-    ).persist()
+    ))
 
     # ---- fetch misses (needed by the seen-delta when tasks reload)
     misses = scheduled.join(
@@ -433,7 +491,7 @@ def run_round(
             .select("url_hash", "url_norm")
             .withColumn("round", F.lit(round_no))
         )
-    commit(seen_delta, "seen")  # first action: populates the parsed cache
+    commit(seen_delta, "seen")  # first action: stores parsed's rows
     n_seen_delta = rows["seen"]
 
     # incremental bloom maintenance, only on a bloom this round probed
@@ -441,7 +499,7 @@ def run_round(
     # rebuild from the committed seen table only on capacity saturation
     # (doubling -> amortized O(1) full scans over the whole crawl)
     if probe and n_seen_delta:
-        spark.sparkContext.setJobDescription(f"crawl r{round_no}: bloom delta")
+        label("bloom delta")
         if bloom.saturated_by(n_seen_delta):
             bloom.rebuild_from(
                 cat.read(spark, "seen").select("url_hash"),
@@ -449,7 +507,7 @@ def run_round(
             )
         else:
             bloom.or_delta(seen_delta.select("url_hash"), n_seen_delta)
-        spark.sparkContext.setJobDescription(None)
+        label(None)
 
     ok = parsed.where(~F.col("banned") & ~F.col("short"))
     items = ok.where(F.col("emit")).select(
@@ -461,9 +519,13 @@ def run_round(
         F.lit(round_no).alias("round"),
     )
 
-    # ---- failures: fetch miss or ban -> retry once, then park (F7)
+    # ---- failures: fetch miss or ban -> retry once, then park (F7).
+    # Stashed: the failures commit and the retries in assign_seq both
+    # read it, so the miss anti-join (its broadcast runs here) runs once.
     banned = parsed.where(F.col("banned")).select(*FRONTIER_COLS)
-    failed = misses.unionByName(banned)
+    label("commit failures")
+    failed = _stash(misses.unionByName(banned))
+    label(None)
     retries = (
         failed.where(F.col("attempts") + 1 < cfg.max_attempts)
         .withColumn("attempts", F.col("attempts") + 1)
@@ -482,8 +544,8 @@ def run_round(
     )
 
     # ---- overlapped commit group.  Everything from here to the join
-    # below depends only on the (already materialized) parsed/scheduled/
-    # cand caches, never on each other, so the driver runs the actions
+    # below depends only on the (already stored) parsed, ranked and
+    # failed rows, never on each other, so the driver runs the actions
     # CONCURRENTLY instead of paying their planning + job walls in
     # sequence (r5 scaling decomposition: the per-round serial action
     # chain, not executor work, was the 8->32 ceiling).  Each action
@@ -496,15 +558,9 @@ def run_round(
     # InheritableThread as required for exactly this).  Each writes a
     # DIFFERENT table; the state checkpoint (the atomic commit
     # barrier) still happens strictly after all of them.
-    n_deferred = -1
     _f_results = _BgAction(lambda: commit(items, "results"))
     _f_failures = _BgAction(lambda: commit(parked, "failures"))
-    # rank_by_budget PARTITIONS cand into scheduled/deferred, so the
-    # deferred size is arithmetic over counts already paid for — a
-    # deferred.count() here re-ran the two-phase rank windows a
-    # second time every round (r4 profile: ~0.5s/round)
-    _f_ndef = _BgAction(lambda: cand.count() - n_scheduled)
-    # assign_seq in the main thread: it is eager (offsets collect)
+    # assign_seq in the main thread: it is eager (its checkpoint runs)
     # and the next section needs its output.
     # ---- discovery delta: one explode over the parsed cache covers
     # all LinkRule branches (rule constants ride the rows); seq
@@ -517,13 +573,15 @@ def run_round(
         .unionByName(retries.select(*noseq).withColumn("_retry", F.lit(1)))
     )
     _t = time.time()
-    spark.sparkContext.setJobDescription(f"crawl r{round_no}: assign_seq")
+    label("assign_seq")
+    # its checkpoint also observes the new rows' buckets into the dirty set
     new_rows, n_new = assign_seq(
         new_rows, ["_retry", "parent_seq", "link_pos"],
         start_seq=state["max_seq"] + 1,
+        bucket_col=_bcol, bucket_sink=dirty_buckets,
     )
-    new_rows = new_rows.select(*FRONTIER_COLS).persist()
-    seq_wall = time.time() - _t  # eager: offsets collect runs the pipeline
+    new_rows = new_rows.select(*FRONTIER_COLS)
+    seq_wall = time.time() - _t  # eager: the checkpoint runs the pipeline
 
     # ---- frontier delta-commit, still inside the pool scope so the
     # bucket rewrite (the round's second-largest action) overlaps the
@@ -538,9 +596,9 @@ def run_round(
     # *live* frontier (what can ever be scheduled) is exactly
     # deferred ∪ new, the same set the old full overwrite wrote.
     # Liveness counters therefore come from deferred/new, never from
-    # table row counts.
-    B = cfg.frontier_buckets
-    _bcol = F.pmod(F.col("url_hash"), F.lit(B)).cast("int")
+    # table row counts.  The dirty set was gathered by passes that
+    # already ran: the schedule_log commit observed the scheduled rows'
+    # buckets, assign_seq's checkpoint the new rows'.
     _t = time.time()
     compact = bool(
         cfg.frontier_compact_every
@@ -554,16 +612,8 @@ def run_round(
     # either way, force a reset commit this round
     if cat.bucket_count("frontier_pending") != B:
         compact = True
-    spark.sparkContext.setJobDescription(
-        f"crawl r{round_no}: frontier delta (dirty scan + count + commit)"
-    )
-    dirty = sorted(
-        r.b
-        for r in scheduled.select(_bcol.alias("b"))
-        .unionByName(new_rows.select(_bcol.alias("b")))
-        .distinct()
-        .collect()
-    )
+    label("frontier delta (commit)")
+    dirty = sorted(dirty_buckets)
     if compact:
         # full rewrite of the live set: flushes clean buckets' dead rows
         snaps["frontier_pending"], rows["frontier_pending"] = (
@@ -579,12 +629,11 @@ def run_round(
                 delta, "frontier_pending", "url_hash", B, buckets=dirty
             )
         )
-    spark.sparkContext.setJobDescription(None)
+    label(None)
     stage_wall["frontier_pending"] = time.time() - _t
     # the joins below re-raise the first failure, so no commit can be
     # silently lost before the checkpoint barrier (BaseException is
     # captured thread-side and re-thrown here — nothing is swallowed)
-    n_deferred = _f_ndef.result()
     _f_results.result()
     _f_failures.result()
     n_items = rows["results"]
@@ -628,8 +677,8 @@ def run_round(
             ]
         snaps["lineage"] = cat.write_rows(lrows, LINEAGE_SCHEMA, "lineage")
 
-    for df in (cand, scheduled, parsed, new_rows):
-        df.unpersist()
+    for df in (ranked, parsed, failed):
+        _release(df)
     for bc in round_bcs:
         bc.destroy()
 
@@ -678,6 +727,8 @@ def run_crawl(
         state = bootstrap(spark, cat, cfg)
     # built empty: the first round that probes loads it from `seen`
     bloom = IncrementalBloom(capacity=1 << 14) if cfg.use_bloom else None
+    # the corpus footer read and the robots count below
+    spark.sparkContext.setJobDescription("crawl r0: bootstrap")
     # http fetch mode needs no pages table (and may have no pages_path)
     pages_prepared = (
         prepare_pages(spark.read.parquet(cfg.pages_path))
@@ -707,6 +758,7 @@ def run_crawl(
             robots_df = None
         else:
             robots_small = n_robots <= cfg.broadcast_max_rows
+    spark.sparkContext.setJobDescription(None)
     rule_cols = dispatch_cols(cfg.tasks, body_col="body")
     while not state["finished"] and state["round"] < cfg.max_rounds:
         if round_hook is not None:

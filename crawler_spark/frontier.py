@@ -8,15 +8,16 @@ assigned at discovery time (SURVEY.md §7 hard part 1): total order =
 
 ``assign_seq`` gives *contiguous, deterministic* ids without a
 single-partition window: range-repartition by the (unique) order key,
-materialise that partitioning once, collect the tiny per-partition count
-vector, then add per-partition offsets to an intra-partition row_number.
-Cost: one checkpoint job plus one count job over the (small) discovery
-delta — never over the whole frontier.
+sort and materialise that partitioning once, observing the tiny
+per-partition count vector on the way, then add per-partition offsets to
+each row's position in its partition.  Cost: the range sample and one
+checkpoint over the (small) discovery delta — never over the whole
+frontier.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import urlnorm
@@ -63,6 +64,8 @@ def assign_seq(
     order_cols: list[str],
     start_seq: int,
     num_partitions: int | None = None,
+    bucket_col: F.Column | None = None,
+    bucket_sink: set | None = None,
 ) -> tuple[DataFrame, int]:
     """Add contiguous ``seq`` = start_seq + rank(order_cols) (0-based);
     returns (df, n_rows) — the count falls out of the offset pass free.
@@ -71,33 +74,46 @@ def assign_seq(
     partitioning: the global rank depends only on the total order of the
     key, not on range-sampler boundaries.  That holds only if the counts
     and the offsets see the SAME partitioning: ``repartitionByRange``
-    samples its bounds anew on every execution, so the ``_pid``-tagged
-    frame is checkpointed (eagerly, lineage cut) and both passes read it.
+    samples its bounds anew on every execution, so the sorted,
+    ``_pid``-tagged frame is checkpointed (eagerly, lineage cut) and both
+    passes read it.  The checkpoint keeps each partition's rows in sort
+    order, so a row's rank inside its partition is its
+    ``monotonically_increasing_id`` minus the partition's base
+    (``_pid << 33``) — no second shuffle for a row_number window.
+
+    The per-partition counts are observed on the checkpoint job itself,
+    one ``count_if`` per partition.  ``bucket_sink``: when given, the
+    same observation collects the distinct ``bucket_col`` values of the
+    rows into it (the engine's dirty frontier buckets), so they cost no
+    job of their own.
     """
     sc_cols = [F.col(c) for c in order_cols]
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    obs = Observation()
+    metrics = [F.count_if(F.col("_pid") == k).alias(f"n{k}") for k in range(n)]
+    if bucket_sink is not None:
+        metrics.append(F.collect_set(bucket_col).alias("buckets"))
     parted = (
         df.repartitionByRange(n, *sc_cols)
+        .sortWithinPartitions(*sc_cols)
         .withColumn("_pid", F.spark_partition_id())
+        .observe(obs, *metrics)
         .localCheckpoint(eager=True)
     )
-    counts = {r._pid: r.cnt for r in parted.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
-    offsets = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    off_map = F.create_map(
-        *[F.lit(x) for kv in offsets.items() for x in kv]
-    ) if offsets else F.create_map()
-    w = Window.partitionBy("_pid").orderBy(*sc_cols)
+    got = obs.get
+    if bucket_sink is not None:
+        bucket_sink.update(got["buckets"])
+    offsets, acc = [], 0
+    for k in range(n):
+        offsets += [F.lit(k), F.lit(acc)]
+        acc += got[f"n{k}"]
     out = (
         parted.withColumn(
             "seq",
             F.lit(start_seq)
-            + F.coalesce(F.element_at(off_map, F.col("_pid")), F.lit(0))
-            + F.row_number().over(w)
-            - 1,
+            + F.element_at(F.create_map(*offsets), F.col("_pid"))
+            + F.monotonically_increasing_id()
+            - F.shiftleft(F.col("_pid").cast("long"), 33),
         )
         .drop("_pid")
     )

@@ -485,24 +485,14 @@ def winnow_fingerprints_py(
     polynomial with natural mod-2^64 wraparound — vectorizable for ANY
     k (uint64 numpy) AND DuckDB-reproducible (hugeint % 2^64), window
     argmin taken on the UNSIGNED value, picks reinterpreted as int64
-    two's complement at output; 'md5' = first 8 hex chars of
-    md5(k-gram) as a 32-bit int — slower, but bit-reproducible in
-    DuckDB SQL / Spark built-ins (same trade as the MinHash
-    signatures)."""
+    two's complement at output."""
     s = _lower_keep_len(text)
     n = len(s)
     if n < k:
         return []
     hashes: list[int] = []
     signed_out = False
-    if hash_kind == "md5":
-        import hashlib
-
-        for i in range(n - k + 1):
-            hashes.append(
-                int(hashlib.md5(s[i : i + k].encode("utf-8")).hexdigest()[:8], 16)
-            )
-    elif hash_kind == "poly64":
+    if hash_kind == "poly64":
         signed_out = True
         B, M = 131, 1 << 64
         pw = pow(B, k - 1, M)

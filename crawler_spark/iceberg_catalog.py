@@ -237,8 +237,11 @@ class IcebergCatalog:
 
     # ------------------------------------------------------------- reads
     def read(
-        self, spark: SparkSession, table: str, snapshot_id: int | None = None
+        self, spark: SparkSession, table: str, snapshot_id: int | None = None,
+        schema=None,
     ) -> DataFrame:
+        # ``schema`` is accepted for Catalog parity: an Iceberg table
+        # carries its own, so planning a read launches no footer job
         log = self._load_log(table)
         if not log:
             raise FileNotFoundError(f"table {table!r} has no committed snapshots")

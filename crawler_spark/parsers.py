@@ -32,14 +32,6 @@ from pyspark.sql import functions as F
 
 from .rules import FieldsRule, LinkRule, MatchRule, Rule
 
-# Unified parse output: every rule branch yields this shape, then the
-# engine splits links -> frontier delta and items -> results.
-PARSE_OUT_FIELDS = """
-    links  array<struct<link_url:string, link_title:string>>,
-    data   map<string,string>,
-    emit   boolean
-"""
-
 _INT_RE = r"^[+-]?[0-9]+$"
 
 _META = set("\\^$.|?*+()[]{}")

@@ -24,6 +24,10 @@ of frontier rows through one task.  Two-phase rank fixes it:
 
 Phase 1 never drops a row phase 2 would keep: the global top-k of a
 (priority, seq) order is contained in the union of per-salt top-k's.
+Both phases flag the rows of ONE frame (``flag_by_budget``), so a round
+ranks once and takes scheduled and deferred as two filters of it; phase
+2 groups phase 1's rejects by their salt, so they never meet in one
+hot-host partition either.
 """
 
 from __future__ import annotations
@@ -187,18 +191,26 @@ def apply_robots(
     return out.withColumn("robots_budget", robots_budget).drop("crawl_delay_s", "_dis")
 
 
-def rank_by_budget(
+def flag_by_budget(
     candidates: DataFrame,
     tasks: dict[str, Task],
     round_seconds: float,
     salt_buckets: int = 1,
     politeness_key: str = "host",
-) -> tuple[DataFrame, DataFrame]:
-    """-> (scheduled, deferred) via per-host top-k under SCHED_ORDER.
+) -> DataFrame:
+    """``candidates`` plus a boolean ``_sched``: true on the rows the
+    per-host top-k under SCHED_ORDER admits this round, false on the
+    rows deferred to a later one.  Ranking once into one flagged frame
+    lets a caller persist it and take scheduled and deferred as two
+    filters of the same rows, instead of running the rank windows once
+    per output.
 
     Budget = min(base token-bucket budget, robots crawl-delay budget).
     Deferred rows stay pending for the next round — phase 1 *defers*,
-    never drops.
+    never drops.  Phase 2 ranks within (task, key, phase-1 survivor):
+    it is exact on the survivors, and the rows phase 1 already deferred
+    stay spread over their salts instead of meeting in one hot-host
+    partition.
 
     ``politeness_key``: "host" (default — the reference-equivalent
     semantics the oracle suite pins) or "registered_domain" — one
@@ -225,27 +237,34 @@ def rank_by_budget(
         df = df.withColumn("_pkey", F.col("host"))
     else:
         raise ValueError(f"unknown politeness_key: {politeness_key!r}")
-    deferred_parts: list[DataFrame] = []
+    part2 = [F.col("task_name"), F.col("_pkey")]
+    survivor = F.lit(True)
     if salt_buckets > 1:
-        df = df.withColumn("_salt", F.pmod(F.col("url_hash"), F.lit(salt_buckets)))
-        w1 = Window.partitionBy("task_name", "_pkey", "_salt").orderBy(*sched_order())
-        df = df.withColumn("_rn1", F.row_number().over(w1))
-        deferred_parts.append(
-            df.where(F.col("_rn1") > F.col("_budget"))
-            .drop("_rn1", "_salt", "_budget", "_pkey")
-        )
+        salt = F.pmod(F.col("url_hash"), F.lit(salt_buckets))
+        w1 = Window.partitionBy("task_name", "_pkey", salt).orderBy(*sched_order())
         # phase 1 keeps <= salt_buckets x budget rows per host (parallel
-        # across salts); phase 2 is exact on that small survivor set
-        df = df.where(F.col("_rn1") <= F.col("_budget")).drop("_rn1", "_salt")
-    w2 = Window.partitionBy("task_name", "_pkey").orderBy(*sched_order())
-    df = df.withColumn("_rn", F.row_number().over(w2))
-    scheduled = df.where(F.col("_rn") <= F.col("_budget")).drop(
-        "_rn", "_budget", "_pkey"
+        # across salts); its rejects keep their salt as phase-2 group
+        df = df.withColumn("_p1", F.row_number().over(w1) <= F.col("_budget"))
+        part2.append(F.when(F.col("_p1"), F.lit(-1)).otherwise(salt))
+        survivor = F.col("_p1")
+    w2 = Window.partitionBy(*part2).orderBy(*sched_order())
+    return df.withColumn(
+        "_sched", survivor & (F.row_number().over(w2) <= F.col("_budget"))
+    ).drop("_p1", "_budget", "_pkey")
+
+
+def rank_by_budget(
+    candidates: DataFrame,
+    tasks: dict[str, Task],
+    round_seconds: float,
+    salt_buckets: int = 1,
+    politeness_key: str = "host",
+) -> tuple[DataFrame, DataFrame]:
+    """-> (scheduled, deferred): the two halves of :func:`flag_by_budget`."""
+    df = flag_by_budget(
+        candidates, tasks, round_seconds, salt_buckets, politeness_key
     )
-    deferred_parts.append(
-        df.where(F.col("_rn") > F.col("_budget")).drop("_rn", "_budget", "_pkey")
+    return (
+        df.where(F.col("_sched")).drop("_sched"),
+        df.where(~F.col("_sched")).drop("_sched"),
     )
-    deferred = deferred_parts[0]
-    for d in deferred_parts[1:]:
-        deferred = deferred.unionByName(d)
-    return scheduled, deferred

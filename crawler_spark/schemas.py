@@ -1,9 +1,14 @@
-"""Fixed StructType schemas for every engine table.
+"""Fixed StructType schemas of the engine tables a round reads back or
+writes from driver-side rows.
 
 The reference derives output schemas dynamically at save time
 (/root/reference/collector/sqlstorage/sqlstorage.go:68-88) and keeps the
-frontier as in-memory Go structs (collect/request.go:13-27).  Here every
-table has a static, Arrow-compatible schema declared once (SURVEY.md §1).
+frontier as in-memory Go structs (collect/request.go:13-27).  Here the
+frontier and seen tables, which every round reads, have a static,
+Arrow-compatible schema declared once (SURVEY.md §1), so planning their
+reads opens no parquet footer; metrics and lineage are written from
+driver rows against theirs.  The tables a round only appends (results,
+failures, schedule_log) take the schema of the frame that writes them.
 """
 
 from __future__ import annotations
@@ -39,33 +44,6 @@ FRONTIER_SCHEMA = T.StructType(
     ]
 )
 
-# ---------------------------------------------------------------- pages
-# BASELINE.json input_hint: Common-Crawl-style corpus.
-PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), False),
-        T.StructField("html", T.BinaryType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-    ]
-)
-
-# ---------------------------------------------------------------- results
-# The reference's DataCell (collector/storage.go:7-18): reserved keys
-# Task/Rule/Url/Time plus a per-rule field map (all values strings after
-# MySQL MEDIUMTEXT coercion, sqlstorage.go:74-85,108-121).
-RESULTS_SCHEMA = T.StructType(
-    [
-        T.StructField("task", T.StringType(), False),
-        T.StructField("rule", T.StringType(), False),
-        T.StructField("url", T.StringType(), False),
-        T.StructField("ts", T.TimestampType(), False),
-        T.StructField("data", T.MapType(T.StringType(), T.StringType()), True),
-        T.StructField("round", T.IntegerType(), False),
-    ]
-)
-
 # ---------------------------------------------------------------- seen
 # Exact URL-seen set (reference: md5 map, engine/crawler.go:16-17).  The
 # bloom filter is a pre-filter only; this table is the truth.
@@ -74,18 +52,6 @@ SEEN_SCHEMA = T.StructType(
         T.StructField("url_hash", T.LongType(), False),
         T.StructField("url_norm", T.StringType(), False),
         T.StructField("round", T.IntegerType(), False),
-    ]
-)
-
-# ---------------------------------------------------------------- robots
-# north_rule addition; no reference analog (closest: per-task token
-# buckets, limiter/limiter.go:16-45).
-ROBOTS_SCHEMA = T.StructType(
-    [
-        T.StructField("host", T.StringType(), False),
-        T.StructField("crawl_delay_s", T.DoubleType(), True),
-        T.StructField("disallow_prefixes", T.ArrayType(T.StringType()), True),
-        T.StructField("fetched_ts", T.TimestampType(), True),
     ]
 )
 
@@ -106,15 +72,5 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("table", T.StringType(), False),
         T.StructField("snapshot_id", T.LongType(), False),
         T.StructField("rows", T.LongType(), False),
-    ]
-)
-
-FAILURES_SCHEMA = T.StructType(
-    [
-        T.StructField("url_hash", T.LongType(), False),
-        T.StructField("url", T.StringType(), False),
-        T.StructField("round", T.IntegerType(), False),
-        T.StructField("reason", T.StringType(), False),
-        T.StructField("attempts", T.IntegerType(), False),
     ]
 )

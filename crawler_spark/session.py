@@ -18,7 +18,20 @@ import os
 
 from pyspark.sql import SparkSession
 
-_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+
+def _default_driver_mem() -> str:
+    """min(8g, half of MemAvailable): the heap below is pre-touched at JVM
+    start, so a fixed 8g leaves no room for a second Spark process on a
+    15 GB box.  SPARK_GRAFT_DRIVER_MEM, when set, wins."""
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(line.split()[1]) for line in f if line.startswith("MemAvailable:"))
+    except (OSError, StopIteration, ValueError):
+        return "8g"
+    return f"{max(min(8 << 10, kib // 2 // 1024), 512)}m"
+
+
+_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
 
 _DEFAULTS = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",

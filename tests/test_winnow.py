@@ -56,7 +56,7 @@ def test_winnow_hash_kinds_same_pick_structure():
     -- but the guarantee bounds hold for both: at least one pick per
     window stride, dedup keeps consecutive repeats out."""
     t = "the quick brown fox jumps over the lazy dog"
-    for kind in ("rolling", "md5"):
+    for kind in ("rolling", "poly64"):
         picks = textops.winnow_fingerprints_py(t, 5, 4, hash_kind=kind)
         assert picks  # non-empty for len >= k
         # winnowing density bound: every window contributes; picks can't
